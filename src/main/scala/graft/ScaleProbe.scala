@@ -739,11 +739,10 @@ object ScaleProbe {
         spoolDir, repartitionTo = None)
       val sinkRoot = work.resolve("sink").toString
       val meters = graft.streaming.PipelineMeters.register(spark)
-      val saved = Seq("spark.graft.tick.watermark", "spark.graft.cumvol.tws",
+      val saved = Seq("spark.graft.tick.watermark",
         "spark.sql.streaming.stateStore.providerClass")
         .map(k => k -> spark.conf.getOption(k))
       spark.conf.set("spark.graft.tick.watermark", "1 day")
-      spark.conf.set("spark.graft.cumvol.tws", "true")
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       try {

@@ -115,12 +115,10 @@ object StreamBench {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // production state backend: RocksDB provider + the explicit graft
-      // opt-in for the transformWithState processor, so the measured
-      // path is the one a cluster runs
+      // production state backend: the tick pipeline's transformWithState
+      // operator requires the RocksDB provider
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.graft.cumvol.tws", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -585,7 +583,7 @@ object StreamBench {
       .format(classOf[graft.source.EnvelopeSourceProvider].getName)
       .option("path", spool).option("maxFilesPerTrigger", "3").load()
     // arm 1: transformWithState, state keyed by bare symbol (the
-    // session conf already selects TWS + RocksDB)
+    // session conf already selects RocksDB)
     val twsRoot = work.resolve(s"${tag}_tws").toString
     val tTws = System.nanoTime()
     val q1 = graft.streaming.Pipelines.tickPipeline(envStream()).toDF()

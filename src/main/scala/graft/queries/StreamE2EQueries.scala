@@ -573,9 +573,9 @@ object StreamE2EQueries extends QueryPack {
     *     alone to advance the one-batch-lagging filter watermark —
     *     see runLateCommon's scaladoc for why one is not enough;
     *   - incarnation 2, restarted from the checkpoint, receives ONE
-    *     straggler per purchase USER (one row per flatMapGroupsWith-
-    *     State group, so the drop count is exact under either row- or
-    *     group-granular metering), ~100 days behind the recovered
+    *     straggler per purchase USER (one row per symbol key of the
+    *     stateful operator, so the drop count is exact under either
+    *     row- or group-granular metering), ~100 days behind the recovered
     *     watermark — every one must be dropped AND metered.
     * The meter must read rows = era + corrupt + 2 + stragglers,
     * corrupt = purchase rows, dropped_late = purchase users, on_time
@@ -646,9 +646,11 @@ object StreamE2EQueries extends QueryPack {
           .option("path", spool)
           .option("maxFilesPerTrigger", "1") // advancers commit alone
           .load()
-        val qs = Pipelines.start(env, "tick", sinkRoot,
-          work.resolve("ckpt").toString)
-        try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+        withRocksDB(s) {
+          val qs = Pipelines.start(env, "tick", sinkRoot,
+            work.resolve("ckpt").toString)
+          try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+        }
         org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(s)
       }
       run() // incarnation 1: era + corrupt + both advancers
@@ -941,9 +943,11 @@ object StreamE2EQueries extends QueryPack {
       .format(classOf[graft.source.EnvelopeSourceProvider].getName)
       .option("path", spool).load()
     val sinkRoot = work.resolve("sink").toString
-    val qs = Pipelines.start(env, "tick", sinkRoot,
-      work.resolve("ckpt").toString)
-    try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    withRocksDB(s) {
+      val qs = Pipelines.start(env, "tick", sinkRoot,
+        work.resolve("ckpt").toString)
+      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    }
     LwwSink.read(s, sinkRoot, "feed", "tick")
       .select(col("symbol"), col("time").as("time_s"), col("volume"),
         col("tradeType").as("trade_type"),

@@ -54,9 +54,9 @@ import graft.sink.LwwSink
   * late-previous-day row into the CURRENT day's counters; this path
   * would start it a fresh day partition. Within a batch, order is
   * free — the salted scan sorts by (time, tiebreak) itself. For feeds
-  * without that discipline, [[CumVolStatefulProcessor]] remains the
-  * default; this is the hot-key escape hatch, same positioning as the
-  * batch `tick_cumvol_salted`.
+  * without that discipline, use [[CumVolStatefulProcessor]], the tick
+  * pipeline's operator; this is the hot-key escape hatch, same
+  * positioning as the batch `tick_cumvol_salted`.
   */
 object SaltedCumVolBatch {
 

@@ -6,12 +6,13 @@ import org.scalacheck.rng.Seed
 
 import graft.model.Schemas.Tick
 import graft.ops.{CumVol, LwwDedup}
-import graft.streaming.CumVolProcessor
+import graft.streaming.CumVolStatefulProcessor
+import graft.streaming.CumVolStatefulProcessor.NoState
 
-/** Property-based invariants (SURVEY §5.2.3). The stateful update function
-  * is pure, so most properties run without a Spark job; the
-  * streaming≡batch equivalence and LWW permutation properties execute
-  * real plans on shrunk inputs.
+/** Property-based invariants (SURVEY §5.2.3). The stateful fold
+  * ([[CumVolStatefulProcessor.fold]]) is pure, so most properties run
+  * without a Spark job; the streaming≡batch equivalence and LWW
+  * permutation properties execute real plans on shrunk inputs.
   */
 class GraftPropsSuite extends SparkSpec {
 
@@ -38,23 +39,19 @@ class GraftPropsSuite extends SparkSpec {
 
   test("property: cumdelta == cumbuy - cumsell for any input sequence") {
     forAllSeeded(ticksGen) { ticks =>
-      val state = new TestGroupState(None: Option[CumVolProcessor.CumState])
-      ticks.groupBy(_.symbol).foreach { case (sym, ts) =>
-        val st = new TestGroupState(None: Option[CumVolProcessor.CumState])
-        CumVolProcessor.update(sym, ts.iterator, st).foreach { e =>
+      ticks.groupBy(_.symbol).foreach { case (_, ts) =>
+        CumVolStatefulProcessor.fold(NoState, ts.iterator)._2.foreach { e =>
           assert(e.cumdelta === e.cumbuy - e.cumsell)
           assert(e.cumbuy >= 0 && e.cumsell >= 0)
         }
       }
-      val _ = state
     }
   }
 
   test("property: per-key outputs are running (monotone within a day)") {
     forAllSeeded(ticksGen) { ticks =>
-      ticks.groupBy(_.symbol).foreach { case (sym, ts) =>
-        val st = new TestGroupState(None: Option[CumVolProcessor.CumState])
-        val out = CumVolProcessor.update(sym, ts.iterator, st).toSeq
+      ticks.groupBy(_.symbol).foreach { case (_, ts) =>
+        val out = CumVolStatefulProcessor.fold(NoState, ts.iterator)._2
         out.groupBy(e => Math.floorDiv(e.time, 86400L)).foreach {
           case (_, dayRows) =>
             val sorted = dayRows.sortBy(_.time)
@@ -71,12 +68,11 @@ class GraftPropsSuite extends SparkSpec {
   test("property: streaming-semantics update == batch window form (sampled)") {
     forAllSeeded(ticksGen, n = 5) { ticks => if (ticks.nonEmpty) {
         // pure streaming path
-        val streamed = ticks.groupBy(_.symbol).toSeq.flatMap { case (sym, ts) =>
-          val st = new TestGroupState(None: Option[CumVolProcessor.CumState])
+        val streamed = ticks.groupBy(_.symbol).toSeq.flatMap { case (_, ts) =>
           // stable in-batch order: time then original index (matches the
           // batch window's (time, tiebreak) ordering)
           val ordered = ts.zipWithIndex.sortBy { case (t, i) => (t.time, i) }
-          CumVolProcessor.update(sym, ordered.map(_._1).iterator, st)
+          CumVolStatefulProcessor.fold(NoState, ordered.map(_._1).iterator)._2
         }.map(e => (e.symbol, e.time, e.cumbuy, e.cumsell))
           .sortBy(r => (r._1, r._2, r._3, r._4))
         // batch window path — tiebreak on a unique per-row id in input order
@@ -307,26 +303,4 @@ class GraftPropsSuite extends SparkSpec {
       assert(VideoContainer.parse(bytes.dropRight(1 + (nf % 7))) === None)
     }
   }
-}
-
-/** Minimal in-memory GroupState for exercising the pure update function
-  * without a streaming query.
-  */
-class TestGroupState[S](private var value: Option[S])
-    extends org.apache.spark.sql.streaming.GroupState[S] {
-  private var removed = false
-  override def exists: Boolean = value.isDefined && !removed
-  override def get: S = value.get
-  override def getOption: Option[S] = if (removed) None else value
-  override def update(newValue: S): Unit = { value = Some(newValue); removed = false }
-  override def remove(): Unit = { removed = true; value = None }
-  override def hasTimedOut: Boolean = false
-  override def setTimeoutDuration(durationMs: Long): Unit = ()
-  override def setTimeoutDuration(duration: String): Unit = ()
-  override def setTimeoutTimestamp(timestampMs: Long): Unit = ()
-  override def setTimeoutTimestamp(timestampMs: Long, additionalDuration: String): Unit = ()
-  override def setTimeoutTimestamp(timestamp: java.sql.Date): Unit = ()
-  override def setTimeoutTimestamp(timestamp: java.sql.Date, additionalDuration: String): Unit = ()
-  override def getCurrentWatermarkMs(): Long = 0L
-  override def getCurrentProcessingTimeMs(): Long = 0L
 }

@@ -115,40 +115,42 @@ class ModeGatingSuite extends SparkSpec {
   }
 
   test("RocksDB session runs the whole tick pipeline on transformWithState") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.graft.cumvol.tws", "true")
+    val spool = spoolWith(
+      s"""{"topic": "feed", "frameType": "TICK", "payload": {"symbol": "EURUSD", "bid": 1.0, "price": 1.1, "ask": 1.2, "time": $t0, "volume": 3, "type": "B"}}""",
+      s"""{"topic": "feed", "frameType": "TICK", "payload": {"symbol": "EURUSD", "bid": 1.0, "price": 1.2, "ask": 1.2, "time": ${t0 + 1}, "volume": 5, "type": "S"}}""")
+    val sink = Files.createTempDirectory("mode_sink7").toString
+    val ckpt = Files.createTempDirectory("mode_ckpt7").toString
+    val env = spark.readStream.format(fmt)
+      .option("path", spool.toString).load()
+    val qs = Pipelines.start(env, "tick", sink, ckpt)
     try {
-      val spool = spoolWith(
-        s"""{"topic": "feed", "frameType": "TICK", "payload": {"symbol": "EURUSD", "bid": 1.0, "price": 1.1, "ask": 1.2, "time": $t0, "volume": 3, "type": "B"}}""",
-        s"""{"topic": "feed", "frameType": "TICK", "payload": {"symbol": "EURUSD", "bid": 1.0, "price": 1.2, "ask": 1.2, "time": ${t0 + 1}, "volume": 5, "type": "S"}}""")
-      val sink = Files.createTempDirectory("mode_sink7").toString
-      val ckpt = Files.createTempDirectory("mode_ckpt7").toString
-      val env = spark.readStream.format(fmt)
-        .option("path", spool.toString).load()
-      val qs = Pipelines.start(env, "tick", sink, ckpt)
-      try {
-        qs.foreach(_.processAllAvailable())
-        // both backends produce these rows — assert the gating actually
-        // selected the TWS operator, or a dead gate stays green
-        val plans = qs.map { q =>
-          val out = new java.io.ByteArrayOutputStream()
-          Console.withOut(new java.io.PrintStream(out))(q.explain())
-          out.toString
-        }
-        assert(plans.exists(_.contains("TransformWithState")),
-          s"expected a TransformWithState operator in:\n${plans.mkString}")
-        val out = LwwSink.read(spark, sink, "feed", "tick")
-          .select("time", "cumbuy", "cumsell", "cumdelta")
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getLong(3))).sortBy(_._1)
-        assert(out === Seq((t0, 3L, 0L, 3L), (t0 + 1, 3L, 5L, -2L)),
-          "TWS-backed enrichment must produce the golden cumvol rows")
-      } finally qs.foreach(_.stop())
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.unset("spark.graft.cumvol.tws")
-    }
+      qs.foreach(_.processAllAvailable())
+      val plans = qs.map { q =>
+        val out = new java.io.ByteArrayOutputStream()
+        Console.withOut(new java.io.PrintStream(out))(q.explain())
+        out.toString
+      }
+      assert(plans.exists(_.contains("TransformWithState")),
+        s"expected a TransformWithState operator in:\n${plans.mkString}")
+      val out = LwwSink.read(spark, sink, "feed", "tick")
+        .select("time", "cumbuy", "cumsell", "cumdelta")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).sortBy(_._1)
+      assert(out === Seq((t0, 3L, 0L, 3L), (t0 + 1, 3L, 5L, -2L)),
+        "TWS-backed enrichment must produce the golden cumvol rows")
+    } finally qs.foreach(_.stop())
+  }
+
+  test("tick pipeline under a non-RocksDB state store fails at plan build") {
+    // a separate session, so the shared session's provider stays put
+    val hdfs = spark.newSession()
+    val provider =
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    hdfs.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
+    val env = hdfs.range(1)
+      .selectExpr("'feed' AS topic", "'TICK' AS frameType", "'{}' AS payload")
+    val err = intercept[IllegalArgumentException](Pipelines.tickPipeline(env))
+    assert(err.getMessage.contains(provider), err.getMessage)
   }
 
   test("observed metrics report per-batch row and corrupt counts") {

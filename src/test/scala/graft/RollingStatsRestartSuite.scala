@@ -20,14 +20,6 @@ class RollingStatsRestartSuite extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("ring state resumes across restart (file source + checkpoint)") {
-    // transformWithState requires a multi-column-family store (RocksDB)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try restartRun()
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  private def restartRun(): Unit = {
     val in = Files.createTempDirectory("roll_in")
     val out = Files.createTempDirectory("roll_out").toString
     val ckpt = Files.createTempDirectory("roll_ckpt").toString

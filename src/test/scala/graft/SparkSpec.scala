@@ -7,6 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for operator suites. One session per JVM
   * (`getOrCreate` + no stop in afterAll) — suites run sequentially in the
   * forked test JVM and session re-creation per suite costs ~4s each.
+  * The state store is RocksDB for every suite: the tick pipeline's
+  * transformWithState operator requires it, so no suite sets (or
+  * unsets) the provider itself.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -17,6 +20,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .getOrCreate()
 
   override protected def afterAll(): Unit = {

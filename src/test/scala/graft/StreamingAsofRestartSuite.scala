@@ -34,11 +34,6 @@ class StreamingAsofRestartSuite extends SparkSpec {
     val sink = Files.createTempDirectory("asof_sink").toString
     val ckpt = Files.createTempDirectory("asof_ckpt").toString
 
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
     def run(): Unit = {
       val env = spark.readStream.format(fmt)
         .option("path", spool.toString).load()
@@ -61,33 +56,28 @@ class StreamingAsofRestartSuite extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
     }
 
-    try {
-      // incarnation 1: a quote, then a trade it enriches
-      write(spool, "000.jsonl",
-        line(t0, 10.5, "Q"), line(t0 + 5, 42.0, "B"))
-      run()
+    // incarnation 1: a quote, then a trade it enriches
+    write(spool, "000.jsonl",
+      line(t0, 10.5, "Q"), line(t0 + 5, 42.0, "B"))
+    run()
 
-      // incarnation 2: a trade BEFORE any new quote (must see the
-      // restored 10.5 quote), then a fresh quote, then a trade that
-      // must see the REPLACEMENT, not the restored state
-      write(spool, "001.jsonl",
-        line(t0 + 20, 43.0, "S"), line(t0 + 30, 11.25, "Q"),
-        line(t0 + 40, 44.0, "B"))
-      run()
+    // incarnation 2: a trade BEFORE any new quote (must see the
+    // restored 10.5 quote), then a fresh quote, then a trade that
+    // must see the REPLACEMENT, not the restored state
+    write(spool, "001.jsonl",
+      line(t0 + 20, 43.0, "S"), line(t0 + 30, 11.25, "Q"),
+      line(t0 + 40, 44.0, "B"))
+    run()
 
-      val rows = LwwSink.read(spark, sink, "feed", "asof")
-        .select("symbol", "time", "price", "tradeType", "quoteTime",
-          "quotePrice").collect()
-        .map(r => (r.getLong(1), r.getDouble(2), r.getString(3),
-          r.getLong(4), r.getDouble(5))).toSet
-      assert(rows === Set(
-        (t0 + 5, 42.0, "B", t0, 10.5),
-        (t0 + 20, 43.0, "S", t0, 10.5), // restored state, not re-derived
-        (t0 + 40, 44.0, "B", t0 + 30, 11.25)), // replacement quote wins
-        s"unexpected enriched set: $rows")
-    } finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+    val rows = LwwSink.read(spark, sink, "feed", "asof")
+      .select("symbol", "time", "price", "tradeType", "quoteTime",
+        "quotePrice").collect()
+      .map(r => (r.getLong(1), r.getDouble(2), r.getString(3),
+        r.getLong(4), r.getDouble(5))).toSet
+    assert(rows === Set(
+      (t0 + 5, 42.0, "B", t0, 10.5),
+      (t0 + 20, 43.0, "S", t0, 10.5), // restored state, not re-derived
+      (t0 + 40, 44.0, "B", t0 + 30, 11.25)), // replacement quote wins
+      s"unexpected enriched set: $rows")
   }
 }

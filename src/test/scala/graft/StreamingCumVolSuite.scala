@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
-import graft.streaming.{CumVolProcessor, Pipelines}
+import graft.streaming.{CumVolStatefulProcessor, Pipelines}
 
 /** Streaming semantics of the tick pipeline: state continuity across
   * micro-batches, per-symbol daily reset, dead-letter routing, and the
@@ -105,8 +105,8 @@ class StreamingCumVolSuite extends SparkSpec {
         t0 + i * 700, // crosses several UTC day boundaries in order
         rng.nextInt(50), Seq("B", "S", "X")(rng.nextInt(3)))
     }
-    // streaming-semantics path (flatMapGroupsWithState on a batch Dataset)
-    val streamed = CumVolProcessor.enrich(ticks.toDS())
+    // streaming-semantics path (transformWithState on a batch Dataset)
+    val streamed = CumVolStatefulProcessor.enrich(ticks.toDS())
       .select("symbol", "time", "cumbuy", "cumsell", "cumdelta")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).sortBy(r => (r._1, r._2)).toSeq

@@ -24,7 +24,6 @@ class StreamingNearDupRestartSuite extends SparkSpec {
   import spark.implicits._
 
   private val fmt = classOf[EnvelopeSourceProvider].getName
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
 
   private def docLine(id: Long, text: String) =
     s"""{"topic": "docs", "frameType": "DOC", "payload": {"doc_id": $id, "text": "$text"}}"""
@@ -38,10 +37,6 @@ class StreamingNearDupRestartSuite extends SparkSpec {
     val sink = Files.createTempDirectory("nd_sink").toString
     val ckpt = Files.createTempDirectory("nd_ckpt").toString
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     def run(): Unit = {
       val env = spark.readStream.format(fmt)
@@ -63,18 +58,13 @@ class StreamingNearDupRestartSuite extends SparkSpec {
     }
 
     val dup = "alpha beta gamma delta epsilon zeta"
-    try {
-      write(spool, "000.jsonl",
-        docLine(1L, dup),
-        docLine(3L, "totally unrelated corpus text about query planning"))
-      run()
+    write(spool, "000.jsonl",
+      docLine(1L, dup),
+      docLine(3L, "totally unrelated corpus text about query planning"))
+    run()
 
-      write(spool, "001.jsonl", docLine(2L, dup)) // pairs with doc 1
-      run()
-    } finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+    write(spool, "001.jsonl", docLine(2L, dup)) // pairs with doc 1
+    run()
 
     import scala.jdk.CollectionConverters._
     val pairs = emitted.asScala.toSeq

@@ -34,11 +34,6 @@ class StreamingTopKRestartSuite extends SparkSpec {
     val sink = Files.createTempDirectory("topk_sink").toString
     val ckpt = Files.createTempDirectory("topk_ckpt").toString
 
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val savedProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
     def run(): Unit = {
       import spark.implicits._
       val env = spark.readStream.format(fmt)
@@ -70,15 +65,10 @@ class StreamingTopKRestartSuite extends SparkSpec {
     write(spool, "001.jsonl", tickLine(t0 + 10, 5.0))
     run()
 
-    try {
-      val rows = LwwSink.read(spark, sink, "feed", "topk")
-        .select("rank", "price", "time").collect()
-        .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2))).toSet
-      assert(rows === Set((1, 9.0, t0), (2, 7.0, t0 + 1), (3, 5.0, t0 + 10)),
-        s"restored state must carry incarnation one's highs: $rows")
-    } finally savedProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+    val rows = LwwSink.read(spark, sink, "feed", "topk")
+      .select("rank", "price", "time").collect()
+      .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2))).toSet
+    assert(rows === Set((1, 9.0, t0), (2, 7.0, t0 + 1), (3, 5.0, t0 + 10)),
+      s"restored state must carry incarnation one's highs: $rows")
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.CumVolProcessor
+import graft.streaming.CumVolStatefulProcessor
 
 /** Event-time state TTL: per-symbol session state is removed once the
   * watermark passes its day, so a very-late tick re-seeds from zero
@@ -18,13 +18,13 @@ class WatermarkExpirySuite extends SparkSpec {
   private def tick(sym: String, time: Long, vol: Int, typ: String) =
     (sym, 1.0, 1.1, 1.2, time, vol, typ)
 
-  test("state expires after the watermark passes the session day; late rows drop") {
+  test("TWS/RocksDB path: event-time timer clears state past the session day") {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(String, Double, Double, Double, Long, Int, String)]
     val ticks = input.toDF()
       .toDF("symbol", "bid", "price", "ask", "time", "volume", "tradeType")
-    val q = CumVolProcessor.enrichWithWatermark(ticks, "1 hour")
-      .writeStream.format("memory").queryName("wm_out")
+    val q = CumVolStatefulProcessor.enrichWithWatermark(ticks, "1 hour")
+      .writeStream.format("memory").queryName("wm_tws_out")
       .outputMode("append").start()
     def stateRows: Long = q.recentProgress.reverse
       .find(_.stateOperators.nonEmpty)
@@ -33,18 +33,16 @@ class WatermarkExpirySuite extends SparkSpec {
       input.addData(tick("A", t0, 10, "B"))
       q.processAllAvailable()
       assert(stateRows === 1L) // A live
-      // advance the watermark two days past A's session day via symbol B;
-      // processAllAvailable includes the follow-up batch Spark triggers
-      // when the watermark moves, which fires A's event-time timeout
+      // advance the watermark two days past A's session day via B;
+      // the follow-up batch fires A's event-time timer
       input.addData(tick("B", t0 + 2 * 86400, 1, "B"))
       q.processAllAvailable()
       assert(stateRows === 1L,
         "A's session day is past the watermark; its state must be removed")
-      // very late tick for A, below the watermark: filtered before the
-      // stateful operator — it can no longer pollute any counters
+      // very late tick for A, below the watermark: dropped pre-operator
       input.addData(tick("A", t0 + 1, 7, "B"))
       q.processAllAvailable()
-      val aRows = spark.table("wm_out")
+      val aRows = spark.table("wm_tws_out")
         .filter(col("symbol") === "A")
         .select("time", "cumbuy")
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
@@ -53,53 +51,13 @@ class WatermarkExpirySuite extends SparkSpec {
     } finally q.stop()
   }
 
-  test("TWS/RocksDB path: event-time timer clears state past the session day") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val input = MemoryStream[(String, Double, Double, Double, Long, Int, String)]
-      val ticks = input.toDF()
-        .toDF("symbol", "bid", "price", "ask", "time", "volume", "tradeType")
-      val q = graft.streaming.CumVolStatefulProcessor
-        .enrichWithWatermark(ticks, "1 hour")
-        .writeStream.format("memory").queryName("wm_tws_out")
-        .outputMode("append").start()
-      def stateRows: Long = q.recentProgress.reverse
-        .find(_.stateOperators.nonEmpty)
-        .map(_.stateOperators(0).numRowsTotal).getOrElse(-1L)
-      try {
-        input.addData(tick("A", t0, 10, "B"))
-        q.processAllAvailable()
-        assert(stateRows === 1L) // A live
-        // advance the watermark two days past A's session day via B;
-        // the follow-up batch fires A's event-time timer
-        input.addData(tick("B", t0 + 2 * 86400, 1, "B"))
-        q.processAllAvailable()
-        assert(stateRows === 1L,
-          "A's session day is past the watermark; its state must be removed")
-        // very late tick for A, below the watermark: dropped pre-operator
-        input.addData(tick("A", t0 + 1, 7, "B"))
-        q.processAllAvailable()
-        val aRows = spark.table("wm_tws_out")
-          .filter(col("symbol") === "A")
-          .select("time", "cumbuy")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        assert(aRows === Seq((t0, 10L)), "late row must be dropped, not applied")
-        assert(stateRows === 1L, "dropped late row must not re-create state")
-      } finally q.stop()
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   test("without expiry, state would have accumulated (control)") {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(String, Double, Double, Double, Long, Int, String)]
     val ticks = input.toDF()
       .toDF("symbol", "bid", "price", "ask", "time", "volume", "tradeType")
     import graft.model.Schemas
-    val q = CumVolProcessor.enrich(
-        ticks.as[Schemas.Tick])
+    val q = CumVolStatefulProcessor.enrich(ticks.as[Schemas.Tick])
       .writeStream.format("memory").queryName("wm_ctrl")
       .outputMode("append").start()
     try {
