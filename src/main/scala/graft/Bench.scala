@@ -507,27 +507,7 @@ object Bench {
       require(names.distinct.size == names.size,
         "SPARK_GRAFT_ONLY: duplicate names would emit duplicate JSON keys")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts has shipped as TIMESTAMP(NANOS) and TIMESTAMP_NTZ
-      // across fixture regens; this flag serves the NANOS case and
-      // Tables.normalizeTs handles every known encoding.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // parallelismFirst stays at Spark's DEFAULT (true). The closeout
-      // flipped it to false on a "measured neutral" claim; re-measured
-      // on window-heavy small-key queries it is NOT neutral — with
-      // false, AQE coalesces a 3-group window shuffle to ONE partition
-      // and serializes the per-group sorts (agg_winsorized_stats
-      // 2.89 s vs 1.65 s at sf0.1, A/B-tested; scan-shaped queries
-      // unchanged). At real scale partitions exceed the advisory size
-      // either way, so the default costs nothing there. The round-5
-      // profile attribution stands: the per-query floor is EXECUTION
-      // (run2 0.10–0.26 s), not analysis (0.02–0.08 s).
-      .getOrCreate()
+    val spark = GraftSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(spark) // native fns + optimizer rewrites
     // Warm the JVM (codegen, parquet reader, shuffle paths) so per-query

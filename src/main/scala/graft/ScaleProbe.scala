@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{ConnectedComponents, CumVol, MinHashLSH, VectorOps}
@@ -20,14 +20,7 @@ import graft.ops.{ConnectedComponents, CumVol, MinHashLSH, VectorOps}
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -739,12 +732,8 @@ object ScaleProbe {
         spoolDir, repartitionTo = None)
       val sinkRoot = work.resolve("sink").toString
       val meters = graft.streaming.PipelineMeters.register(spark)
-      val saved = Seq("spark.graft.tick.watermark",
-        "spark.sql.streaming.stateStore.providerClass")
-        .map(k => k -> spark.conf.getOption(k))
+      val savedWm = spark.conf.getOption("spark.graft.tick.watermark")
       spark.conf.set("spark.graft.tick.watermark", "1 day")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       try {
         val env = spark.readStream
           .format(classOf[graft.source.EnvelopeSourceProvider].getName)
@@ -755,9 +744,9 @@ object ScaleProbe {
         org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
         meters(s"graft_tick:$sinkRoot").onTime
       } finally {
-        saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
+        savedWm match {
+          case Some(v) => spark.conf.set("spark.graft.tick.watermark", v)
+          case None => spark.conf.unset("spark.graft.tick.watermark")
         }
         spark.streams.removeListener(meters)
       }

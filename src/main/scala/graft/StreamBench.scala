@@ -109,17 +109,7 @@ object StreamBench {
     }
     def enabled(a: String): Boolean = armsFilter.forall(_(a))
     val fullRun = armsFilter.isEmpty
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // production state backend: the tick pipeline's transformWithState
-      // operator requires the RocksDB provider
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
+    val spark = GraftSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // Deterministic tick envelopes: 100 symbols, increasing times, B/S

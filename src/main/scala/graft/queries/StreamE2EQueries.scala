@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.{QueryPack, Tables}
 import graft.ops.LwwDedup
@@ -76,22 +77,52 @@ object StreamE2EQueries extends QueryPack {
       Seq(col("user_id"), col("time_s")),
       Seq(col("event_id")))
 
-  /** Run `body` with the RocksDB state-store provider set, restoring
-    * the previous conf after — transformWithState requires RocksDB, and
-    * scoping the set keeps the session default for every other runner
-    * (review finding: this save/set/restore scaffolding was copy-pasted
-    * at four runner sites).
+  /** One runner's spool: a fresh work dir (deleted at exit) holding the
+    * envelope files under `spool`, the sink under `sinkRoot` and the
+    * checkpoint under `ckpt`; `env` is the envelope stream over the
+    * spool. The source lists the spool per trigger, not at load, so a
+    * runner may still append sentinel files before it starts a query.
     */
-  private def withRocksDB[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+  private final case class Spooled(work: Path, spool: String, env: DataFrame) {
+    def sinkRoot: String = work.resolve("sink").toString
+    def ckpt: String = work.resolve("ckpt").toString
+  }
+
+  /** The runners' shared prelude: temp work dir, [[graft.source
+    * .SpoolWriter]] write of `lines` (`repartitionTo` as the writer's),
+    * and the envelope `readStream`, paced by `maxFilesPerTrigger` when
+    * given.
+    */
+  private def spooled(s: SparkSession, lines: DataFrame, prefix: String,
+      repartitionTo: Option[Int] = Some(4),
+      maxFilesPerTrigger: Option[Int] = None): Spooled = {
+    val work = Files.createTempDirectory(prefix)
+    graft.source.SpoolWriter.deleteAtExit(work)
+    val spool = graft.source.SpoolWriter.write(lines, work, repartitionTo)
+    val reader = s.readStream
+      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
+      .option("path", spool)
+    Spooled(work, spool, maxFilesPerTrigger
+      .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
+      .load())
+  }
+
+  /** The runners' shared drain: stream `df` in `mode` into the LWW sink
+    * (`perBatch` of each micro-batch upserted into `topic`/`table`
+    * keyed by `pk`, checkpointed at `sp.ckpt`) until the spool is
+    * consumed. Returns the stopped query; its progress stays readable.
+    */
+  private def drain(df: DataFrame, mode: String, sp: Spooled,
+      topic: String, table: String, pk: Seq[String],
+      perBatch: DataFrame => DataFrame = identity): StreamingQuery = {
+    val q = df.writeStream.outputMode(mode)
+      .option("checkpointLocation", sp.ckpt)
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        LwwSink.upsertBatch(perBatch(batch.toDF()), id, sp.sinkRoot,
+          topic, table, pk)
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    q
   }
 
   /** Name for a spool file appended AFTER the SpoolWriter-written data
@@ -134,32 +165,18 @@ object StreamE2EQueries extends QueryPack {
     */
   private def runEnrich(s: SparkSession, dir: String): DataFrame = {
     val base = dedupedTicks(s, dir)
-    val lines = tickLines(base, col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_enr")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work)
+    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+      "graft_e2e_enr", maxFilesPerTrigger = Some(2))
     val dim = Tables(s, dir, "customer")
       .select(col("c_custkey").cast("string").as("symbol"),
         col("c_nationkey").as("nation"),
         floor(col("c_acctbal") * 100).cast("long").as("bal_cents"))
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "2")
-      .load()
-    val enriched = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+    val enriched = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .join(broadcast(dim), Seq("symbol"))
       .select(col("symbol"), col("time"), col("price"),
         col("tradeType"), col("nation"), col("bal_cents"))
-    val sinkRoot = work.resolve("sink").toString
-    val q = enriched.writeStream.outputMode("append")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "enr",
-          Seq("symbol", "time"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sinkRoot, "feed", "enr")
+    drain(enriched, "append", sp, "feed", "enr", Seq("symbol", "time"))
+    LwwSink.read(s, sp.sinkRoot, "feed", "enr")
       .select(col("symbol"), col("time").as("time_s"), col("price"),
         col("tradeType").as("trade_type"), col("nation"), col("bal_cents"))
   }
@@ -205,35 +222,19 @@ object StreamE2EQueries extends QueryPack {
       Seq(col("event_id")))
       .repartition(4, col("user_id"))
       .sortWithinPartitions(col("time_s"))
-    val lines = tickLines(base, col("value"), stdVolume,
-      col("event_type"))
-    val work = Files.createTempDirectory("graft_e2e_funnel")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work,
+    val sp = spooled(s, tickLines(base, col("value"), stdVolume,
+      col("event_type")), "graft_e2e_funnel",
       repartitionTo = None) // preserve per-user file locality
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool).load()
-    val sinkRoot = work.resolve("sink").toString
-    withRocksDB(s) {
-      val ticks = Pipelines.parseTicks(env).filter(!col("_corrupt"))
-        .select(col("symbol"), col("bid"), col("price"), col("ask"),
-          col("time"), col("volume"), col("tradeType"))
-        .as[graft.model.Schemas.Tick]
-      // the batch family's deadline, not a copy (review finding: a
-      // FunnelW retune must move the streaming row with it)
-      val q = graft.streaming.FunnelProcessor
-        .stages(ticks, TemporalQueries.FunnelW)
-        .toDF()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed",
-            "funnel", Seq("symbol"))
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    LwwSink.read(s, sinkRoot, "feed", "funnel")
+    val ticks = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
+      .select(col("symbol"), col("bid"), col("price"), col("ask"),
+        col("time"), col("volume"), col("tradeType"))
+      .as[graft.model.Schemas.Tick]
+    // the batch family's deadline, not a copy (review finding: a
+    // FunnelW retune must move the streaming row with it)
+    drain(graft.streaming.FunnelProcessor
+      .stages(ticks, TemporalQueries.FunnelW).toDF(),
+      "append", sp, "feed", "funnel", Seq("symbol"))
+    LwwSink.read(s, sp.sinkRoot, "feed", "funnel")
       .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
   }
 
@@ -256,36 +257,20 @@ object StreamE2EQueries extends QueryPack {
     val base = trades.unionByName(quotes)
       .repartition(4, col("user_id"))
       .sortWithinPartitions(col("time_s"), col("kind"))
-    val lines = tickLines(base, col("price"),
-      floor(col("price")).cast("int"), col("typ"))
-    val work = Files.createTempDirectory("graft_e2e_asof")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work,
+    val sp = spooled(s, tickLines(base, col("price"),
+      floor(col("price")).cast("int"), col("typ")), "graft_e2e_asof",
       repartitionTo = None) // preserve per-symbol file locality
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool).load()
-    val sinkRoot = work.resolve("sink").toString
-    withRocksDB(s) {
-      val evs = Pipelines.parseTicks(env).filter(!col("_corrupt"))
-        .select(col("symbol"), col("time"),
-          when(col("tradeType") === "Q", 0).otherwise(1).as("kind"),
-          col("price"), col("tradeType"))
-        .as[graft.streaming.AsofEnrichProcessor.MarketEv]
-      val q = evs.groupByKey(_.symbol)
-        .transformWithState(new graft.streaming.AsofEnrichProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .toDF()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "asof",
-            Seq("symbol", "time"))
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    LwwSink.read(s, sinkRoot, "feed", "asof")
+    val evs = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
+      .select(col("symbol"), col("time"),
+        when(col("tradeType") === "Q", 0).otherwise(1).as("kind"),
+        col("price"), col("tradeType"))
+      .as[graft.streaming.AsofEnrichProcessor.MarketEv]
+    drain(evs.groupByKey(_.symbol)
+      .transformWithState(new graft.streaming.AsofEnrichProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Append())
+      .toDF(), "append", sp, "feed", "asof", Seq("symbol", "time"))
+    LwwSink.read(s, sp.sinkRoot, "feed", "asof")
       .select(col("symbol"), col("time").as("time_s"), col("price"),
         col("tradeType").as("trade_type"),
         col("quoteTime").as("quote_time"),
@@ -327,22 +312,14 @@ object StreamE2EQueries extends QueryPack {
         lit("Q").as("typ"))
     val base = trades.unionByName(quotes)
       .repartitionByRange(4, col("time_s"))
-    val lines = tickLines(base, col("price"),
-      floor(col("price")).cast("int"), col("typ"))
-    val work = Files.createTempDirectory("graft_e2e_asofs")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work,
-      repartitionTo = None) // preserve the time-ranged file layout
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "2") // carry table does real work
-      .load()
-    val sinkRoot = work.resolve("sink").toString
-    val q = graft.streaming.SaltedAsofBatch.start(env, sinkRoot,
-      work.resolve("ckpt").toString, work.resolve("state").toString)
+    val sp = spooled(s, tickLines(base, col("price"),
+      floor(col("price")).cast("int"), col("typ")), "graft_e2e_asofs",
+      repartitionTo = None, // preserve the time-ranged file layout
+      maxFilesPerTrigger = Some(2)) // carry table does real work
+    val q = graft.streaming.SaltedAsofBatch.start(sp.env, sp.sinkRoot,
+      sp.ckpt, sp.work.resolve("state").toString)
     try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sinkRoot, "feed", "asof_salted")
+    LwwSink.read(s, sp.sinkRoot, "feed", "asof_salted")
       .select(col("symbol"), col("time").as("time_s"), col("price"),
         col("tradeType").as("trade_type"),
         col("quoteTime").as("quote_time"),
@@ -474,14 +451,13 @@ object StreamE2EQueries extends QueryPack {
     val base = dedupedTicks(s, dir).localCheckpoint()
     // bounded file count at any SF (4 range files, sorted within):
     // per-batch overhead is ~constant, so era batches stay O(1)
-    val lines = tickLines(
+    val sp = spooled(s, tickLines(
       base.repartitionByRange(4, col("time_s"), col("user_id"))
         .sortWithinPartitions("time_s", "user_id"),
-      col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_late")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work,
-      repartitionTo = None)
+      col("value"), stdVolume, stdType), "graft_e2e_late",
+      repartitionTo = None,
+      maxFilesPerTrigger = Some(1)) // load-bearing, see scaladoc
+    val spool = sp.spool
     val maxSec = base.agg(max(col("time_s"))).head().getLong(0)
     val nFiles = graft.util.Fs.list(Paths.get(spool))
       .count(_.getFileName.toString.endsWith(".jsonl"))
@@ -514,19 +490,13 @@ object StreamE2EQueries extends QueryPack {
         .agg(max(col("time_s")).as("time_s"), max(col("value")).as("value")),
       col("value"), (floor(col("value")) * 10 + 7).cast("int"), lit("B"))
     val lateSpool = graft.source.SpoolWriter.write(lateLines,
-      work.resolve("late"), repartitionTo = Some(1))
+      sp.work.resolve("late"), repartitionTo = Some(1))
     graft.util.Fs.list(Paths.get(lateSpool))
       .filter(_.getFileName.toString.endsWith(".jsonl"))
       .sortBy(_.getFileName.toString).zipWithIndex.foreach { case (p, i) =>
         Files.move(p, Paths.get(spool).resolve(postFile(nFiles + 2 + i)))
       }
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      // load-bearing: one file per micro-batch, see scaladoc
-      .option("maxFilesPerTrigger", "1")
-      .load()
-    val agg = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+    val agg = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .withColumn("ts", timestamp_seconds(col("time")))
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "30 minutes").as("w"), col("symbol"))
@@ -534,20 +504,13 @@ object StreamE2EQueries extends QueryPack {
         sum(col("volume").cast("long")).as("sum_vol"))
       .select(col("symbol"), col("w.start").as("w_start"),
         col("n_ticks"), col("sum_vol"))
-    val sinkRoot = work.resolve("sink").toString
-    val q = agg.writeStream.outputMode("append")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(
-          batch.filter(col("symbol") =!= "ZZZ").toDF(),
-          id, sinkRoot, "feed", "late", Seq("symbol", "w_start"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
+    val q = drain(agg, "append", sp, "feed", "late",
+      Seq("symbol", "w_start"), _.filter(col("symbol") =!= "ZZZ"))
     // the engine's own late-row meter, summed across every micro-batch
     // of the run (well under the 100-progress retention default)
     val dropped = q.recentProgress
       .map(p => p.stateOperators.map(_.numRowsDroppedByWatermark).sum).sum
-    (LwwSink.read(s, sinkRoot, "feed", "late")
+    (LwwSink.read(s, sp.sinkRoot, "feed", "late")
       .select(col("symbol"), col("w_start"), col("n_ticks"),
         col("sum_vol")), dropped)
   }
@@ -588,19 +551,19 @@ object StreamE2EQueries extends QueryPack {
     // pinned: four jobs consume it (era spool, corrupt spool,
     // max-second probe, straggler spool)
     val base = dedupedTicks(s, dir).localCheckpoint()
-    val work = Files.createTempDirectory("graft_e2e_meters")
-    graft.source.SpoolWriter.deleteAtExit(work)
     // era files RANGE-partitioned on time and consumed in file-name
     // (= time) order: with one file per trigger the watermark advances
     // monotonically and drops NO era row. A round-robin split makes
     // every file span the whole era, so batch 1 advances the watermark
     // past most of batches 2-4 (measured: 1935 era rows metered as
     // dropped) — the same construction rule runLateCommon documents.
-    val spool = graft.source.SpoolWriter.write(
+    val sp = spooled(s,
       tickLines(base.repartitionByRange(4, col("time_s"), col("user_id"))
         .sortWithinPartitions("time_s", "user_id"),
-        col("value"), stdVolume, stdType), work,
-      repartitionTo = None)
+        col("value"), stdVolume, stdType), "graft_e2e_meters",
+      repartitionTo = None,
+      maxFilesPerTrigger = Some(1)) // advancers commit alone
+    val spool = sp.spool
     val maxSec = base.agg(max(col("time_s"))).head().getLong(0)
     val nFiles = graft.util.Fs.list(Paths.get(spool))
       .count(_.getFileName.toString.endsWith(".jsonl"))
@@ -618,7 +581,7 @@ object StreamE2EQueries extends QueryPack {
     var next = moveIn(graft.source.SpoolWriter.write(
       tickLines(base.filter(col("event_type") === "purchase"),
         col("value"), lit(null).cast("int"), stdType),
-      work.resolve("corrupt"), repartitionTo = Some(1)), nFiles)
+      sp.work.resolve("corrupt"), repartitionTo = Some(1)), nFiles)
     def advancer(t: Long) =
       s"""{"topic":"feed","frameType":"TICK","payload":""" +
         s"""{"symbol":"ZZZ","bid":1.0,"price":1.0,"ask":1.0,""" +
@@ -634,29 +597,20 @@ object StreamE2EQueries extends QueryPack {
         .groupBy(col("user_id"))
         .agg(max(col("time_s")).as("time_s"), max(col("value")).as("value")),
         col("value"), (floor(col("value")) * 10 + 7).cast("int"), lit("B")),
-      work.resolve("late"), repartitionTo = Some(1))
-    val sinkRoot = work.resolve("sink").toString
+      sp.work.resolve("late"), repartitionTo = Some(1))
     val meters = graft.streaming.PipelineMeters.register(s)
     val savedWm = s.conf.getOption("spark.graft.tick.watermark")
     s.conf.set("spark.graft.tick.watermark", "1 day")
     try {
       def run(): Unit = {
-        val env = s.readStream
-          .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-          .option("path", spool)
-          .option("maxFilesPerTrigger", "1") // advancers commit alone
-          .load()
-        withRocksDB(s) {
-          val qs = Pipelines.start(env, "tick", sinkRoot,
-            work.resolve("ckpt").toString)
-          try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
-        }
+        val qs = Pipelines.start(sp.env, "tick", sp.sinkRoot, sp.ckpt)
+        try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
         org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(s)
       }
       run() // incarnation 1: era + corrupt + both advancers
       moveIn(lateSpool, next)
       run() // incarnation 2: stragglers only, from the checkpoint
-      val m = meters(s"graft_tick:$sinkRoot")
+      val m = meters(s"graft_tick:${sp.sinkRoot}")
       Seq((m.rows, m.corrupt, m.droppedLate, m.onTime))
         .toDF("n_rows", "n_corrupt", "n_dropped_late", "n_on_time")
     } finally {
@@ -670,26 +624,19 @@ object StreamE2EQueries extends QueryPack {
 
   private def runTumbling(s: SparkSession, dir: String): DataFrame = {
     val base = dedupedTicks(s, dir)
-    val lines = tickLines(base.orderBy(col("time_s"), col("user_id")),
-      col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_tum")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work,
-      repartitionTo = None)
+    val sp = spooled(s, tickLines(base.orderBy(col("time_s"), col("user_id")),
+      col("value"), stdVolume, stdType), "graft_e2e_tum",
+      repartitionTo = None,
+      maxFilesPerTrigger = Some(4)) // state lives across batches
     val maxSec = base.agg(max(col("time_s"))).head().getLong(0)
     val sentinel = s"""{"topic":"feed","frameType":"TICK","payload":""" +
       s"""{"symbol":"ZZZ","bid":1.0,"price":1.0,"ask":1.0,""" +
       s""""time":${maxSec + 2 * 86400},"volume":1,"type":"B"}}"""
-    val nFiles = graft.util.Fs.list(Paths.get(spool))
+    val nFiles = graft.util.Fs.list(Paths.get(sp.spool))
       .count(_.getFileName.toString.endsWith(".jsonl"))
-    Files.writeString(Paths.get(spool).resolve(postFile(nFiles)),
+    Files.writeString(Paths.get(sp.spool).resolve(postFile(nFiles)),
       sentinel + "\n")
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "4") // state lives across batches
-      .load()
-    val agg = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+    val agg = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .withColumn("ts", timestamp_seconds(col("time")))
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("symbol"))
@@ -697,16 +644,9 @@ object StreamE2EQueries extends QueryPack {
         sum(col("volume").cast("long")).as("sum_vol"))
       .select(col("symbol"), col("w.start").as("h_start"),
         col("n_ticks"), col("sum_vol"))
-    val sinkRoot = work.resolve("sink").toString
-    val q = agg.writeStream.outputMode("append")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(
-          batch.filter(col("symbol") =!= "ZZZ").toDF(),
-          id, sinkRoot, "feed", "tum", Seq("symbol", "h_start"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sinkRoot, "feed", "tum")
+    drain(agg, "append", sp, "feed", "tum", Seq("symbol", "h_start"),
+      _.filter(col("symbol") =!= "ZZZ"))
+    LwwSink.read(s, sp.sinkRoot, "feed", "tum")
       .select(col("symbol"), col("h_start"), col("n_ticks"),
         col("sum_vol"))
   }
@@ -725,34 +665,18 @@ object StreamE2EQueries extends QueryPack {
   private def runTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val base = dedupedTicks(s, dir)
-    val lines = tickLines(base, col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_topk")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work)
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "2") // several update emissions
-      .load()
-    val sinkRoot = work.resolve("sink").toString
-    withRocksDB(s) {
-      val ticks = Pipelines.parseTicks(env).filter(!col("_corrupt"))
-        .select(col("symbol"), col("time"), col("price"))
-        .as[graft.streaming.TopKProcessor.TickIn]
-      val q = ticks.groupByKey(_.symbol)
-        .transformWithState(new graft.streaming.TopKProcessor(5),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .toDF()
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "topk",
-            Seq("symbol", "rank"))
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    LwwSink.read(s, sinkRoot, "feed", "topk")
+    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+      "graft_e2e_topk",
+      maxFilesPerTrigger = Some(2)) // several update emissions
+    val ticks = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
+      .select(col("symbol"), col("time"), col("price"))
+      .as[graft.streaming.TopKProcessor.TickIn]
+    drain(ticks.groupByKey(_.symbol)
+      .transformWithState(new graft.streaming.TopKProcessor(5),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+      .toDF(), "update", sp, "feed", "topk", Seq("symbol", "rank"))
+    LwwSink.read(s, sp.sinkRoot, "feed", "topk")
       .select(col("symbol"), col("rank"), col("price"),
         col("time").as("time_s"))
   }
@@ -770,32 +694,18 @@ object StreamE2EQueries extends QueryPack {
     * spool needs no dedup and no time sorting.
     */
   private def runCounts(s: SparkSession, dir: String): DataFrame = {
-    val lines = tickLines(
+    val sp = spooled(s, tickLines(
       Tables(s, dir, "events")
         .filter(col("event_type").isin("purchase", "click"))
         .withColumn("time_s", expr("unix_micros(ts) div 1000000")),
-      col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_cnt")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work)
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "2") // several update emissions
-      .load()
-    val agg = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+      col("value"), stdVolume, stdType), "graft_e2e_cnt",
+      maxFilesPerTrigger = Some(2)) // several update emissions
+    val agg = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .groupBy(col("tradeType").as("trade_type"))
       .agg(count(lit(1)).as("n_ticks"),
         sum(col("volume").cast("long")).as("sum_vol"))
-    val sinkRoot = work.resolve("sink").toString
-    val q = agg.writeStream.outputMode("update")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "cnt",
-          Seq("trade_type"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sinkRoot, "feed", "cnt")
+    drain(agg, "update", sp, "feed", "cnt", Seq("trade_type"))
+    LwwSink.read(s, sp.sinkRoot, "feed", "cnt")
       .select(col("trade_type"), col("n_ticks"), col("sum_vol"))
   }
 
@@ -819,11 +729,8 @@ object StreamE2EQueries extends QueryPack {
     */
   private def runSession(s: SparkSession, dir: String): DataFrame = {
     val base = dedupedTicks(s, dir)
-    val lines = tickLines(base.orderBy(col("time_s"), col("user_id")),
-      col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_sess")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work,
+    val sp = spooled(s, tickLines(base.orderBy(col("time_s"), col("user_id")),
+      col("value"), stdVolume, stdType), "graft_e2e_sess",
       repartitionTo = None)
     // sentinel: one envelope 2 days past the data maximum, in a file
     // that sorts AFTER every writer-produced one
@@ -831,14 +738,11 @@ object StreamE2EQueries extends QueryPack {
     val sentinel = s"""{"topic":"feed","frameType":"TICK","payload":""" +
       s"""{"symbol":"ZZZ","bid":1.0,"price":1.0,"ask":1.0,""" +
       s""""time":${maxSec + 2 * 86400},"volume":1,"type":"B"}}"""
-    val nFiles = graft.util.Fs.list(Paths.get(spool))
+    val nFiles = graft.util.Fs.list(Paths.get(sp.spool))
       .count(_.getFileName.toString.endsWith(".jsonl"))
-    Files.writeString(Paths.get(spool).resolve(postFile(nFiles)),
+    Files.writeString(Paths.get(sp.spool).resolve(postFile(nFiles)),
       sentinel + "\n")
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool).load()
-    val sess = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+    val sess = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .withColumn("ts", timestamp_seconds(col("time")))
       .withWatermark("ts", "1 day")
       .groupBy(session_window(col("ts"), "30 minutes").as("w"),
@@ -846,16 +750,9 @@ object StreamE2EQueries extends QueryPack {
       .agg(count(lit(1)).as("n_events"))
       .select(col("symbol"), col("w.start").as("s_start"),
         col("w.end").as("s_end"), col("n_events"))
-    val sinkRoot = work.resolve("sink").toString
-    val q = sess.writeStream.outputMode("append")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(
-          batch.filter(col("symbol") =!= "ZZZ").toDF(),
-          id, sinkRoot, "feed", "sess", Seq("symbol", "s_start"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sinkRoot, "feed", "sess")
+    drain(sess, "append", sp, "feed", "sess", Seq("symbol", "s_start"),
+      _.filter(col("symbol") =!= "ZZZ"))
+    LwwSink.read(s, sp.sinkRoot, "feed", "sess")
       .select(col("symbol"), col("s_start"), col("s_end"), col("n_events"))
   }
 
@@ -884,34 +781,20 @@ object StreamE2EQueries extends QueryPack {
           .cast("double") / 10.0)
       .withColumn("pseudo_vol",
         ((col("user_id") + col("time_s")) % 100L).cast("int"))
-    val lines = tickLines(
+    val sp = spooled(s, tickLines(
       base.orderBy(col("time_s"), col("user_id"), col("event_id")),
       col("pseudo_price"), col("pseudo_vol"),
-      when(col("user_id") % 2 === 0, "B").otherwise("S"))
-    val work = Files.createTempDirectory("graft_e2e_dd")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work,
-      repartitionTo = None) // keep the global time-sorted file sequence
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "4") // force cross-batch dedup state
-      .load()
-    val dedup = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+      when(col("user_id") % 2 === 0, "B").otherwise("S")), "graft_e2e_dd",
+      repartitionTo = None, // keep the global time-sorted file sequence
+      maxFilesPerTrigger = Some(4)) // force cross-batch dedup state
+    val dedup = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .withColumn("ts", timestamp_seconds(col("time")))
       .withWatermark("ts", "1 day")
       .dropDuplicates("symbol", "ts")
-    val sinkRoot = work.resolve("sink").toString
-    val q = dedup.writeStream.outputMode("append")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(
-          batch.select(col("symbol"), col("time"), col("price"),
-            col("volume"), col("tradeType")).toDF(),
-          id, sinkRoot, "feed", "dedup", Seq("symbol", "time"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sinkRoot, "feed", "dedup")
+    drain(dedup, "append", sp, "feed", "dedup", Seq("symbol", "time"),
+      _.select(col("symbol"), col("time"), col("price"),
+        col("volume"), col("tradeType")))
+    LwwSink.read(s, sp.sinkRoot, "feed", "dedup")
       .select(col("symbol"), col("time").as("time_s"), col("price"),
         col("volume"), col("tradeType").as("trade_type"))
   }
@@ -934,21 +817,12 @@ object StreamE2EQueries extends QueryPack {
     val base = dedupedTicks(s, dir)
       .repartition(4, col("user_id"))
       .sortWithinPartitions(col("time_s"))
-    val lines = tickLines(base, col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_cv")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work,
+    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+      "graft_e2e_cv",
       repartitionTo = None) // preserve per-symbol file locality
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool).load()
-    val sinkRoot = work.resolve("sink").toString
-    withRocksDB(s) {
-      val qs = Pipelines.start(env, "tick", sinkRoot,
-        work.resolve("ckpt").toString)
-      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
-    }
-    LwwSink.read(s, sinkRoot, "feed", "tick")
+    val qs = Pipelines.start(sp.env, "tick", sp.sinkRoot, sp.ckpt)
+    try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    LwwSink.read(s, sp.sinkRoot, "feed", "tick")
       .select(col("symbol"), col("time").as("time_s"), col("volume"),
         col("tradeType").as("trade_type"),
         col("cumbuy"), col("cumsell"), col("cumdelta"))
@@ -976,21 +850,14 @@ object StreamE2EQueries extends QueryPack {
   private def runCumvolSalted(s: SparkSession, dir: String): DataFrame = {
     val base = dedupedTicks(s, dir)
       .repartitionByRange(4, col("time_s"))
-    val lines = tickLines(base, col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_cvs")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work,
-      repartitionTo = None) // preserve the time-ranged file layout
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "2")
-      .load()
-    val sinkRoot = work.resolve("sink").toString
-    val q = graft.streaming.SaltedCumVolBatch.start(env, sinkRoot,
-      work.resolve("ckpt").toString, work.resolve("state").toString)
+    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+      "graft_e2e_cvs",
+      repartitionTo = None, // preserve the time-ranged file layout
+      maxFilesPerTrigger = Some(2))
+    val q = graft.streaming.SaltedCumVolBatch.start(sp.env, sp.sinkRoot,
+      sp.ckpt, sp.work.resolve("state").toString)
     try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sinkRoot, "feed", "tick_salted")
+    LwwSink.read(s, sp.sinkRoot, "feed", "tick_salted")
       .select(col("symbol"), col("time").as("time_s"), col("volume"),
         col("tradeType").as("trade_type"),
         col("cumbuy"), col("cumsell"), col("cumdelta"))
@@ -1011,48 +878,31 @@ object StreamE2EQueries extends QueryPack {
     val base = dedupedTicks(s, dir)
       .repartition(4, col("user_id"))
       .sortWithinPartitions(col("time_s"))
-    val lines = tickLines(base, col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_roll")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work,
+    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+      "graft_e2e_roll",
       repartitionTo = None) // preserve per-symbol file locality
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool).load()
-    val sinkRoot = work.resolve("sink").toString
-    // transformWithState requires the RocksDB state store; scope the
-    // provider to this run like StreamingRollingStatsSuite does
-    withRocksDB(s) {
-      val evs = Pipelines.parseTicks(env)
-        .filter(!col("_corrupt"))
-        .select(
-          col("symbol").cast("long").as("userId"),
-          // the deduped (symbol, second) PK makes `time` the row id
-          col("time").as("eventId"),
-          (col("time") * 1000000L).as("tsUs"),
-          col("price").as("value"),
-          floor(col("price") * 1e9).cast("long").as("q"),
-          floor(col("price") * col("price") * 1e9).cast("long").as("q2"))
-        .as[graft.streaming.RollingStatsProcessor.Ev]
-      val q = evs.groupByKey(_.userId)
-        .transformWithState(new graft.streaming.RollingStatsProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .toDF()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          LwwSink.upsertBatch(
-            batch.select(
-              col("userId").cast("string").as("symbol"),
-              col("eventId").as("time"),
-              col("nFrame").as("n_frame"),
-              col("value"), col("mean")).toDF(),
-            id, sinkRoot, "feed", "roll", Seq("symbol", "time"))
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    LwwSink.read(s, sinkRoot, "feed", "roll")
+    val evs = Pipelines.parseTicks(sp.env)
+      .filter(!col("_corrupt"))
+      .select(
+        col("symbol").cast("long").as("userId"),
+        // the deduped (symbol, second) PK makes `time` the row id
+        col("time").as("eventId"),
+        (col("time") * 1000000L).as("tsUs"),
+        col("price").as("value"),
+        floor(col("price") * 1e9).cast("long").as("q"),
+        floor(col("price") * col("price") * 1e9).cast("long").as("q2"))
+      .as[graft.streaming.RollingStatsProcessor.Ev]
+    drain(evs.groupByKey(_.userId)
+      .transformWithState(new graft.streaming.RollingStatsProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Append())
+      .toDF(), "append", sp, "feed", "roll", Seq("symbol", "time"),
+      _.select(
+        col("userId").cast("string").as("symbol"),
+        col("eventId").as("time"),
+        col("nFrame").as("n_frame"),
+        col("value"), col("mean")))
+    LwwSink.read(s, sp.sinkRoot, "feed", "roll")
       .select(col("symbol"), col("time").as("time_s"),
         col("n_frame"), col("value"), col("mean"))
   }
@@ -1097,28 +947,17 @@ object StreamE2EQueries extends QueryPack {
         col("time_s").as("time"),
         floor(col("value")).cast("int").as("volume"),
         lit("BOOK_TYPE_VIEW").as("type"))).as("payload"))).as("value"))
-    val work = Files.createTempDirectory("graft_e2e_join")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(
-      tickJson.unionByName(bookLines), work, repartitionTo = Some(1))
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool).load()
-    val ticks = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+    val sp = spooled(s, tickJson.unionByName(bookLines), "graft_e2e_join",
+      repartitionTo = Some(1))
+    val ticks = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .select("symbol", "bid", "price", "ask", "time", "volume", "tradeType")
-    val books = Pipelines.parseBooks(env).filter(!col("_corrupt"))
+    val books = Pipelines.parseBooks(sp.env).filter(!col("_corrupt"))
       .select("symbol", "price", "time", "volume", "orderType")
     val joined = graft.streaming.StreamJoins.tickWithRecentBook(
       ticks, books, lagSeconds = 86400)
-    val sinkRoot = work.resolve("sink").toString
-    val q = joined.writeStream.outputMode("append")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "tickbook",
-          Seq("symbol", "tick_time", "book_time", "book_price"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sinkRoot, "feed", "tickbook")
+    drain(joined, "append", sp, "feed", "tickbook",
+      Seq("symbol", "tick_time", "book_time", "book_price"))
+    LwwSink.read(s, sp.sinkRoot, "feed", "tickbook")
       .select(col("symbol"), col("tick_time"), col("tick_price"),
         col("tick_volume"), col("tradeType").as("trade_type"),
         col("book_time"), col("book_price"), col("book_volume"),
@@ -1148,19 +987,12 @@ object StreamE2EQueries extends QueryPack {
 
     // 2. Spool: monotone-named immutable .jsonl files (the source's
     //    writer contract), written distributed then renamed into place.
-    val work = Files.createTempDirectory("graft_e2e")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work)
+    val sp = spooled(s, lines, "graft_e2e")
 
     // 3. Stream spool → book pipeline → LWW sink; drain; read back.
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool).load()
-    val sinkRoot = work.resolve("sink").toString
-    val qs = Pipelines.start(env, "book", sinkRoot,
-      work.resolve("ckpt").toString)
+    val qs = Pipelines.start(sp.env, "book", sp.sinkRoot, sp.ckpt)
     try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
-    LwwSink.read(s, sinkRoot, "feed", "book")
+    LwwSink.read(s, sp.sinkRoot, "feed", "book")
       .select(col("symbol"), col("price"), col("time").as("time_s"),
         col("volume"), col("orderType").as("order_type"))
   }
@@ -1189,31 +1021,15 @@ object StreamE2EQueries extends QueryPack {
       lit("docs").as("topic"),
       lit("DOC").as("frameType"),
       struct(col("doc_id"), col("text")).as("payload"))).as("value"))
-    val work = Files.createTempDirectory("graft_e2e_nd")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work)
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "1") // buckets fill across batches
-      .load()
-    val hits = graft.streaming.LshBucketProcessor.bandHits(env)
-    val sinkRoot = work.resolve("sink").toString
-    withRocksDB(s) {
-      val q = hits.groupByKey(_.bucket)
-        .transformWithState(new graft.streaming.LshBucketProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .toDF()
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "docs",
-            "neardup", Seq("doc_a", "doc_b"))
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    LwwSink.read(s, sinkRoot, "docs", "neardup")
+    val sp = spooled(s, lines, "graft_e2e_nd",
+      maxFilesPerTrigger = Some(1)) // buckets fill across batches
+    val hits = graft.streaming.LshBucketProcessor.bandHits(sp.env)
+    drain(hits.groupByKey(_.bucket)
+      .transformWithState(new graft.streaming.LshBucketProcessor(),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+      .toDF(), "update", sp, "docs", "neardup", Seq("doc_a", "doc_b"))
+    LwwSink.read(s, sp.sinkRoot, "docs", "neardup")
       .select(col("doc_a"), col("doc_b"))
   }
 
@@ -1272,16 +1088,10 @@ object StreamE2EQueries extends QueryPack {
     val base = Tables(s, dir, "events")
       .filter(col("event_type").isin("purchase", "click"))
       .withColumn("time_s", expr("unix_micros(ts) div 1000000"))
-    val lines = tickLines(base, col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_quantile")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work)
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "2") // counts accumulate across batches
-      .load()
-    val regs = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+      "graft_e2e_quantile",
+      maxFilesPerTrigger = Some(2)) // counts accumulate across batches
+    val regs = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .select(col("tradeType").as("g"),
         expr("CAST(floor(price * 100) AS BIGINT)").as("v"))
       .withColumn("msb", graft.ops.Bits.floorLog2(col("v")))
@@ -1291,16 +1101,9 @@ object StreamE2EQueries extends QueryPack {
             expr("CAST((shiftright(v, msb - 2) & 3) AS INT)"))
         .otherwise(col("v").cast("int")))
       .groupBy("g", "bucket").agg(count(lit(1)).as("c"))
-    val sinkRoot = work.resolve("sink").toString
-    val q = regs.writeStream.outputMode("update")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "quant",
-          Seq("g", "bucket"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
+    drain(regs, "update", sp, "feed", "quant", Seq("g", "bucket"))
     val W = org.apache.spark.sql.expressions.Window
-    val cum = LwwSink.read(s, sinkRoot, "feed", "quant")
+    val cum = LwwSink.read(s, sp.sinkRoot, "feed", "quant")
       .select(col("g"), col("bucket"), col("c"))
       .withColumn("cum",
         sum(col("c")).over(W.partitionBy("g").orderBy("bucket")))
@@ -1334,30 +1137,17 @@ object StreamE2EQueries extends QueryPack {
     val base = Tables(s, dir, "events")
       .filter(col("event_type").isin("purchase", "click"))
       .withColumn("time_s", expr("unix_micros(ts) div 1000000"))
-    val lines = tickLines(base, col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_bitmap")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work)
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "2") // bitmaps build across batches
-      .load()
-    val regs = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+      "graft_e2e_bitmap",
+      maxFilesPerTrigger = Some(2)) // bitmaps build across batches
+    val regs = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .select(col("tradeType").as("g"),
         col("symbol").cast("long").as("v"))
       .select(col("g"), expr(graft.ops.Bits.wordOf("v")).as("w"),
         graft.ops.Bits.oneHot(col("v")).as("b"))
       .groupBy("g", "w").agg(expr("bit_or(b)").as("bits"))
-    val sinkRoot = work.resolve("sink").toString
-    val q = regs.writeStream.outputMode("update")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "bitmap",
-          Seq("g", "w"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sinkRoot, "feed", "bitmap")
+    drain(regs, "update", sp, "feed", "bitmap", Seq("g", "w"))
+    LwwSink.read(s, sp.sinkRoot, "feed", "bitmap")
       .groupBy(col("g").as("trade_type"))
       .agg(sum(expr("bit_count(bits)")).as("n_distinct"))
   }
@@ -1372,30 +1162,17 @@ object StreamE2EQueries extends QueryPack {
           .cast("double") / 10.0)
     val op = when(col("event_type") === "signup", "I")
       .when(col("event_type") === "error", "D").otherwise("U")
-    val lines = tickLines(base, col("pseudo_price"), stdVolume, op)
-    val work = Files.createTempDirectory("graft_e2e_cdc")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work)
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "2") // ops fold across batches
-      .load()
-    val latest = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+    val sp = spooled(s, tickLines(base, col("pseudo_price"), stdVolume, op),
+      "graft_e2e_cdc",
+      maxFilesPerTrigger = Some(2)) // ops fold across batches
+    val latest = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .groupBy(col("symbol"))
       .agg(max_by(struct(col("time"), col("price"), col("tradeType")),
         col("time")).as("w"))
       .select(col("symbol"), col("w.time").as("time"),
         col("w.price").as("price"), col("w.tradeType").as("op"))
-    val sinkRoot = work.resolve("sink").toString
-    val q = latest.writeStream.outputMode("update")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "cdc",
-          Seq("symbol"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sinkRoot, "feed", "cdc")
+    drain(latest, "update", sp, "feed", "cdc", Seq("symbol"))
+    LwwSink.read(s, sp.sinkRoot, "feed", "cdc")
       .filter(col("op") =!= "D") // tombstone purge at compaction/read
       .select(col("symbol"), col("time").as("time_s"), col("price"),
         col("op"))
@@ -1405,28 +1182,15 @@ object StreamE2EQueries extends QueryPack {
     val base = Tables(s, dir, "events")
       .filter(col("event_type").isin("purchase", "click"))
       .withColumn("time_s", expr("unix_micros(ts) div 1000000"))
-    val lines = tickLines(base, col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_hll")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work)
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "2") // registers build across batches
-      .load()
-    val ticks = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+      "graft_e2e_hll",
+      maxFilesPerTrigger = Some(2)) // registers build across batches
+    val ticks = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
     val regs = graft.ops.Hll.registers(
       ticks.toDF(), col("tradeType"), col("symbol"))
-    val sinkRoot = work.resolve("sink").toString
-    val q = regs.writeStream.outputMode("update")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "hll",
-          Seq("g", "bucket"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
+    drain(regs, "update", sp, "feed", "hll", Seq("g", "bucket"))
     graft.ops.Hll.estimate(
-        LwwSink.read(s, sinkRoot, "feed", "hll")
+        LwwSink.read(s, sp.sinkRoot, "feed", "hll")
           .select(col("g"), col("bucket"), col("m_j")))
       .select(col("g").as("trade_type"), col("n_set"), col("s_total"),
         col("est_distinct"))
@@ -1452,28 +1216,15 @@ object StreamE2EQueries extends QueryPack {
     val base = Tables(s, dir, "events")
       .filter(col("event_type").isin("purchase", "click"))
       .withColumn("time_s", expr("unix_micros(ts) div 1000000"))
-    val lines = tickLines(base, col("value"), stdVolume, stdType)
-    val work = Files.createTempDirectory("graft_e2e_cms")
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work)
-    val env = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-      .option("maxFilesPerTrigger", "2") // counts accumulate across batches
-      .load()
-    val regs = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+      "graft_e2e_cms",
+      maxFilesPerTrigger = Some(2)) // counts accumulate across batches
+    val regs = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .select(TextHash.h31(col("symbol")).as("h"))
       .select(posexplode(CountMin.cells(col("h"))).as(Seq("i", "dc")))
       .groupBy(col("dc.d").as("d"), col("dc.cell").as("cell"))
       .agg(count(lit(1)).as("n"))
-    val sinkRoot = work.resolve("sink").toString
-    val q = regs.writeStream.outputMode("update")
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "cms",
-          Seq("d", "cell"))
-      }.start()
-    try q.processAllAvailable() finally q.stop()
+    drain(regs, "update", sp, "feed", "cms", Seq("d", "cell"))
     // probe side (batch, same symbol derivation): top-10 true counts,
     // estimate = min over the symbol's Depth cells in the STREAMED
     // register table
@@ -1487,7 +1238,7 @@ object StreamE2EQueries extends QueryPack {
         posexplode(CountMin.cells(col("h"))).as(Seq("i", "dc")))
       .select(col("symbol"), col("n_true"),
         col("dc.d").as("d"), col("dc.cell").as("cell"))
-    LwwSink.read(s, sinkRoot, "feed", "cms")
+    LwwSink.read(s, sp.sinkRoot, "feed", "cms")
       .select(col("d"), col("cell"), col("n"))
       .join(broadcast(probes), Seq("d", "cell"))
       .groupBy("symbol", "n_true")

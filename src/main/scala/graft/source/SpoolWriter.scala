@@ -48,7 +48,7 @@ object SpoolWriter {
     */
   // ONE shutdown hook draining a concurrent queue: registering a fresh
   // hook Thread per call accumulated unboundedly in a long-lived driver
-  // (each of the ~17 stream_e2e queries registers one per invocation,
+  // (each of the 23 stream_e2e queries registers one per invocation,
   // and Verify/Bench invoke every query at least twice)
   private val exitWork =
     new java.util.concurrent.ConcurrentLinkedQueue[Path]()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of registered queries
   * (`tools/run.sh graft.tools.ExplainQuery <name> [name...]`) — the
   * plan-audit loop every new operator goes through before its scale
@@ -9,12 +7,8 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     graft.GraftExtensions.register(spark)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Whole-inventory plan invariant: NO registered query may plan a
   * `CartesianProductExec` — the non-broadcast all-pairs join that is
   * instant death at 100 TB (every intentional scalar/small-side cross
@@ -22,16 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * them runs a whole streaming pipeline, and their micro-batch plans
   * are audited by their own suites.
   */
-class CartesianSweepSuite extends AnyFunSuite {
+class CartesianSweepSuite extends SparkSpec {
 
   test("no registered query plans a CartesianProduct") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
     GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val offenders = SparkEntry.queries.toSeq

@@ -16,5 +16,4 @@ ADD_OPENS="$ADD_OPENS --add-opens=java.base/sun.nio.cs=ALL-UNNAMED"
 ADD_OPENS="$ADD_OPENS --add-opens=java.base/sun.security.action=ALL-UNNAMED"
 ADD_OPENS="$ADD_OPENS --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 exec java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CLS:$SCALA_LIB:/opt/spark/jars/*" "$@"
