@@ -1,11 +1,20 @@
 package graft.sink
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 import graft.ops.LwwDedup
+import graft.plans.LwwBucketPrune
 
 /** Keyed-upsert sink emulating the reference's Cassandra tables: INSERT
   * into PRIMARY KEY (symbol, time, price) is a last-writer-wins upsert
@@ -45,6 +54,18 @@ import graft.ops.LwwDedup
   * table's OWN primary key: bucketed by `keys.head` (the partition-key
   * analog), rows sorted by the full PK within files — deterministic
   * clustering for whatever schema the table carries.
+  *
+  * Pinned layout: a table keeps the layout it was created with, in
+  * `_nbuckets`, `_bucket_key` and `_schema` markers (the stored data
+  * schema). An upsert keyed on another column, or carrying other
+  * columns or types, fails naming the difference instead of silently
+  * duplicating PKs or failing inside the merge. Reads use the layout:
+  * every scan of the files — [[read]] and the merge's read of the
+  * affected buckets — runs under the pinned schema, so planning starts
+  * no schema-inference job, and [[read]] tags its relation with the key
+  * and count so [[graft.plans.LwwBucketPrune]] turns `symbol = 'X'` into
+  * a `kb` partition filter: a per-symbol read lists one bucket, the
+  * reference's single-partition read (main.rs:87-88, 145-146).
   */
 object LwwSink {
 
@@ -137,10 +158,20 @@ object LwwSink {
     val table = tablePath(rootDir, topic, kind)
     checkLegacyLayout(rootDir, topic, kind)
     recover(rootDir, topic, kind) // restore aside buckets before reading
-    val nb = bucketCount(table)
+    val nb = pinned(table, "nbuckets")(NumBuckets.toString).trim.toInt
+    val key = pinned(table, "bucket_key")(keys.head)
+    if (key != keys.head)
+      throw new IllegalArgumentException(
+        s"table $table is bucketed on '$key' but this upsert keys on " +
+          s"'${keys.head}': its rows would hash into buckets the merge " +
+          "never reads and silently duplicate primary keys.")
     val tagged = batch
       .withColumn("_batch_id", lit(batchId))
       .withColumn("kb", pmod(hash(col(keys.head)), lit(nb)))
+    val stored = StructType(tagged.schema.filterNot(_.name == "kb"))
+    val schema = asSchema(pinned(table, "schema")(
+      footerSchema(spark, table).getOrElse(stored).json))
+    checkSchema(table, schema, stored)
     // Upsert = LWW within the batch (a window over BATCH rows only — the
     // micro-batch is small by admission control), then existing rows
     // survive unless their PK is in the batch: a broadcast anti-join,
@@ -176,7 +207,7 @@ object LwwSink {
         .filter(Files.exists(_)).map(_.toString)
       val merged =
         if (existingDirs.nonEmpty)
-          spark.read.option("basePath", table).parquet(existingDirs: _*)
+          scan(spark, table, schema, existingDirs)
             .join(broadcast(winners.select(keys.map(col): _*)),
               keys, "left_anti")
             .unionByName(winners)
@@ -200,24 +231,78 @@ object LwwSink {
     } finally winners.unpersist()
   }
 
-  /** The bucket count a table was CREATED with (pinned in a
-    * `_nbuckets` marker the parquet reader ignores); [[NumBuckets]]
-    * only seeds new tables. Without the pin, raising NumBuckets would
-    * rehash keys into buckets the anti-join never reads, silently
-    * duplicating PKs.
-    */
-  private def bucketCount(table: String): Int = {
-    val marker = Paths.get(s"$table/_nbuckets")
-    if (Files.exists(marker))
-      new String(Files.readAllBytes(marker),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-    else {
-      Files.createDirectories(Paths.get(table))
-      Files.write(marker, NumBuckets.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      NumBuckets
-    }
+  /** A layout pin: a marker file the parquet reader ignores (its name
+    * starts with `_`), written once when the table is created —
+    * `nbuckets`, `bucket_key` and `schema` (the stored data schema: every
+    * column the files hold; `kb` is the directory partition). */
+  private def pinFile(table: String, name: String) = Paths.get(s"$table/_$name")
+
+  private def readPin(table: String, name: String): Option[String] = {
+    val p = pinFile(table, name)
+    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), UTF_8)) else None
   }
+
+  /** The value pinned under `name`, or `init` pinned now. A table keeps
+    * the layout it was CREATED with: [[NumBuckets]] only seeds new tables,
+    * because a key must hash into the same bucket for the anti-join upsert
+    * to see its previous version — rehashing under a new count or key
+    * would silently duplicate PKs. A table written before a pin existed
+    * gets it from its next batch. Written aside, then renamed into place,
+    * so a crash never leaves a torn pin. */
+  private def pinned(table: String, name: String)(init: => String): String =
+    readPin(table, name).getOrElse {
+      val v = init
+      Files.createDirectories(Paths.get(table))
+      val tmp = pinFile(table, s"$name.tmp")
+      Files.write(tmp, v.getBytes(UTF_8))
+      Files.move(tmp, pinFile(table, name), StandardCopyOption.ATOMIC_MOVE)
+      v
+    }
+
+  private def asSchema(json: String) = DataType.fromJson(json).asInstanceOf[StructType]
+
+  /** The schema of one data file's footer, read without a Spark job — for a
+    * table written before the schema pin existed. */
+  private def footerSchema(spark: SparkSession, table: String): Option[StructType] = {
+    if (!Files.isDirectory(Paths.get(table))) return None
+    graft.util.Fs.list(Paths.get(table))
+      .filter(_.getFileName.toString.startsWith("kb="))
+      .flatMap(graft.util.Fs.list)
+      .find(_.getFileName.toString.endsWith(".parquet"))
+      .map { p =>
+        val path = new org.apache.hadoop.fs.Path(p.toUri)
+        val conf = spark.sessionState.newHadoopConf()
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromPath(path, conf), ParquetMetadataConverter.NO_FILTER)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+  }
+
+  /** A batch must carry exactly the pinned columns, with the pinned
+    * types (nullability and column order aside) — or the merge would fail
+    * deep inside `unionByName`, or widen a column silently. */
+  private def checkSchema(table: String, pinned: StructType, batch: StructType): Unit = {
+    def show(f: StructField) = s"${f.name}: ${f.dataType.simpleString}"
+    val missing = pinned.filterNot(f => batch.fieldNames.contains(f.name)).map(show)
+    val extra = batch.filterNot(f => pinned.fieldNames.contains(f.name)).map(show)
+    val changed = pinned.flatMap(p => batch.find(_.name == p.name)
+      .filterNot(b => DataTypeUtils.sameType(b.dataType, p.dataType))
+      .map(b => s"${p.name}: ${p.dataType.simpleString} -> ${b.dataType.simpleString}"))
+    if (missing.nonEmpty || extra.nonEmpty || changed.nonEmpty)
+      throw new IllegalArgumentException(
+        s"batch schema differs from the schema pinned for table $table: " +
+          Seq("missing" -> missing, "unexpected" -> extra, "retyped" -> changed)
+            .collect { case (what, cols) if cols.nonEmpty => cols.mkString(s"$what [", ", ", "]") }
+            .mkString("; "))
+  }
+
+  /** The one scan of a table's files: under its pinned schema, so no
+    * schema-inference job runs. */
+  private def scan(spark: SparkSession, table: String, schema: StructType,
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(schema.add("kb", IntegerType))
+      .option("basePath", table).parquet(paths: _*)
 
   /** Test-only fault injection: runs after each completed bucket swap.
     * The restart suite uses it to kill an upsert BETWEEN bucket swaps
@@ -265,12 +350,24 @@ object LwwSink {
       }
   }
 
+  /** The table's rows. Plans without a schema-inference job (the schema
+    * is pinned), and tags its relation with the pinned bucket key and
+    * count so [[graft.plans.LwwBucketPrune]] turns a filter on the key
+    * into a `kb` partition filter: a per-symbol read lists one bucket. */
   def read(spark: SparkSession, rootDir: String, topic: String,
       kind: String): DataFrame = {
     checkLegacyLayout(rootDir, topic, kind)
     recover(rootDir, topic, kind)
-    spark.read.parquet(tablePath(rootDir, topic, kind))
-      .drop("_batch_id").drop("kb")
+    val table = tablePath(rootDir, topic, kind)
+    val schema = readPin(table, "schema").map(asSchema).orElse(footerSchema(spark, table))
+      .getOrElse(throw new IllegalStateException(s"no LwwSink table data at $table"))
+    val df = scan(spark, table, schema, Seq(table))
+    for (key <- readPin(table, "bucket_key"); nb <- readPin(table, "nbuckets"))
+      df.queryExecution.analyzed.foreach {
+        case r: LogicalRelation => r.setTagValue(LwwBucketPrune.Layout, (key, nb.trim.toInt))
+        case _ =>
+      }
+    df.drop("_batch_id").drop("kb")
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =

@@ -1,7 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.LwwBucketPrune
 import graft.sink.LwwSink
 
 /** Emulated Cassandra keyed-upsert sink: LWW by PK across micro-batches,
@@ -214,5 +223,173 @@ class LwwSinkSuite extends SparkSpec {
     // and the elected winner is the payload-desc maximum: volume 9
     // beats 5, then orderType SELL beats BUY
     assert(a.contains(9) && a.contains("SELL"))
+  }
+
+  private val pk = Seq("symbol", "time", "price")
+
+  /** 200 symbols plus the empty string and a non-ASCII one, three rows
+    * each, merged over two batches so most buckets hold rewritten files. */
+  private val symbols = (0 until 200).map(i => s"SYM$i") ++ Seq("", "日本語é")
+  private def fill(root: String, nb: Option[Int]): String = {
+    val table = LwwSink.tablePath(root, "feed", "tick")
+    nb.foreach { n =>
+      Files.createDirectories(Paths.get(table))
+      Files.write(Paths.get(s"$table/_nbuckets"), n.toString.getBytes)
+    }
+    def batch(ts: Seq[Long], v: Int) = (for (s <- symbols; t <- ts)
+      yield (s, t, 1.5, v)).toDF("symbol", "time", "price", "volume")
+    LwwSink.upsertBatch(batch(Seq(100L, 200L), 1), 0L, root, "feed", "tick", pk)
+    LwwSink.upsertBatch(batch(Seq(200L, 300L), 2), 1L, root, "feed", "tick", pk)
+    table
+  }
+
+  private def scanOf(df: DataFrame): FileSourceScanExec =
+    df.queryExecution.sparkPlan.collectFirst { case s: FileSourceScanExec => s }.get
+
+  private def kbFilters(df: DataFrame) =
+    scanOf(df).partitionFilters.filter(_.references.exists(_.name == "kb"))
+
+  private def bucket(symbol: String, nb: Int) =
+    LwwBucketPrune.bucketOf(UTF8String.fromString(symbol), StringType, nb)
+
+  test("a pruned read returns the same rows as a full scan, for every symbol") {
+    GraftExtensions.register(spark)
+    val root = Files.createTempDirectory("lww_prune").toString
+    // pinned at a count other than NumBuckets: the rule must use the pin
+    val table = fill(root, Some(7))
+    val raw = spark.read.parquet(table).drop("_batch_id", "kb")
+    def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    symbols.foreach { s =>
+      val pruned = LwwSink.read(spark, root, "feed", "tick").filter(col("symbol") === s)
+      assert(kbFilters(pruned).map(_.sql) === Seq(s"(kb = ${bucket(s, 7)})"), s"symbol '$s'")
+      val want = rowsOf(raw.filter(col("symbol") === s))
+      assert(want.size === 3, s"fixture rows for '$s'")
+      assert(rowsOf(pruned) === want, s"symbol '$s'")
+    }
+    assert(kbFilters(raw.filter(col("symbol") === "SYM1")).isEmpty,
+      "a raw parquet read of the table is not a sink read and is not pruned")
+  }
+
+  test("= and IN add a kb partition filter; = reads one file") {
+    GraftExtensions.register(spark)
+    val root = Files.createTempDirectory("lww_plan").toString
+    fill(root, None)
+    def sink = LwwSink.read(spark, root, "feed", "tick")
+    val nb = LwwSink.NumBuckets
+    val eq = sink.filter(col("symbol") === "SYM7" && col("time") > 150L)
+    val n = bucket("SYM7", nb)
+    assert(scanOf(eq).toString.matches(
+      s"(?s).*PartitionFilters: \\[\\(kb#\\d+ = $n\\)\\].*"), scanOf(eq).toString)
+    assert(eq.collect().length === 2)
+    val scan = eq.queryExecution.executedPlan.collectFirst {
+      case s: FileSourceScanExec => s }.get
+    assert(scan.metrics("numFiles").value === 1, "one bucket, one file")
+    // two symbols in different buckets: one kb value each
+    val other = symbols.find(s => bucket(s, nb) != bucket("SYM1", nb)).get
+    val in = sink.filter(col("symbol").isin("SYM1", other))
+    val inFilters = kbFilters(in).map(_.sql)
+    assert(inFilters.size === 1 && inFilters.head.startsWith("(kb IN ("), inFilters)
+    assert(in.collect().length === 6)
+    // past 10 values the optimizer turns IN into InSet
+    val many = sink.filter(col("symbol").isin((0 until 12).map(i => s"SYM$i"): _*))
+    assert(kbFilters(many).size === 1, many.queryExecution.optimizedPlan)
+    assert(many.collect().length === 36)
+    // anything but key = literal / key IN literals leaves the plan alone
+    Seq(
+      col("symbol") > "SYM5",
+      col("symbol").like("SYM1%"),
+      col("symbol") === col("volume").cast("string"),
+      col("time") === 100L,
+      col("symbol") === "SYM7" || col("time") === 100L
+    ).foreach { p =>
+      assert(kbFilters(sink.filter(p)).isEmpty, s"no kb filter for $p")
+    }
+  }
+
+  test("a bucket restored from its aside dir is found by a pruned read") {
+    GraftExtensions.register(spark)
+    val root = Files.createTempDirectory("lww_prune_rec").toString
+    val table = Paths.get(fill(root, None))
+    val n = bucket("SYM3", LwwSink.NumBuckets)
+    // a crash in the swap window leaves the bucket at its aside name
+    Files.move(table.resolve(s"kb=$n"), table.resolve(s"_old_kb=$n"))
+    val out = LwwSink.read(spark, root, "feed", "tick")
+      .filter(col("symbol") === "SYM3").collect()
+    assert(out.length === 3)
+  }
+
+  test("a sink read plans with no job; a filtered collect runs exactly one") {
+    GraftExtensions.register(spark)
+    val root = Files.createTempDirectory("lww_jobs").toString
+    fill(root, None)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val df = LwwSink.read(spark, root, "feed", "tick")
+      Bridge.drainListenerBus(spark)
+      assert(jobs.get === 0, "LwwSink.read must not infer a schema")
+      assert(df.filter(col("symbol") === "SYM9").collect().length === 3)
+      Bridge.drainListenerBus(spark)
+      assert(jobs.get === 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("an upsert keyed on a different bucket key fails, naming both keys") {
+    val root = Files.createTempDirectory("lww_key").toString
+    LwwSink.upsertBatch(rows(10), 0L, root, "feed", "tick", pk)
+    val e = intercept[IllegalArgumentException] {
+      LwwSink.upsertBatch(rows(20), 1L, root, "feed", "tick",
+        Seq("time", "symbol", "price"))
+    }
+    assert(e.getMessage.contains("'symbol'") && e.getMessage.contains("'time'"),
+      e.getMessage)
+    assert(LwwSink.read(spark, root, "feed", "tick").collect()
+      .map(_.getInt(3)).toSeq === Seq(10), "the table is untouched")
+  }
+
+  test("a batch whose schema differs from the pinned one fails, naming the columns") {
+    val root = Files.createTempDirectory("lww_schema").toString
+    LwwSink.upsertBatch(rows(10), 0L, root, "feed", "tick", pk)
+    val e = intercept[IllegalArgumentException] {
+      LwwSink.upsertBatch(
+        Seq(("EURUSD", 100L, 1.08, "x", 1)).toDF("symbol", "time", "price", "volume", "side"),
+        1L, root, "feed", "tick", pk)
+    }
+    assert(e.getMessage.contains("unexpected [side: int]") &&
+      e.getMessage.contains("retyped [volume: int -> string]"), e.getMessage)
+    val m = intercept[IllegalArgumentException] {
+      LwwSink.upsertBatch(Seq(("EURUSD", 100L, 1.08)).toDF("symbol", "time", "price"),
+        1L, root, "feed", "tick", pk)
+    }
+    assert(m.getMessage.contains("missing [volume: int]"), m.getMessage)
+    // column order and nullability are not part of the check
+    LwwSink.upsertBatch(Seq((20, 1.08, 100L, "EURUSD"))
+      .toDF("volume", "price", "time", "symbol"), 1L, root, "feed", "tick", pk)
+    val out = LwwSink.read(spark, root, "feed", "tick")
+    assert(out.collect().map(_.getInt(3)).toSeq === Seq(20))
+    // the pin keeps the first batch's nullability; the reader must not
+    // trust it, or a null written by a later batch would read as a value
+    assert(out.schema.forall(_.nullable), out.schema)
+  }
+
+  test("a table written before the layout pins is read from a footer and pinned by its next batch") {
+    GraftExtensions.register(spark)
+    val root = Files.createTempDirectory("lww_legacy").toString
+    val table = fill(root, None)
+    Seq("_schema", "_bucket_key").foreach(f => Files.delete(Paths.get(s"$table/$f")))
+    def sym1 = LwwSink.read(spark, root, "feed", "tick").filter(col("symbol") === "SYM1")
+    assert(sym1.columns.toSeq === Seq("symbol", "time", "price", "volume"))
+    assert(sym1.collect().length === 3)
+    assert(kbFilters(sym1).isEmpty, "no pinned key, no pruning")
+    LwwSink.upsertBatch(Seq(("SYM1", 400L, 1.5, 3)).toDF("symbol", "time", "price", "volume"),
+      2L, root, "feed", "tick", pk)
+    assert(Files.exists(Paths.get(s"$table/_schema")) &&
+      Files.exists(Paths.get(s"$table/_bucket_key")))
+    assert(kbFilters(sym1).size === 1)
+    assert(sym1.collect().length === 4)
   }
 }
