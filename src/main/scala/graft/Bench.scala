@@ -527,7 +527,7 @@ object Bench {
     val ioCalibStart =
       try ioCalibrate(spark, sfDir) catch { case _: Throwable => -1.0 }
     // `stream_*` entries orchestrate a whole streaming run (spool write,
-    // micro-batch drain, sink swap) — correctness-gated in Verify, but
+    // micro-batch drain, sink upsert) — correctness-gated in Verify, but
     // not a query-latency measurement; timing them here would swamp the
     // per-query numbers with harness setup.
     //
@@ -599,12 +599,9 @@ object Bench {
     // queries in rounds 1-8. toRdd materializes every output column of
     // the AQE-finalized plan with no driver transfer — the same
     // discipline the r8 EXPLAIN fix applied to printed plans.
-    // SPARK_GRAFT_EXEC=count restores the legacy method for
-    // cross-round A/B (docs/NOTES.md carries the measured delta).
-    val legacyCount = sys.env.get("SPARK_GRAFT_EXEC").contains("count")
-    def runPlan(df: org.apache.spark.sql.DataFrame): Unit =
-      if (legacyCount) { df.count(); () }
-      else { df.queryExecution.toRdd.count(); () }
+    def runPlan(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.queryExecution.toRdd.count(); ()
+    }
     // A query that THROWS must not masquerade as a fast timing: the
     // old catch-and-continue recorded a ~10ms "result" for a query
     // that never ran — the number landed in bench.json as a legitimate

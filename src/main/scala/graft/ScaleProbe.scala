@@ -638,13 +638,12 @@ object ScaleProbe {
     // query reads a pinned memo (0.12s steady); this arm prices the
     // un-amortized rebuild — the one heavy family r10 left un-probed.
     // Copies are id-disjoint, so peel / trim / layering ROUND counts
-    // stay constant (SPARK_GRAFT_SCC_DEBUG=1 prints peels+innerRounds)
-    // while each round's node-keyed shuffle grows linearly: healthy =
-    // job ~ copies with a near-flat floor. The c-leaf union is pinned
-    // once before entering the loops (the Betweenness adjP lesson —
-    // un-truncated, its subtree would be re-analyzed by every round of
-    // every phase and the floor would price plan analysis, not the
-    // chain).
+    // stay constant while each round's node-keyed shuffle grows
+    // linearly: healthy = job ~ copies with a near-flat floor. The
+    // c-leaf union is pinned once before entering the loops (the
+    // Betweenness adjP lesson — un-truncated, its subtree would be
+    // re-analyzed by every round of every phase and the floor would
+    // price plan analysis, not the chain).
     def topoChain(c: Int): Long = {
       import org.apache.spark.sql.graftbridge.Bridge
       val e1 = graft.ops.GraphIter

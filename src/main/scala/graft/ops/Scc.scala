@@ -56,7 +56,6 @@ object Scc {
     var out: DataFrame = null
     val pinnedDones = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var peel = 0
-    var innerRounds = 0
 
     // record a finished (node, scc_id) batch and shrink the live graph
     def emitAndShrink(done: DataFrame): Unit = {
@@ -102,11 +101,10 @@ object Scc {
         } else emitAndShrink(dead)
       }
       if (nodes.limit(1).count() > 0) {
-        val (f, nf) = minReach(live, nodes, maxProp)
-        val (b, nb) = minReach(
+        val f = minReach(live, nodes, maxProp)
+        val b = minReach(
           live.select(col("dst").as("src"), col("src").as("dst")),
           nodes, maxProp)
-        innerRounds += nf + nb
         val done = f.join(b.withColumnRenamed("m", "mb"), Seq("node"))
           .filter(col("m") === col("mb"))
           .select(col("node"), col("m").as("scc_id"))
@@ -118,8 +116,6 @@ object Scc {
     }
     Bridge.releaseLocalCheckpoint(nodes)
     Bridge.releaseLocalCheckpoint(live)
-    if (sys.env.contains("SPARK_GRAFT_SCC_DEBUG"))
-      System.err.println(s"[scc] peels=$peel innerRounds=$innerRounds")
     if (out == null) // edgeless input: no incident nodes to label
       return edges.select(col("src").as("node"),
         col("src").as("scc_id")).limit(0)
@@ -184,7 +180,7 @@ object Scc {
     */
   private def minReach(
       edges: DataFrame, nodes: DataFrame,
-      maxProp: Int): (DataFrame, Int) = {
+      maxProp: Int): DataFrame = {
     var lab = nodes.withColumn("m", col("node")).localCheckpoint()
     var sum = lab.agg(coalesce(org.apache.spark.sql.functions.sum("m"),
       lit(0L))).head().getLong(0)
@@ -214,6 +210,6 @@ object Scc {
       lab = next
       Bridge.releaseLocalCheckpoint(prev)
     }
-    (lab, iter)
+    lab
   }
 }

@@ -3,49 +3,70 @@ package graft.sink
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 import graft.ops.LwwDedup
 import graft.plans.LwwBucketPrune
+import graft.util.Fs
 
 /** Keyed-upsert sink emulating the reference's Cassandra tables: INSERT
   * into PRIMARY KEY (symbol, time, price) is a last-writer-wins upsert
-  * (/root/reference/src/main.rs:87, 145), clustering order
-  * `(time DESC, price)` pre-sorts per-symbol reads (main.rs:88).
+  * (the reference's main.rs:87, 145), clustering order `(time DESC,
+  * price)` pre-sorts per-symbol reads (main.rs:88).
   *
   * Offline emulation (no Cassandra connector jar): a parquet table per
-  * `{topic}_{kind}`, hash-bucketed into `kb=N` partition directories on
-  * the leading PK column (per-symbol locality — the same axis the
-  * reference's partition key uses). `foreachBatch` merge touches ONLY
-  * the buckets the batch's keys hash into: [[LwwDedup]] the batch on
-  * the PK, broadcast-anti-join the stored bucket rows against the
-  * batch's keys (stored rows lose to any rewrite of their PK — upsert
-  * semantics, no window over stored data), union, rewrite those buckets
-  * via per-bucket atomic swap. Work per micro-batch is O(data in affected buckets),
-  * not O(table) — a narrow batch (few hot symbols) leaves the rest of
-  * the table untouched. Idempotent under micro-batch re-delivery: a
+  * `{topic}_{kind}`, hash-bucketed on the leading PK column (per-symbol
+  * locality — the same axis the reference's partition key uses). An
+  * upsert touches ONLY the buckets the batch's keys hash into:
+  * [[LwwDedup]] the batch on the PK, broadcast-anti-join the stored
+  * bucket rows against the batch's keys (stored rows lose to any rewrite
+  * of their PK — upsert semantics, no window over stored data), union,
+  * write those buckets anew. Work per micro-batch is O(data in affected
+  * buckets), not O(table). Idempotent under micro-batch re-delivery: a
   * replayed batch re-elects the same winners (exactly-once per key, vs
   * the reference's at-most-once — SURVEY §2.6).
   *
-  * Crash-safety, per bucket: the current bucket dir is renamed ASIDE
-  * (to an underscore-prefixed name parquet readers ignore) before the
-  * new one moves in, and [[recover]] restores any aside dir whose swap
-  * never completed — at every instant each bucket is recoverable. A
-  * crash mid-upsert can leave SOME buckets merged and others not; the
-  * checkpointed micro-batch replays and the LWW merge converges all of
-  * them — idempotence holds PER BUCKET, not just per batch: an
-  * already-swapped bucket re-elects the same winners on replay
-  * (anti-join drops its batch-written rows, the union re-adds them),
-  * an untouched bucket merges as if first time. Pinned by
-  * LwwSinkSuite's between-bucket-swaps crash test.
+  * Manifest: a table is what its `_manifest` file says — the bucket key,
+  * the bucket count, the stored schema, a version counter and, per
+  * bucket, the directory of its current generation, `kb=N/g<version>`.
+  * Bucket files are never moved or rewritten once a manifest names them.
+  * An upsert stages its merged buckets, moves each into a new generation
+  * directory, publishes the next manifest by one atomic rename, then
+  * deletes every generation that neither the new manifest nor the one it
+  * started from names. A table keeps the layout it was created with: an
+  * upsert keyed on another column, or carrying other columns or types,
+  * fails naming the difference instead of silently duplicating PKs.
+  *
+  * Reads: [[read]] resolves the manifest once and scans exactly the
+  * directories it names, under the stored schema (no schema-inference
+  * job), and never writes to the filesystem. It tags its relation with
+  * the bucket key and count so [[graft.plans.LwwBucketPrune]] turns
+  * `symbol = 'X'` into a `kb` partition filter: a per-symbol read lists
+  * one bucket, the reference's single-partition read (main.rs:87-88,
+  * 145-146).
+  *
+  * Retention — one manifest of lag: a read resolved before an upsert
+  * stays readable through that upsert and its cleanup. A read that
+  * outlives two more upserts of the same table may fail.
+  *
+  * Crash safety: a table is old or new, never a mix. A crash before the
+  * publish leaves the previous manifest, and everything it names, in
+  * place; the checkpointed micro-batch replays the whole upsert. What a
+  * crash leaves behind (a `_tmp_b<id>` staging dir, a `g<version>` dir no
+  * manifest names) is deleted by the next upsert before it reuses the
+  * name.
+  *
+  * One writer per table: upserts of one table must not run concurrently
+  * (a streaming query's `foreachBatch` calls never do). Reads may run
+  * beside the writer.
   *
   * Scale note: per-bucket rewrite is the *emulation's* granularity —
   * on a cluster this `foreachBatch` body becomes a real keyed upsert
@@ -54,27 +75,15 @@ import graft.plans.LwwBucketPrune
   * table's OWN primary key: bucketed by `keys.head` (the partition-key
   * analog), rows sorted by the full PK within files — deterministic
   * clustering for whatever schema the table carries.
-  *
-  * Pinned layout: a table keeps the layout it was created with, in
-  * `_nbuckets`, `_bucket_key` and `_schema` markers (the stored data
-  * schema). An upsert keyed on another column, or carrying other
-  * columns or types, fails naming the difference instead of silently
-  * duplicating PKs or failing inside the merge. Reads use the layout:
-  * every scan of the files — [[read]] and the merge's read of the
-  * affected buckets — runs under the pinned schema, so planning starts
-  * no schema-inference job, and [[read]] tags its relation with the key
-  * and count so [[graft.plans.LwwBucketPrune]] turns `symbol = 'X'` into
-  * a `kb` partition filter: a per-symbol read lists one bucket, the
-  * reference's single-partition read (main.rs:87-88, 145-146).
   */
 object LwwSink {
 
   /** Bucket-dir fan-out for NEW tables. Raise for bigger tables — each
-    * table pins the count it was created with in a `_nbuckets` marker,
-    * so existing layouts keep merging correctly after a change (a key
-    * must hash into the same bucket for the anti-join upsert to see its
-    * previous version; mixing counts within one table would silently
-    * duplicate PKs).
+    * table's manifest keeps the count it was created with, so existing
+    * layouts keep merging correctly after a change (a key must hash into
+    * the same bucket for the anti-join upsert to see its previous
+    * version; mixing counts within one table would silently duplicate
+    * PKs).
     */
   val NumBuckets = 16
 
@@ -138,8 +147,55 @@ object LwwSink {
           "would be silently abandoned.")
   }
 
-  private def bucketDir(table: String, n: Int) = Paths.get(s"$table/kb=$n")
-  private def asideDir(table: String, n: Int) = Paths.get(s"$table/_old_kb=$n")
+  /** A table's published state: `buckets` maps each bucket to the
+    * directory of its current generation, relative to the table. */
+  private[graft] case class Manifest(version: Long, key: String, nb: Int,
+      schema: StructType, buckets: Map[Int, String]) {
+    def json: String = compact(render(("version" -> version) ~ ("key" -> key) ~
+      ("nbuckets" -> nb) ~ ("schema" -> parse(schema.json)) ~
+      ("buckets" -> buckets.map { case (n, dir) => n.toString -> dir })))
+  }
+
+  private def manifestFile(table: String) = Paths.get(s"$table/_manifest")
+
+  /** The table's published manifest, or None for a table no upsert has
+    * created yet. A table a layout before the manifest wrote fails
+    * loudly: its files cannot be told apart from crash leftovers. */
+  private[graft] def manifest(table: String): Option[Manifest] = {
+    val f = manifestFile(table)
+    if (Files.exists(f)) {
+      implicit val formats: Formats = DefaultFormats
+      val j = parse(new String(Files.readAllBytes(f), UTF_8))
+      Some(Manifest((j \ "version").extract[Long], (j \ "key").extract[String],
+        (j \ "nbuckets").extract[Int],
+        DataType.fromJson(compact(render(j \ "schema"))).asInstanceOf[StructType],
+        (j \ "buckets").extract[Map[String, String]].map { case (n, d) => n.toInt -> d }))
+    } else if (Files.isDirectory(Paths.get(table)) &&
+        Fs.list(Paths.get(table)).exists(preManifest))
+      throw new IllegalStateException(
+        s"table $table holds data but no manifest: an older LwwSink layout " +
+          "wrote it. Rebuild it by replaying its stream into a fresh sink root.")
+    else None
+  }
+
+  /** What an older layout left: its pin and aside files, or a bucket dir
+    * holding files of its own. A crashed first upsert leaves only
+    * `_tmp_b<id>` and `kb=N/g<version>` dirs, which its replay sweeps. */
+  private def preManifest(p: Path): Boolean = {
+    val name = p.getFileName.toString
+    if (name.startsWith("kb=")) Fs.list(p).exists(!_.getFileName.toString.matches("g\\d+"))
+    else !name.startsWith("_tmp_b") && !name.startsWith("_manifest")
+  }
+
+  /** Make `m` the table's state: one atomic rename over the previous
+    * manifest, so a reader sees the old table or the new one. Tests use
+    * it to create a table with a given layout. */
+  private[graft] def publish(table: String, m: Manifest): Unit = {
+    val tmp = Paths.get(s"$table/_manifest.tmp")
+    Files.createDirectories(tmp.getParent)
+    Files.write(tmp, m.json.getBytes(UTF_8))
+    Files.move(tmp, manifestFile(table), StandardCopyOption.ATOMIC_MOVE)
+  }
 
   /** Merge one micro-batch into the emulated table. `keys` is the PK;
     * `batchId` is the version (later batch wins; within a batch, the
@@ -157,9 +213,9 @@ object LwwSink {
     val spark = batch.sparkSession
     val table = tablePath(rootDir, topic, kind)
     checkLegacyLayout(rootDir, topic, kind)
-    recover(rootDir, topic, kind) // restore aside buckets before reading
-    val nb = pinned(table, "nbuckets")(NumBuckets.toString).trim.toInt
-    val key = pinned(table, "bucket_key")(keys.head)
+    val prev = manifest(table)
+    val nb = prev.fold(NumBuckets)(_.nb)
+    val key = prev.fold(keys.head)(_.key)
     if (key != keys.head)
       throw new IllegalArgumentException(
         s"table $table is bucketed on '$key' but this upsert keys on " +
@@ -169,9 +225,8 @@ object LwwSink {
       .withColumn("_batch_id", lit(batchId))
       .withColumn("kb", pmod(hash(col(keys.head)), lit(nb)))
     val stored = StructType(tagged.schema.filterNot(_.name == "kb"))
-    val schema = asSchema(pinned(table, "schema")(
-      footerSchema(spark, table).getOrElse(stored).json))
-    checkSchema(table, schema, stored)
+    val base = prev.getOrElse(Manifest(0L, key, nb, stored, Map.empty))
+    checkSchema(table, base.schema, stored)
     // Upsert = LWW within the batch (a window over BATCH rows only — the
     // micro-batch is small by admission control), then existing rows
     // survive unless their PK is in the batch: a broadcast anti-join,
@@ -202,19 +257,22 @@ object LwwSink {
       // the affected-bucket set is metadata (≤ NumBuckets ints), not data
       val affected = winners.select("kb").distinct()
         .collect().map(_.getInt(0)).sorted.toIndexedSeq
-      if (affected.isEmpty) return
-      val existingDirs = affected.map(bucketDir(table, _))
-        .filter(Files.exists(_)).map(_.toString)
+      if (affected.isEmpty) {
+        // an empty first batch still creates the table: it reads as empty
+        if (prev.isEmpty) publish(table, base)
+        return
+      }
+      val existingDirs = affected.flatMap(base.buckets.get).map(d => s"$table/$d")
       val merged =
         if (existingDirs.nonEmpty)
-          scan(spark, table, schema, existingDirs)
+          scan(spark, table, base.schema, existingDirs)
             .join(broadcast(winners.select(keys.map(col): _*)),
               keys, "left_anti")
             .unionByName(winners)
         else winners
       // one writer task per bucket: without this, partitionBy sprays
       // (shuffle-partitions × buckets) small files per batch and the
-      // write dominates the merge. Fan out by the table's PINNED bucket
+      // write dominates the merge. Fan out by the table's OWN bucket
       // count (kb values are computed mod `nb`), not the global seed
       // constant — they differ for tables created under an older count.
       // deterministic in-file layout: sort by the table's OWN primary
@@ -224,152 +282,89 @@ object LwwSink {
         .repartition(nb, col("kb"))
         .sortWithinPartitions(keys.map(col): _*)
       // stage under an underscore name inside the table dir (same volume,
-      // invisible to readers), then swap each bucket aside-first
+      // invisible to readers), move each bucket into its new generation,
+      // then publish: until the rename, readers see the previous table
       val tmp = s"$table/_tmp_b$batchId"
       deduped.write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(tmp)
-      swapBuckets(table, tmp, affected)
+      val v = base.version + 1
+      val next = base.copy(version = v,
+        buckets = base.buckets ++ affected.map(n => n -> s"kb=$n/g$v"))
+      affected.foreach { n =>
+        val dst = Paths.get(s"$table/${next.buckets(n)}")
+        Fs.deleteTree(dst) // left by a crashed attempt at this version
+        Files.createDirectories(dst.getParent)
+        Files.move(Paths.get(s"$tmp/kb=$n"), dst, StandardCopyOption.ATOMIC_MOVE)
+        afterBucketMove(n)
+      }
+      publish(table, next)
+      sweep(table, (base.buckets.values ++ next.buckets.values).toSet)
     } finally winners.unpersist()
   }
 
-  /** A layout pin: a marker file the parquet reader ignores (its name
-    * starts with `_`), written once when the table is created —
-    * `nbuckets`, `bucket_key` and `schema` (the stored data schema: every
-    * column the files hold; `kb` is the directory partition). */
-  private def pinFile(table: String, name: String) = Paths.get(s"$table/_$name")
+  /** Test-only fault injection: runs after each bucket moves into its new
+    * generation, before the manifest is published. LwwSinkSuite kills an
+    * upsert there to prove a crash leaves the previous table readable and
+    * the replayed micro-batch converges. A no-op outside tests.
+    */
+  private[graft] var afterBucketMove: Int => Unit = _ => ()
 
-  private def readPin(table: String, name: String): Option[String] = {
-    val p = pinFile(table, name)
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), UTF_8)) else None
-  }
-
-  /** The value pinned under `name`, or `init` pinned now. A table keeps
-    * the layout it was CREATED with: [[NumBuckets]] only seeds new tables,
-    * because a key must hash into the same bucket for the anti-join upsert
-    * to see its previous version — rehashing under a new count or key
-    * would silently duplicate PKs. A table written before a pin existed
-    * gets it from its next batch. Written aside, then renamed into place,
-    * so a crash never leaves a torn pin. */
-  private def pinned(table: String, name: String)(init: => String): String =
-    readPin(table, name).getOrElse {
-      val v = init
-      Files.createDirectories(Paths.get(table))
-      val tmp = pinFile(table, s"$name.tmp")
-      Files.write(tmp, v.getBytes(UTF_8))
-      Files.move(tmp, pinFile(table, name), StandardCopyOption.ATOMIC_MOVE)
-      v
+  /** Delete every generation `keep` does not name, and every staging dir
+    * (one writer per table: no other upsert is in flight). */
+  private def sweep(table: String, keep: Set[String]): Unit =
+    Fs.list(Paths.get(table)).foreach { p =>
+      val name = p.getFileName.toString
+      if (name.startsWith("_tmp_b")) Fs.deleteTree(p)
+      else if (name.startsWith("kb="))
+        Fs.list(p).filterNot(g => keep(s"$name/${g.getFileName}")).foreach(Fs.deleteTree)
     }
 
-  private def asSchema(json: String) = DataType.fromJson(json).asInstanceOf[StructType]
-
-  /** The schema of one data file's footer, read without a Spark job — for a
-    * table written before the schema pin existed. */
-  private def footerSchema(spark: SparkSession, table: String): Option[StructType] = {
-    if (!Files.isDirectory(Paths.get(table))) return None
-    graft.util.Fs.list(Paths.get(table))
-      .filter(_.getFileName.toString.startsWith("kb="))
-      .flatMap(graft.util.Fs.list)
-      .find(_.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val path = new org.apache.hadoop.fs.Path(p.toUri)
-        val conf = spark.sessionState.newHadoopConf()
-        val footer = ParquetFooterReader.readFooter(
-          HadoopInputFile.fromPath(path, conf), ParquetMetadataConverter.NO_FILTER)
-        ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
-          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-      }
-  }
-
-  /** A batch must carry exactly the pinned columns, with the pinned
+  /** A batch must carry exactly the table's columns, with the table's
     * types (nullability and column order aside) — or the merge would fail
     * deep inside `unionByName`, or widen a column silently. */
-  private def checkSchema(table: String, pinned: StructType, batch: StructType): Unit = {
+  private def checkSchema(table: String, schema: StructType, batch: StructType): Unit = {
     def show(f: StructField) = s"${f.name}: ${f.dataType.simpleString}"
-    val missing = pinned.filterNot(f => batch.fieldNames.contains(f.name)).map(show)
-    val extra = batch.filterNot(f => pinned.fieldNames.contains(f.name)).map(show)
-    val changed = pinned.flatMap(p => batch.find(_.name == p.name)
+    val missing = schema.filterNot(f => batch.fieldNames.contains(f.name)).map(show)
+    val extra = batch.filterNot(f => schema.fieldNames.contains(f.name)).map(show)
+    val changed = schema.flatMap(p => batch.find(_.name == p.name)
       .filterNot(b => DataTypeUtils.sameType(b.dataType, p.dataType))
       .map(b => s"${p.name}: ${p.dataType.simpleString} -> ${b.dataType.simpleString}"))
     if (missing.nonEmpty || extra.nonEmpty || changed.nonEmpty)
       throw new IllegalArgumentException(
-        s"batch schema differs from the schema pinned for table $table: " +
+        s"batch schema differs from the stored schema of table $table: " +
           Seq("missing" -> missing, "unexpected" -> extra, "retyped" -> changed)
             .collect { case (what, cols) if cols.nonEmpty => cols.mkString(s"$what [", ", ", "]") }
             .mkString("; "))
   }
 
-  /** The one scan of a table's files: under its pinned schema, so no
-    * schema-inference job runs. */
+  /** The one scan of a table's files, one root path per generation dir:
+    * under its stored schema, so no schema-inference job runs. Built on
+    * the file index directly, as `spark.read.parquet` would build it, but
+    * without its per-call existence check of every path, which starts a
+    * thread pool and costs a read more than listing the files does. */
   private def scan(spark: SparkSession, table: String, schema: StructType,
-      paths: Seq[String]): DataFrame =
-    spark.read.schema(schema.add("kb", IntegerType))
-      .option("basePath", table).parquet(paths: _*)
-
-  /** Test-only fault injection: runs after each completed bucket swap.
-    * The restart suite uses it to kill an upsert BETWEEN bucket swaps
-    * (some buckets merged, others not — the partial state the crash-
-    * safety scaladoc above admits) and prove the replayed micro-batch
-    * converges per bucket. A no-op outside tests.
-    */
-  private[graft] var afterBucketSwap: Int => Unit = _ => ()
-
-  private def swapBuckets(table: String, tmp: String, affected: Seq[Int]): Unit = {
-    affected.foreach { n =>
-      val dst = bucketDir(table, n)
-      val staged = Paths.get(s"$tmp/kb=$n")
-      val aside = asideDir(table, n)
-      // LWW merge of a non-empty batch bucket is never empty, so staged
-      // always exists for an affected bucket; the guard keeps the old
-      // data in place rather than swapping in nothing if that invariant
-      // ever broke.
-      if (Files.exists(staged)) {
-        if (Files.exists(aside)) deleteRecursively(aside) // stale leftover
-        if (Files.exists(dst))
-          Files.move(dst, aside, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(staged, dst, StandardCopyOption.ATOMIC_MOVE)
-        if (Files.exists(aside)) deleteRecursively(aside)
-        afterBucketSwap(n)
-      }
-    }
-    deleteRecursively(Paths.get(tmp))
+      paths: Seq[String]): DataFrame = {
+    val index = new InMemoryFileIndex(spark, paths.map(new org.apache.hadoop.fs.Path(_)),
+      Map("basePath" -> table), Some(schema.add("kb", IntegerType)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      schema.toNullable, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
-  /** Crash recovery: any bucket whose swap died between `dst → aside`
-    * and `staged → dst` survives at its aside name; restore it before
-    * reading or merging. Called by [[upsertBatch]] and [[read]].
-    */
-  def recover(rootDir: String, topic: String, kind: String): Unit = {
-    val table = Paths.get(tablePath(rootDir, topic, kind))
-    if (!Files.isDirectory(table)) return
-    graft.util.Fs.list(table)
-      .filter(_.getFileName.toString.startsWith("_old_kb="))
-      .foreach { aside =>
-        val n = aside.getFileName.toString.stripPrefix("_old_kb=")
-        val dst = table.resolve(s"kb=$n")
-        if (!Files.exists(dst))
-          Files.move(aside, dst, StandardCopyOption.ATOMIC_MOVE)
-      }
-  }
-
-  /** The table's rows. Plans without a schema-inference job (the schema
-    * is pinned), and tags its relation with the pinned bucket key and
-    * count so [[graft.plans.LwwBucketPrune]] turns a filter on the key
-    * into a `kb` partition filter: a per-symbol read lists one bucket. */
+  /** The table's rows, as of the manifest this call resolves. Plans
+    * without a schema-inference job, and tags its relation with the
+    * table's bucket key and count so [[graft.plans.LwwBucketPrune]] turns
+    * a filter on the key into a `kb` partition filter: a per-symbol read
+    * lists one bucket. */
   def read(spark: SparkSession, rootDir: String, topic: String,
       kind: String): DataFrame = {
     checkLegacyLayout(rootDir, topic, kind)
-    recover(rootDir, topic, kind)
     val table = tablePath(rootDir, topic, kind)
-    val schema = readPin(table, "schema").map(asSchema).orElse(footerSchema(spark, table))
-      .getOrElse(throw new IllegalStateException(s"no LwwSink table data at $table"))
-    val df = scan(spark, table, schema, Seq(table))
-    for (key <- readPin(table, "bucket_key"); nb <- readPin(table, "nbuckets"))
-      df.queryExecution.analyzed.foreach {
-        case r: LogicalRelation => r.setTagValue(LwwBucketPrune.Layout, (key, nb.trim.toInt))
-        case _ =>
-      }
+    val m = manifest(table)
+      .getOrElse(throw new IllegalStateException(s"no LwwSink table at $table"))
+    val df = scan(spark, table, m.schema, m.buckets.toSeq.sorted.map(b => s"$table/${b._2}"))
+    df.queryExecution.analyzed.foreach {
+      case r: LogicalRelation => r.setTagValue(LwwBucketPrune.Layout, (m.key, m.nb))
+      case _ =>
+    }
     df.drop("_batch_id").drop("kb")
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.util.Fs.walk(p).reverse.foreach(Files.deleteIfExists(_))
 }

@@ -56,7 +56,7 @@ object SpoolWriter {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       var w = exitWork.poll()
       while (w != null) {
-        try graft.util.Fs.walk(w).reverse.foreach(Files.deleteIfExists(_))
+        try graft.util.Fs.deleteTree(w)
         catch { case _: Throwable => () }
         w = exitWork.poll()
       }

@@ -56,7 +56,7 @@ object CarryState {
     val fin = Paths.get(s"$stateRoot/v$batchId")
     // carry state is one row per live key — driver-small by contract
     state.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    deleteTree(fin) // replay: clear the previous identical attempt
+    Fs.deleteTree(fin) // replay: clear the previous identical attempt
     Files.move(tmp, fin)
     // prune: recovery can only replay THIS batch, which needs < N only
     Fs.list(Paths.get(stateRoot))
@@ -65,9 +65,6 @@ object CarryState {
         n.startsWith("v") &&
           scala.util.Try(n.drop(1).toLong).toOption.exists(_ < batchId - 1)
       }
-      .foreach(deleteTree)
+      .foreach(Fs.deleteTree)
   }
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) Fs.walk(p).reverse.foreach(Files.deleteIfExists(_))
 }

@@ -7,11 +7,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.plans.LwwBucketPrune
 import graft.sink.LwwSink
+import graft.util.Fs
 
 /** Emulated Cassandra keyed-upsert sink: LWW by PK across micro-batches,
   * idempotent under batch re-delivery (SURVEY §2.5 K4, §2.6).
@@ -33,33 +34,65 @@ class LwwSinkSuite extends SparkSpec {
     val out = LwwSink.read(spark, root, "feed", "tick")
       .collect().map(r => (r.getLong(1), r.getInt(3))).sortBy(_._1)
     assert(out === Seq((100L, 20), (200L, 30)))
+    // an empty first batch creates the table, which reads as empty
+    LwwSink.upsertBatch(rows(), 0L, root, "feed", "empty", pk)
+    assert(LwwSink.read(spark, root, "feed", "empty").collect().isEmpty)
+    LwwSink.upsertBatch(rows(5), 1L, root, "feed", "empty", pk)
+    assert(LwwSink.read(spark, root, "feed", "empty").collect().map(_.getInt(3)).toSeq === Seq(5))
   }
 
-  test("crash between swap halves never loses a bucket (aside recovery)") {
-    val root = Files.createTempDirectory("lww3").toString
+  /** Create `table` empty, with bucket count `nb`, for batches shaped like
+    * `batch`: the manifest an upsert would publish for a new table. */
+  private def create(table: String, batch: DataFrame, nb: Int): Unit =
+    LwwSink.publish(table, LwwSink.Manifest(0L, "symbol", nb,
+      batch.schema.add("_batch_id", LongType), Map.empty))
+
+  test("a read resolved before an upsert returns its snapshot after the upsert") {
+    val root = Files.createTempDirectory("lww_snap").toString
     val pk = Seq("symbol", "time", "price")
-    LwwSink.upsertBatch(rows(10), 0L, root, "feed", "tick", pk)
-    LwwSink.upsertBatch(
-      Seq(("EURUSD", 200L, 1.09, 30)).toDF("symbol", "time", "price", "volume"),
-      1L, root, "feed", "tick", pk)
-    // simulate a crash in the swap window: the bucket dir moved aside,
-    // the staged replacement never moved in (the old delete-then-move
-    // design left NOTHING recoverable here)
-    val table = java.nio.file.Paths.get(LwwSink.tablePath(root, "feed", "tick"))
+    def batch(v: Int) = (0 until 60).map(i => (s"SYM$i", 100L, 1.0, v))
+      .toDF("symbol", "time", "price", "volume")
+    LwwSink.upsertBatch(batch(1), 0L, root, "feed", "tick", pk)
+    val snap = LwwSink.read(spark, root, "feed", "tick")
+    // rewrites every key, so every bucket gets a new generation, and the
+    // upsert's cleanup runs before the earlier read collects
+    LwwSink.upsertBatch(batch(2), 1L, root, "feed", "tick", pk)
+    assert(snap.collect().map(_.getInt(3)).toSet === Set(1))
+    assert(snap.count() === 60)
+    assert(LwwSink.read(spark, root, "feed", "tick").collect().map(_.getInt(3)).toSet === Set(2))
+  }
+
+  test("readers beside a writer never fail and always see a published version") {
+    val root = Files.createTempDirectory("lww_rw").toString
+    val pk = Seq("symbol", "time", "price")
+    // batch i adds 20 keys and rewrites the 20 of every earlier batch, so
+    // each upsert supersedes the buckets a running read may have listed
+    def batch(i: Int) = (for (j <- 0 until 20; t <- 0 to i) yield (s"SYM$j", t.toLong, 1.0, i))
+      .toDF("symbol", "time", "price", "volume")
+    val writes = 8
+    val published = (1 to writes).map(20L * _).toSet
+    LwwSink.upsertBatch(batch(0), 0L, root, "feed", "tick", pk)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val go = new java.util.concurrent.CountDownLatch(1)
+    def thread(body: => Unit) = {
+      val t = new Thread(() => { go.await(); body })
+      t.start(); t
+    }
+    def guarded(body: => Unit): Unit = try body catch { case e: Throwable => failures.add(e) }
+    val writer = thread((1 until writes).foreach { i =>
+      guarded(LwwSink.upsertBatch(batch(i), i.toLong, root, "feed", "tick", pk))
+    })
+    val readers = (0 until 2).map(_ => thread((0 until 15).foreach { _ =>
+      guarded(seen.add(LwwSink.read(spark, root, "feed", "tick").collect().length.toLong))
+    }))
+    go.countDown()
+    (writer +: readers).foreach(_.join())
     import scala.jdk.CollectionConverters._
-    val bucket = java.nio.file.Files.list(table).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("kb=")).toSeq.head
-    java.nio.file.Files.move(bucket, table.resolve(
-      "_old_" + bucket.getFileName.toString))
-    // the replayed micro-batch must merge against the recovered history,
-    // not rebuild the bucket from itself
-    LwwSink.upsertBatch(
-      Seq(("EURUSD", 200L, 1.09, 30)).toDF("symbol", "time", "price", "volume"),
-      1L, root, "feed", "tick", pk)
-    val out = LwwSink.read(spark, root, "feed", "tick")
-      .collect().map(r => (r.getLong(1), r.getInt(3))).sortBy(_._1)
-    assert(out === Seq((100L, 10), (200L, 30)),
-      "prior history must survive the crash + replay")
+    assert(failures.isEmpty, failures.asScala.mkString("\n"))
+    assert(seen.size === 30)
+    assert(seen.asScala.forall(published.contains), seen.asScala.toSeq.distinct.sorted)
+    assert(LwwSink.read(spark, root, "feed", "tick").count() === 20L * writes)
   }
 
   test("a batch rewrites only the buckets its keys hash into") {
@@ -121,11 +154,10 @@ class LwwSinkSuite extends SparkSpec {
     val pk = Seq("symbol", "time", "price")
     // simulate a table created under an older, smaller bucket count
     val table = java.nio.file.Paths.get(LwwSink.tablePath(root, "feed", "tick"))
-    Files.createDirectories(table)
-    Files.write(table.resolve("_nbuckets"), "4".getBytes)
     val wide = (0 until 100)
       .map(i => (s"SYM$i", 100L, 1.0 + i, i))
       .toDF("symbol", "time", "price", "volume")
+    create(table.toString, wide, 4)
     LwwSink.upsertBatch(wide, 0L, root, "feed", "tick", pk)
     import scala.jdk.CollectionConverters._
     val kbDirs = Files.list(table).iterator().asScala
@@ -137,13 +169,12 @@ class LwwSinkSuite extends SparkSpec {
     assert(LwwSink.read(spark, root, "feed", "tick").count() === 100)
   }
 
-  test("crash BETWEEN bucket swaps: replay converges per bucket (r8 ask #5)") {
-    // The scaladoc admits a mid-upsert crash "can leave SOME buckets
-    // merged and others not" — this kills the upsert after the FIRST
-    // bucket swap via the fault-injection seam and proves the replayed
-    // micro-batch (same batchId, as a checkpointed stream re-delivers
-    // it) converges every bucket to the clean run's LWW state:
-    // idempotence per bucket, not just per batch.
+  test("crash between bucket moves, before the publish: old table, then replay") {
+    // kills the upsert after the FIRST bucket moves into its new
+    // generation, via the fault-injection seam: until the manifest is
+    // published the table must read as before the batch, and the replayed
+    // micro-batch (same batchId, as a checkpointed stream re-delivers it)
+    // must leave exactly what a clean run leaves
     val pk = Seq("symbol", "time", "price")
     def batch0 = (0 until 120)
       .map(i => (s"SYM$i", 100L, 1.0 + i, i))
@@ -151,6 +182,15 @@ class LwwSinkSuite extends SparkSpec {
     def batch1 = (0 until 120)
       .map(i => (s"SYM$i", 100L, 1.0 + i, i + 1000)) // rewrite every PK
       .toDF("symbol", "time", "price", "volume")
+    def stateOf(root: String) =
+      LwwSink.read(spark, root, "feed", "tick").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .sortBy(t => (t._1, t._2, t._3)).toSeq
+    def tableOf(root: String) = Paths.get(LwwSink.tablePath(root, "feed", "tick"))
+    def names(root: String) = Fs.list(tableOf(root)).map(_.getFileName.toString)
+    def generations(root: String) = Fs.walk(tableOf(root))
+      .map(p => tableOf(root).relativize(p).toString)
+      .filter(_.matches("kb=\\d+/g\\d+")).toSet
 
     val clean = Files.createTempDirectory("lww_clean").toString
     LwwSink.upsertBatch(batch0, 0L, clean, "feed", "tick", pk)
@@ -158,33 +198,29 @@ class LwwSinkSuite extends SparkSpec {
 
     val crashed = Files.createTempDirectory("lww_crash").toString
     LwwSink.upsertBatch(batch0, 0L, crashed, "feed", "tick", pk)
-    var swapped = 0
-    LwwSink.afterBucketSwap = { _ =>
-      swapped += 1
-      if (swapped == 1) throw new RuntimeException("injected crash")
+    val before = stateOf(crashed)
+    var moved = 0
+    LwwSink.afterBucketMove = { _ =>
+      moved += 1
+      if (moved == 1) throw new RuntimeException("injected crash")
     }
     try intercept[RuntimeException] {
       LwwSink.upsertBatch(batch1, 1L, crashed, "feed", "tick", pk)
-    } finally LwwSink.afterBucketSwap = _ => ()
-    assert(swapped === 1, "the crash must land between bucket swaps")
-    // partial state is real: the stranded staging dir is still there
-    val table = java.nio.file.Paths.get(
-      LwwSink.tablePath(crashed, "feed", "tick"))
-    import scala.jdk.CollectionConverters._
-    def names = Files.list(table).iterator().asScala
-      .map(_.getFileName.toString).toSeq
-    assert(names.exists(_.startsWith("_tmp_b")), "crash left staging")
+    } finally LwwSink.afterBucketMove = _ => ()
+    assert(moved === 1, "the crash must land between bucket moves")
+    // partial state is real: staging and one unpublished generation
+    assert(names(crashed).exists(_.startsWith("_tmp_b")), "crash left staging")
+    assert(generations(crashed).count(_.endsWith("/g2")) === 1)
+    assert(stateOf(crashed) === before, "the unpublished batch must not be visible")
 
     // the checkpointed stream re-delivers the SAME batch
     LwwSink.upsertBatch(batch1, 1L, crashed, "feed", "tick", pk)
-    def stateOf(root: String) =
-      LwwSink.read(spark, root, "feed", "tick").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._2, t._3)).toSeq
     assert(stateOf(crashed) === stateOf(clean),
-      "replay must converge the partially-swapped table to the clean state")
-    assert(!names.exists(_.startsWith("_old_kb=")), "no aside remnants")
-    assert(!names.exists(_.startsWith("_tmp_b")), "staging cleaned up")
+      "replay must converge the crashed table to the clean state")
+    assert(!names(crashed).exists(_.startsWith("_tmp_b")), "staging cleaned up")
+    assert(generations(crashed) === generations(clean),
+      "no generation beyond the current and the previous manifest's")
+    assert(names(crashed).toSet === names(clean).toSet)
   }
 
   test("re-delivered micro-batch is a no-op (exactly-once per key)") {
@@ -232,12 +268,9 @@ class LwwSinkSuite extends SparkSpec {
   private val symbols = (0 until 200).map(i => s"SYM$i") ++ Seq("", "日本語é")
   private def fill(root: String, nb: Option[Int]): String = {
     val table = LwwSink.tablePath(root, "feed", "tick")
-    nb.foreach { n =>
-      Files.createDirectories(Paths.get(table))
-      Files.write(Paths.get(s"$table/_nbuckets"), n.toString.getBytes)
-    }
     def batch(ts: Seq[Long], v: Int) = (for (s <- symbols; t <- ts)
       yield (s, t, 1.5, v)).toDF("symbol", "time", "price", "volume")
+    nb.foreach(create(table, batch(Nil, 0), _))
     LwwSink.upsertBatch(batch(Seq(100L, 200L), 1), 0L, root, "feed", "tick", pk)
     LwwSink.upsertBatch(batch(Seq(200L, 300L), 2), 1L, root, "feed", "tick", pk)
     table
@@ -255,17 +288,18 @@ class LwwSinkSuite extends SparkSpec {
   test("a pruned read returns the same rows as a full scan, for every symbol") {
     GraftExtensions.register(spark)
     val root = Files.createTempDirectory("lww_prune").toString
-    // pinned at a count other than NumBuckets: the rule must use the pin
+    // created at a count other than NumBuckets: the rule must use the table's
     val table = fill(root, Some(7))
-    val raw = spark.read.parquet(table).drop("_batch_id", "kb")
-    def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    val all = LwwSink.read(spark, root, "feed", "tick").collect().toSeq
+    def rowsOf(rs: Seq[org.apache.spark.sql.Row]) = rs.map(_.toSeq).sortBy(_.toString)
     symbols.foreach { s =>
       val pruned = LwwSink.read(spark, root, "feed", "tick").filter(col("symbol") === s)
       assert(kbFilters(pruned).map(_.sql) === Seq(s"(kb = ${bucket(s, 7)})"), s"symbol '$s'")
-      val want = rowsOf(raw.filter(col("symbol") === s))
+      val want = rowsOf(all.filter(_.getString(0) == s))
       assert(want.size === 3, s"fixture rows for '$s'")
-      assert(rowsOf(pruned) === want, s"symbol '$s'")
+      assert(rowsOf(pruned.collect().toSeq) === want, s"symbol '$s'")
     }
+    val raw = spark.read.parquet(table)
     assert(kbFilters(raw.filter(col("symbol") === "SYM1")).isEmpty,
       "a raw parquet read of the table is not a sink read and is not pruned")
   }
@@ -304,18 +338,6 @@ class LwwSinkSuite extends SparkSpec {
     ).foreach { p =>
       assert(kbFilters(sink.filter(p)).isEmpty, s"no kb filter for $p")
     }
-  }
-
-  test("a bucket restored from its aside dir is found by a pruned read") {
-    GraftExtensions.register(spark)
-    val root = Files.createTempDirectory("lww_prune_rec").toString
-    val table = Paths.get(fill(root, None))
-    val n = bucket("SYM3", LwwSink.NumBuckets)
-    // a crash in the swap window leaves the bucket at its aside name
-    Files.move(table.resolve(s"kb=$n"), table.resolve(s"_old_kb=$n"))
-    val out = LwwSink.read(spark, root, "feed", "tick")
-      .filter(col("symbol") === "SYM3").collect()
-    assert(out.length === 3)
   }
 
   test("a sink read plans with no job; a filtered collect runs exactly one") {
@@ -376,20 +398,30 @@ class LwwSinkSuite extends SparkSpec {
     assert(out.schema.forall(_.nullable), out.schema)
   }
 
-  test("a table written before the layout pins is read from a footer and pinned by its next batch") {
-    GraftExtensions.register(spark)
+  test("a table without a manifest fails loudly on read and on upsert") {
     val root = Files.createTempDirectory("lww_legacy").toString
-    val table = fill(root, None)
-    Seq("_schema", "_bucket_key").foreach(f => Files.delete(Paths.get(s"$table/$f")))
-    def sym1 = LwwSink.read(spark, root, "feed", "tick").filter(col("symbol") === "SYM1")
-    assert(sym1.columns.toSeq === Seq("symbol", "time", "price", "volume"))
-    assert(sym1.collect().length === 3)
-    assert(kbFilters(sym1).isEmpty, "no pinned key, no pruning")
-    LwwSink.upsertBatch(Seq(("SYM1", 400L, 1.5, 3)).toDF("symbol", "time", "price", "volume"),
-      2L, root, "feed", "tick", pk)
-    assert(Files.exists(Paths.get(s"$table/_schema")) &&
-      Files.exists(Paths.get(s"$table/_bucket_key")))
-    assert(kbFilters(sym1).size === 1)
-    assert(sym1.collect().length === 4)
+    val table = Paths.get(LwwSink.tablePath(root, "feed", "tick"))
+    // the layouts before the manifest: files directly under kb=N, and the
+    // pin files a table whose batches were all empty held alone
+    val layouts = Seq[() => Unit](
+      () => rows(10).withColumn("_batch_id", lit(0L))
+        .write.parquet(table.resolve("kb=3").toString),
+      () => Seq("_nbuckets", "_bucket_key", "_schema")
+        .foreach(f => Files.write(table.resolve(f), "x".getBytes)))
+    layouts.foreach { write =>
+      Fs.deleteTree(table)
+      Files.createDirectories(table)
+      write()
+      val before = Fs.walk(table).map(_.toString).toSet
+      Seq[() => Unit](
+        () => LwwSink.read(spark, root, "feed", "tick"),
+        () => LwwSink.upsertBatch(rows(20), 1L, root, "feed", "tick", pk)
+      ).foreach { call =>
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains(table.toString) &&
+          e.getMessage.contains("fresh sink root"), e.getMessage)
+      }
+      assert(Fs.walk(table).map(_.toString).toSet === before, "the table is untouched")
+    }
   }
 }
