@@ -252,8 +252,7 @@ object ScaleProbe {
       // mismatched data, no error, wrong ratios. Content-addressed MD5
       // tag, not String.hashCode: a 32-bit collision across dirs would
       // silently reuse the wrong layout with no error — the same
-      // hazard join_bucketed_colocated/scan_partition_pruned fixed
-      // (ADVICE r9).
+      // hazard Bucketing's catalog names guard against (ADVICE r9).
       val dirTag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(6)
         .map(b => f"$b%02x").mkString

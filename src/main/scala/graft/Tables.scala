@@ -33,24 +33,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Tables {
 
-  // Fixture files are immutable, so the analyzed read plan can be reused
-  // across the 60+ queries of a Verify/Bench run — re-listing the path
-  // and re-reading parquet footers per query is pure overhead. Keyed by
-  // session too (plans are session-bound), and LRU-bounded so a
-  // multi-session driver can't accumulate stopped sessions' analyzed
-  // plans forever (VERDICT r8): 64 covers several concurrent
-  // sessions × scale dirs × the 11 fixture tables before anything
-  // ages out, and re-reading an evicted footer is cheap.
-  private[graft] val MaxEntries = 64
-  // coldExempt: this caches ANALYZED READ PLANS (substrate), not
-  // results — Bench's cold eviction must not add footer re-reads as
-  // fake operator cost (see SessionCache object doc)
-  private val cache =
-    new graft.util.SessionCache[DataFrame](MaxEntries, coldExempt = true)
-  private[graft] def cacheSize: Int = cache.size
-
+  /** The analyzed read plan, reused across a run's queries: re-listing
+    * the path and re-reading footers per query is pure overhead. An
+    * `input` memo, so cold eviction never re-times a footer read.
+    */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    cache.getOrElseUpdate(spark, s"$dir/$name") {
+    graft.util.SessionCache.input(spark, dir, s"table/$name") {
       val df = spark.read.parquet(s"$dir/$name.parquet")
       name match {
         case "events" => normalizeTs(df)

@@ -82,7 +82,7 @@ object Betweenness {
     val pv = adjP.select(col("src")).distinct()
       .orderBy(col("src")).limit(pivots)
       .select(col("src").as("p"))
-    val f0 = pin(broadcast(pv)
+    val f0 = pin(pv
       .select(col("p"), col("p").as("node"), lit(1L).as("sig")))
     // forward: byLevel(l) = (p, node, sig) discovered at distance l
     val byLevel = scala.collection.mutable.ArrayBuffer(f0)

@@ -30,40 +30,29 @@ import org.apache.spark.sql.functions._
   */
 object BpeTrain {
 
-  /** Driver-side merge-table artifact cache, keyed by
-    * (corpus dir, rounds, safe-pair guard). The merge table is the
-    * ARTIFACT training exists to produce (≤ `rounds` tiny rows); at
-    * 100 TB you train once and ship this table to every tokenize job —
-    * so the tokenizer face ([[cachedMerges]]) must not re-run the most
-    * expensive pipeline in the suite to re-derive it (r5 review). Keys
-    * are fixture/test directories, which are immutable for the life of
-    * the process; the trainer itself always recomputes (it IS the
-    * training measurement) and refreshes the entry it produces.
+  /** Tokenizer-side merge table for the corpus of fixture `dir`: the
+    * merge table is the ARTIFACT training exists to produce (≤ `rounds`
+    * tiny rows); at 100 TB you train once and ship this table to every
+    * tokenize job, so the tokenizer must not re-run the most expensive
+    * pipeline in the suite to re-derive it (r5 review). Trains on a
+    * miss; a `SessionCache.result`, so a cold run pays the training.
     */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, String), Seq[(Long, String, Long)]]
-
-  /** Tokenizer-side read-through: reuse the merge table if any trainer
-    * run over the same (dir, rounds, guard) already produced it;
-    * otherwise train once and cache.
-    */
-  def cachedMerges(docsIn: DataFrame, idCol: String, textCol: String,
-      rounds: Int, safePairRe: String, dirKey: String): Seq[(Long, String, Long)] =
-    mergeCache.getOrElseUpdate((dirKey, rounds, safePairRe),
+  def cachedMerges(docsIn: DataFrame, dir: String, idCol: String,
+      textCol: String, rounds: Int,
+      safePairRe: String): Seq[(Long, String, Long)] =
+    graft.util.SessionCache.result(docsIn.sparkSession, dir,
+        s"bpe/$idCol/$textCol/$rounds/$safePairRe")(
       merges(docsIn, idCol, textCol, rounds, safePairRe))
 
   /** @return merge table (merge_rank: long, pair: string, pair_n: long),
     *         ≤ `rounds` rows
     */
   def apply(docsIn: DataFrame, idCol: String, textCol: String, rounds: Int,
-      safePairRe: String, dirKey: Option[String] = None): DataFrame = {
+      safePairRe: String): DataFrame = {
     val s = docsIn.sparkSession
     import s.implicits._
-    val table = merges(docsIn, idCol, textCol, rounds, safePairRe)
-    // a fresh training run is the most authoritative value for the key —
-    // refresh so a later tokenize reuses it instead of retraining
-    dirKey.foreach(k => mergeCache.update((k, rounds, safePairRe), table))
-    table.toDF("merge_rank", "pair", "pair_n")
+    merges(docsIn, idCol, textCol, rounds, safePairRe)
+      .toDF("merge_rank", "pair", "pair_n")
   }
 
   /** Ranked-list horizon per rollup: candidates below it are unknown,

@@ -2,9 +2,7 @@ package graft.ops
 
 import java.nio.file.Files
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Bucketed-table support: the storage-level answer to "fact ⋈ fact on
   * the same key, every day" at 100 TB. Writing both sides bucketed (and
@@ -21,33 +19,38 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Offline emulation detail: bucketed tables must live in a catalog
   * (`saveAsTable`); this helper writes EXTERNAL parquet tables under a
-  * temp dir into the session's in-memory catalog, memoized per
-  * (session, name) so repeated query runs (bench, verify) pay the
-  * bucketing write once.
+  * temp dir into the session's in-memory catalog, memoized as a
+  * `SessionCache.input` per (session, fixture dir, name) so repeated
+  * query runs (bench, verify) pay the bucketing write once.
   */
 object Bucketing {
 
-  private val created = TrieMap.empty[(SparkSession, String), String]
-
-  /** Ensure `df` exists as a bucketed external parquet table; returns
-    * the catalog table name to read (`spark.table(...)`).
+  /** Ensure `df`, derived from fixture `dir`, exists as a bucketed
+    * external parquet table; returns the catalog table name to read
+    * (`spark.table(...)`). The name carries a content-addressed tag of
+    * `dir` (a 32-bit hash could collide across dirs and share one table),
+    * so two fixture dirs never write the same catalog entry.
     */
   def ensureBucketed(
       df: DataFrame,
+      dir: String,
       name: String,
       key: String,
       buckets: Int): String = {
     val s = df.sparkSession
-    created.getOrElseUpdate((s, name), {
-      val dir = Files.createTempDirectory(s"graft_bkt_$name")
-      graft.source.SpoolWriter.deleteAtExit(dir)
-      val path = dir.toString
-      s.sql(s"DROP TABLE IF EXISTS $name")
+    graft.util.SessionCache.input(s, dir, s"bucketed/$name") {
+      val tag = java.security.MessageDigest.getInstance("MD5")
+        .digest(dir.getBytes("UTF-8")).take(6)
+        .map(b => f"$b%02x").mkString
+      val table = s"graft_bkt_${name}_$tag"
+      val path = Files.createTempDirectory(s"graft_bkt_$name")
+      graft.source.SpoolWriter.deleteAtExit(path)
+      s.sql(s"DROP TABLE IF EXISTS $table")
       df.write.format("parquet").mode(SaveMode.Overwrite)
         .bucketBy(buckets, key).sortBy(key)
-        .option("path", path)
-        .saveAsTable(name)
-      name
-    })
+        .option("path", path.toString)
+        .saveAsTable(table)
+      table
+    }
   }
 }

@@ -2,9 +2,7 @@ package graft.ops
 
 import java.nio.file.Files
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Date-partitioned table layout — the other half of the 100 TB storage
@@ -16,26 +14,25 @@ import org.apache.spark.sql.functions._
   * the time axis the reference could not prune on at all (Cassandra
   * scans the whole partition, main.rs:87-88).
   *
-  * Offline emulation: memoized write of the fixture into a temp dir,
-  * so repeated query runs (bench best-of-2, verify) pay the layout
-  * write once — the same seam as [[Bucketing.ensureBucketed]].
+  * Offline emulation: a write of the fixture into a temp dir, memoized
+  * as a `SessionCache.input` so repeated query runs (bench best-of-2,
+  * verify) pay the layout write once — the same seam as
+  * [[Bucketing.ensureBucketed]].
   */
 object DayPartitioned {
 
-  private val created = TrieMap.empty[(SparkSession, String), String]
-
-  /** Ensure `df` exists day-partitioned on `tsCol`'s date; returns the
-    * table path. Adds a `day` DateType partition column.
+  /** Ensure `df`, derived from fixture `dir`, exists day-partitioned on
+    * `tsCol`'s date; returns the table path. Adds a `day` DateType
+    * partition column.
     */
-  def ensure(df: DataFrame, name: String, tsCol: String): String = {
-    val s = df.sparkSession
-    created.getOrElseUpdate((s, name), {
-      val dir = Files.createTempDirectory(s"graft_day_$name")
-      graft.source.SpoolWriter.deleteAtExit(dir)
+  def ensure(df: DataFrame, dir: String, name: String,
+      tsCol: String): String =
+    graft.util.SessionCache.input(df.sparkSession, dir, s"day/$name") {
+      val path = Files.createTempDirectory(s"graft_day_$name")
+      graft.source.SpoolWriter.deleteAtExit(path)
       df.withColumn("day", to_date(col(tsCol)))
         .write.mode(SaveMode.Overwrite)
-        .partitionBy("day").parquet(dir.toString)
-      dir.toString
-    })
-  }
+        .partitionBy("day").parquet(path.toString)
+      path.toString
+    }
 }

@@ -53,7 +53,7 @@ object PcaPower {
 
   /** [[apply]] from an already-solved (loadings, ratio) pair — the
     * memoized-callers entry point (both registered PCA queries share
-    * one solve per (session, fixture) via the pack's SessionCache;
+    * one solve per (session, fixture) via a `SessionCache.result` memo;
     * unmemoized, each invocation re-ran the two moment scans).
     */
   def fromSolved(spark: org.apache.spark.sql.SparkSession,

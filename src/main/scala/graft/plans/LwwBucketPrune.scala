@@ -20,9 +20,9 @@ import org.apache.spark.sql.types._
   * Cassandra partition.
   *
   * Only relations [[graft.sink.LwwSink.read]] built are touched: it tags
-  * them with the table's PINNED bucket key and bucket count ([[Layout]]),
-  * so a raw parquet read of the same directory, or a table whose key
-  * was never pinned, plans as before. The literal's type must equal the
+  * them with the bucket key and bucket count from the table's
+  * `_manifest` ([[Layout]]), so a raw parquet read of the same directory
+  * plans as before. The literal's type must equal the
   * key column's, and the key type must be one whose SQL equality is
   * byte equality — floating point (`0.0 = -0.0`) and non-binary string
   * collations (`'a' = 'A'`) can match values that hash apart. Any other

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryPack, Tables}
 import graft.ops.{ConnectedComponents, GraphIter, PageRank, Scc}
+import graft.util.SessionCache
 
 /** Graph-shaped operators over the `events` fixture. The bipartite
   * user↔item interaction graph (users purchase items, items are clicked
@@ -86,16 +87,14 @@ object GraphQueries extends QueryPack {
   private def coAdj(s: SparkSession, dir: String): DataFrame =
     GraphIter.undirected(coEdges(s, dir))
 
-  /** Pinned-projection memo. Bench invokes every builder twice per run
-    * and seven graph queries pin the same (or derived) projections —
-    * a FRESH `localCheckpoint` per invocation accumulated pinned
-    * copies of the densified ~65k-edge projection in long-lived JVMs
-    * (ADVICE r8, graph_triangles; the sibling sites shared the shape).
-    * One pinned copy per (session, dir, projection), LRU-bounded with
-    * release-on-evict — 16 covers sessions × scale dirs × the four
-    * projections before anything ages out. Fixture inputs are
-    * immutable, so reuse is sound; at cluster scale the same memo
-    * holds reliable-storage checkpoints.
+  /** Pinned projections are `SessionCache.result` memos. Bench invokes
+    * every builder twice per run and seven graph queries pin the same
+    * (or derived) projections — a FRESH `localCheckpoint` per
+    * invocation accumulated pinned copies of the densified ~65k-edge
+    * projection in long-lived JVMs (ADVICE r8, graph_triangles; the
+    * sibling sites shared the shape). One pinned copy per (session,
+    * dir, projection), released when the memo drops it; at cluster
+    * scale the same memo holds reliable-storage checkpoints.
     *
     * Bench-semantics consequence, stated openly (r9 review): queries
     * built on these memos amortize the pinned substrate across the
@@ -106,15 +105,12 @@ object GraphQueries extends QueryPack {
     * cost lives in ScaleProbe's graph probes, which rebuild and
     * release the projection per run.
     */
-  private val pinned = new graft.util.SessionCache[DataFrame](16,
-    df => org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(df))
-
   private def coEdgesPinned(s: SparkSession, dir: String): DataFrame =
-    pinned.getOrElseUpdate(s, s"coEdges/$dir")(
+    SessionCache.result(s, dir, "coEdges")(
       coEdges(s, dir).localCheckpoint())
 
   private def coAdjPinned(s: SparkSession, dir: String): DataFrame =
-    pinned.getOrElseUpdate(s, s"coAdj/$dir")(
+    SessionCache.result(s, dir, "coAdj")(
       GraphIter.undirected(coEdgesPinned(s, dir)).localCheckpoint())
 
   /** LPA labels over the pinned co-adjacency — shared by
@@ -123,7 +119,7 @@ object GraphQueries extends QueryPack {
     * change either row set.
     */
   private def labelsPinned(s: SparkSession, dir: String): DataFrame =
-    pinned.getOrElseUpdate(s, s"labels/$dir")(
+    SessionCache.result(s, dir, "labels")(
       GraphIter.labelProp(coAdjPinned(s, dir), Rounds).localCheckpoint())
 
   /** Pinned directed bipartite edge list (round-16 optimization): the
@@ -138,14 +134,14 @@ object GraphQueries extends QueryPack {
     * cannot change any row set.
     */
   private def edgesPinned(s: SparkSession, dir: String): DataFrame =
-    pinned.getOrElseUpdate(s, s"edges/$dir")(
+    SessionCache.result(s, dir, "edges")(
       edges(s, dir).localCheckpoint())
 
   /** Symmetrized bipartite adjacency for BFS — distinct projection
     * family from the co-engagement graph, same pin discipline.
     */
   private def bipAdjPinned(s: SparkSession, dir: String): DataFrame =
-    pinned.getOrElseUpdate(s, s"bipAdj/$dir") {
+    SessionCache.result(s, dir, "bipAdj") {
       val e = edgesPinned(s, dir)
       e.select(col("src"), col("dst"))
         .union(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -186,7 +182,7 @@ object GraphQueries extends QueryPack {
     * release-on-evict owns it).
     */
   private def sccPinned(s: SparkSession, dir: String): DataFrame =
-    pinned.getOrElseUpdate(s, s"scc/$dir")(Scc(itemNextEdges(s, dir)))
+    SessionCache.result(s, dir, "scc")(Scc(itemNextEdges(s, dir)))
 
   /** Topological layering of the SCC condensation with member counts —
     * (scc_id, layer, n_members) — shared by graph_topo_layers and
@@ -198,7 +194,7 @@ object GraphQueries extends QueryPack {
     */
   private def condensationLayers(s: SparkSession, dir: String): DataFrame = {
     val labels = sccPinned(s, dir)
-    val layers = pinned.getOrElseUpdate(s, s"topoLayers/$dir") {
+    val layers = SessionCache.result(s, dir, "topoLayers") {
       val ce = itemNextEdges(s, dir)
         .join(labels.withColumnRenamed("node", "src")
           .withColumnRenamed("scc_id", "sa"), Seq("src"))
@@ -408,7 +404,7 @@ object GraphQueries extends QueryPack {
     // intermediates released once the final frame lands.
     "graph_ktruss" -> ((s, dir) => {
       import org.apache.spark.sql.graftbridge.Bridge
-      pinned.getOrElseUpdate(s, s"ktruss/$dir") {
+      SessionCache.result(s, dir, "ktruss") {
         def degOf(e: DataFrame) = e.select(col("ua").as("u"))
           .union(e.select(col("ub").as("u")))
           .groupBy("u").agg(count(lit(1)).as("d"))
@@ -513,7 +509,7 @@ object GraphQueries extends QueryPack {
     "rec_item_cf" -> ((s, dir) => {
       // FOUR consumers (both sim sides, the scoring join, the owned
       // anti-join) — pin the distinct (user, item) frame once
-      val ui = pinned.getOrElseUpdate(s, s"purchItems/$dir")(
+      val ui = SessionCache.result(s, dir, "purchItems")(
         Tables(s, dir, "events")
           .filter(col("event_type") === "purchase")
           .select(col("user_id").as("u"),
@@ -664,7 +660,7 @@ object GraphQueries extends QueryPack {
       // 9 peel rounds (≈30 joins) and stalls Catalyst — the re-analysis
       // blowup the PageRank scaladoc documents, hit live here. Result
       // memoized; level pins released once it materializes.
-      pinned.getOrElseUpdate(s, s"coreness/$dir") {
+      SessionCache.result(s, dir, "coreness") {
         val adj0 = coAdjPinned(s, dir)
         val all = adj0.select(col("u").as("node")).distinct()
         val levelPins =
@@ -816,7 +812,7 @@ object GraphQueries extends QueryPack {
     // registration accumulated pinned frames per invocation in a
     // long-lived session (ADVICE r9).
     "graph_hits" -> ((s, dir) =>
-      pinned.getOrElseUpdate(s, s"hits/$dir") {
+      SessionCache.result(s, dir, "hits") {
         val ev = Tables(s, dir, "events")
           .withColumn("k",
             get_json_object(col("props"), "$.k").cast("long"))
@@ -843,7 +839,7 @@ object GraphQueries extends QueryPack {
     // apparent prefix re-execution in the landed union is absorbed by
     // exchange/broadcast reuse.
     "graph_walk_visits" -> ((s, dir) =>
-      pinned.getOrElseUpdate(s, s"walkVisits/$dir")(
+      SessionCache.result(s, dir, "walkVisits")(
         graft.ops.GraphWalk.visitCounts(
           coAdjPinned(s, dir)
             .select(col("u").as("src"), col("v").as("dst")),
@@ -862,7 +858,7 @@ object GraphQueries extends QueryPack {
     // (Scc discipline) and the memo's release-on-evict is its release
     // path — the graph_hits pattern
     "graph_betweenness" -> ((s, dir) =>
-      pinned.getOrElseUpdate(s, s"betweenness/$dir")(
+      SessionCache.result(s, dir, "betweenness")(
         graft.ops.Betweenness(edgesPinned(s, dir), BcPivots, BcDepth))),
 
     // Weighted single-source shortest paths — bounded Bellman-Ford
@@ -936,8 +932,12 @@ object GraphQueries extends QueryPack {
       .orderBy(col("src")).limit(BcPivots)
       .select(col("src").as("p"), col("src").as("node"))
       .withColumn("dist", lit(0L))
-    val d3 = (1 to 3).foldLeft(broadcast(seeds).as("seeds0")) { (d, _) =>
-      d.join(adj, d("node") === adj("src"))
+    val d3 = (1 to 3).foldLeft(seeds.as("seeds0")) { (d, round) =>
+      // round 1 probes from the pivot seeds: broadcast them. A hint on
+      // `d` itself would also sit under the union below, where Spark
+      // drops it with a HintErrorLogger warning
+      val probe = if (round == 1) broadcast(d) else d
+      probe.join(adj, probe("node") === adj("src"))
         .select(col("p"), col("dst").as("node"), (col("dist") + 1L).as("dist"))
         .unionByName(d.select(col("p"), col("node"), col("dist")))
         .groupBy("p", "node").agg(min(col("dist")).as("dist"))
@@ -953,7 +953,7 @@ object GraphQueries extends QueryPack {
     * checkpoint; the memo's release-on-evict owns it).
     */
   private def hyperballPinned(s: SparkSession, dir: String): DataFrame =
-    pinned.getOrElseUpdate(s, s"hyperball/$dir")(
+    SessionCache.result(s, dir, "hyperball")(
       graft.ops.HyperBall(edgesPinned(s, dir), HbRounds))
 
   /** graph_hyperball_nf ball radius (unrolled in the oracle). */

@@ -145,16 +145,8 @@ object ReferenceQueries extends QueryPack {
     // asserts the day predicate lands in PartitionFilters (pruning),
     // not merely PushedFilters (row-group skipping).
     "scan_partition_pruned" -> ((s, dir) => {
-      import graft.ops.DayPartitioned
-      // content-addressed tag, not abs(hashCode): a 32-bit collision
-      // across fixture dirs would silently reuse the FIRST dir's
-      // memoized layout (wrong data, no error), and abs(Int.MinValue)
-      // stays negative (the join_bucketed_colocated fix)
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(6)
-        .map(b => f"$b%02x").mkString
-      val path = DayPartitioned.ensure(Tables(s, dir, "events"),
-        s"events_$tag", "ts")
+      val path = graft.ops.DayPartitioned.ensure(Tables(s, dir, "events"),
+        dir, "events", "ts")
       s.read.parquet(path)
         .filter(col("day") >= lit("2024-01-08").cast("date") &&
           col("day") <= lit("2024-01-14").cast("date"))

@@ -334,19 +334,12 @@ object RelationalQueries extends QueryPack {
     // write time; PlanAuditSuite asserts the join runs exchange-free.
     "join_bucketed_colocated" -> ((s, dir) => {
       import graft.ops.Bucketing
-      // content-addressed tag, not String.hashCode: 32-bit collisions
-      // across fixture dirs would silently share one bucketed table
-      // (wrong rows, no error), and abs(Int.MinValue) stays negative,
-      // breaking the generated identifier
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(6)
-        .map(b => f"$b%02x").mkString
       val li = Bucketing.ensureBucketed(
         t(s, dir, "lineitem").select("l_orderkey", "l_quantity"),
-        s"graft_bkt_li_$tag", "l_orderkey", 8)
+        dir, "li", "l_orderkey", 8)
       val ord = Bucketing.ensureBucketed(
         t(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
-        s"graft_bkt_ord_$tag", "o_orderkey", 8)
+        dir, "ord", "o_orderkey", 8)
       s.table(li).join(s.table(ord),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_orderpriority")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryPack, Tables}
 import graft.ops.VectorOps
+import graft.util.SessionCache
 
 /** Approximate-nearest-neighbor search over the `embeddings` fixture
   * (64-dim float vectors).
@@ -50,13 +51,10 @@ object SimilarityQueries extends QueryPack {
   }
 
   /** Pinned exact-arm ranking (q_id, n_id) for the eval queries —
-    * 50 rows, released on LRU evict.
+    * 50 rows, a `SessionCache.result` memo.
     */
-  private val pinned = new graft.util.SessionCache[DataFrame](8,
-    df => org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(df))
-
   private def brutePinned(s: SparkSession, dir: String): DataFrame =
-    pinned.getOrElseUpdate(s, s"brute/$dir")(
+    SessionCache.result(s, dir, "brute")(
       queries("ann_brute_topk")(s, dir).localCheckpoint())
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

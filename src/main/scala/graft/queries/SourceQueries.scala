@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryPack, Tables}
+import graft.util.SessionCache
 
 /** Source-format breadth: the engine's batch read paths beyond parquet
   * (JSON lines, CSV, ORC), each proved by a ROUND TRIP — project the
@@ -36,20 +37,6 @@ object SourceQueries extends QueryPack {
 
   private val Schema =
     "event_id BIGINT, user_id BIGINT, event_type STRING, cents BIGINT"
-
-  // session+dir-memoized DPP fact layout (see join_dpp_runtime) — the
-  // repo-standard bounded LRU (the last cache still on the raw
-  // identityHashCode-tuple pattern the other packs migrated off, r9
-  // review): a stopped session's entry ages out instead of pinning the
-  // session for the JVM lifetime, and identity is compared with `eq`,
-  // not a 32-bit hash. No onEvict: the value is a path string; the
-  // directory itself is reclaimed by the deleteAtExit hook.
-  // coldExempt: the value is an on-disk layout PATH (write-once lake
-  // substrate, excluded from timed numbers by the join_dpp_runtime
-  // design) — cold eviction would re-time a parquet rewrite, not the
-  // pruned join under test
-  private val dppLayouts =
-    new graft.util.SessionCache[String](8, coldExempt = true)
 
   private def work(tag: String) = {
     val w = Files.createTempDirectory(s"graft_src_$tag")
@@ -189,14 +176,14 @@ object SourceQueries extends QueryPack {
     // fact scan; Spark's DPP builds the month list from the dim at
     // RUNTIME and skips every other partition's files. PlanAuditSuite
     // pins `dynamicpruning` in the fact scan. The layout is ensured
-    // ONCE per session (a lake fact table is written once and joined
-    // daily — the weak-scaling probe's dppJoin made this argument
-    // first, and the r8 bench showed the repeated rewrite was pure
-    // disk-variance noise in the timed number: 3.6→5.2s round-over-
-    // round with identical code); the oracle computes the join from
-    // the raw fixture.
+    // ONCE per session, a `SessionCache.input` memo (a lake fact table
+    // is written once and joined daily — the weak-scaling probe's
+    // dppJoin made this argument first, and the r8 bench showed the
+    // repeated rewrite was pure disk-variance noise in the timed
+    // number: 3.6→5.2s round-over-round with identical code); the
+    // oracle computes the join from the raw fixture.
     "join_dpp_runtime" -> ((s, dir) => {
-      val path = dppLayouts.getOrElseUpdate(s, dir) {
+      val path = SessionCache.input(s, dir, "dppLayout") {
         val p = work("dpp")
         Tables(s, dir, "lineitem")
           .withColumn("ship_month",

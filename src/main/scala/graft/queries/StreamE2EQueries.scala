@@ -12,6 +12,7 @@ import graft.{QueryPack, Tables}
 import graft.ops.LwwDedup
 import graft.sink.LwwSink
 import graft.streaming.Pipelines
+import graft.util.SessionCache
 
 /** The whole streaming path under the DuckDB oracle: spool (JSONL
   * envelopes derived from the `events` fixture) → [[graft.source
@@ -383,38 +384,12 @@ object StreamE2EQueries extends QueryPack {
     * prefix from timing (`Bench.scala` filters it; StreamBench times
     * the streaming paths with its own fresh-session discipline), but
     * any future harness that re-times stream rows in-session must
-    * evict first. The companion caveat (memo keyed on (session, dir)
-    * only, so an in-place fixture refresh mid-session served stale
-    * results) is CLOSED in round 15: [[lateKey]] folds the events
-    * fixture's newest mtime into the key, so a refreshed fixture
-    * misses the memo and re-runs the pipeline.
+    * evict first. An in-place fixture refresh misses the memo: its
+    * key carries the fixture dir's stamp (see `SessionCache`).
     */
-  private val lateMemo =
-    new graft.util.SessionCache[(DataFrame, Long)](4, _ => ())
-
-  /** Memo key for [[lateShared]], carrying the events fixture's newest
-    * mtime (the fixture runLateCommon's era derives from): a refreshed
-    * fixture changes the stamp and the stale entry ages out of the
-    * 4-slot cache. A missing/unreadable fixture stamps 0 — the
-    * subsequent read fails loudly on its own; the key must never be
-    * the thing that throws first.
-    */
-  private[graft] def lateKey(dir: String): String = {
-    val p = Paths.get(dir, "events.parquet")
-    val stamp =
-      try {
-        val self = Files.getLastModifiedTime(p).toMillis
-        if (Files.isDirectory(p))
-          graft.util.Fs.list(p).foldLeft(self)((m, f) =>
-            math.max(m, Files.getLastModifiedTime(f).toMillis))
-        else self
-      } catch { case _: Throwable => 0L }
-    s"late/$dir@$stamp"
-  }
-
   private def lateShared(
       s: SparkSession, dir: String): (DataFrame, Long) =
-    lateMemo.getOrElseUpdate(s, lateKey(dir))(runLateCommon(s, dir))
+    SessionCache.result(s, dir, "late")(runLateCommon(s, dir))
 
   /** WATERMARK DROP-COUNT AUDIT (round-12, VERDICT r11 task #6,
     * 21st streaming oracle row): `stream_e2e_late` certifies that the

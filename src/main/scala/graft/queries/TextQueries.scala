@@ -846,7 +846,7 @@ object TextQueries extends QueryPack {
     // hash-compared against a fully unrolled DuckDB CTE chain.
     "text_bpe_train" -> ((s, dir) =>
       graft.ops.BpeTrain(Tables(s, dir, "documents"), "doc_id", "text",
-        BpeTrainRounds, SafeTrainPairRe, dirKey = Some(dir))),
+        BpeTrainRounds, SafeTrainPairRe)),
 
     // Tokenizer APPLICATION (the other half of BPE training): the
     // learned merge table — driver metadata, ≤3 rows — folds into a
@@ -861,8 +861,8 @@ object TextQueries extends QueryPack {
     // most expensive pipeline in the suite).
     "text_bpe_apply" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
-      val merges = graft.ops.BpeTrain.cachedMerges(docs, "doc_id", "text",
-          BpeTrainRounds, SafeTrainPairRe, dirKey = dir)
+      val merges = graft.ops.BpeTrain.cachedMerges(docs, dir, "doc_id",
+          "text", BpeTrainRounds, SafeTrainPairRe)
         .sortBy(_._1)
       val applied = merges.foldLeft(col("text")) { (c, m) =>
         val pair = m._2

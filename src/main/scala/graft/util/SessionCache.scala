@@ -1,97 +1,128 @@
 package graft.util
 
-/** Bounded LRU memo keyed by (owner identity, name) — the shape every
-  * per-(session, fixture-dir) cache in the repo needs. Plain maps
-  * keyed on `System.identityHashCode(spark)` never forget: entries
-  * for stopped sessions pin their analyzed plans (and, for
-  * checkpoint-valued caches, executor block storage) for the JVM
-  * lifetime — harmless in a one-session harness run, a leak in any
-  * long-lived multi-session driver (VERDICT r8). An LRU bound makes
-  * the retention ceiling explicit and `onEvict` lets checkpoint-valued
-  * caches release storage at eviction rather than never.
-  *
-  * Access-ordered LinkedHashMap under the cache's own lock; the
-  * compute runs inside it (same discipline as the previous
-  * `ConcurrentHashMap.computeIfAbsent` — builders are invoked
-  * sequentially by Verify/Bench, so contention is nil and a duplicate
-  * concurrent compute would be the worse trade).
-  */
-final class SessionCache[V <: AnyRef](maxEntries: Int,
-    onEvict: V => Unit = (_: V) => (),
-    val coldExempt: Boolean = false) {
-  require(maxEntries >= 1, s"SessionCache: maxEntries $maxEntries < 1")
-  SessionCache.register(this)
+import java.nio.file.{Files, Path, Paths}
 
-  /** Reference-identity key: `identityHashCode` alone is a 32-bit hash,
-    * not an identity — two live sessions CAN collide and would then
-    * hand one session a DataFrame bound to the other (r9 review). The
-    * wrapper keeps identityHashCode for bucketing but compares with
-    * `eq`, so a collision degrades to a bucket neighbor, never a wrong
-    * hit. The strong ref to a stopped owner lives only until its entry
-    * ages out of the LRU — the same bounded retention as before.
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
+
+/** The one memo for everything derived from a fixture dir: analyzed read
+  * plans, pinned projections, driver-side solves, trained artifacts and
+  * on-disk layouts. An entry is keyed by (session by identity, dir,
+  * name) and records the dir's [[stamp]] when it was built.
+  *
+  * Two kinds of entry, chosen at the call site:
+  *  - [[result]]: a computed answer (a pinned graph/dedup/vector
+  *    projection, the PCA solve, the BPE merge table, the late-data
+  *    pipeline run). [[evictAllForCold]] drops these, so a harness's
+  *    cold run pays the un-amortized cost.
+  *  - [[input]]: substrate the timed query reads rather than computes
+  *    (`Tables`' analyzed read plans; the DPP, bucketed and
+  *    day-partitioned layouts, each written once and read daily). Cold
+  *    eviction keeps these: re-reading footers or rewriting a layout is
+  *    harness cost, not operator cost.
+  *
+  * The stamp is the newest mtime among the dir's entries, one level into
+  * each `*.parquet` directory. A fixture rewritten in place changes it,
+  * so the lookup misses, releases the old value and rebuilds in the same
+  * slot. A missing or unreadable dir stamps 0: the key is never what
+  * throws (the build's own read fails loudly instead).
+  *
+  * Retention is one access-ordered LRU of [[MaxEntries]]. An evicted,
+  * stale or cold-dropped `DataFrame` goes through
+  * `Bridge.releaseLocalCheckpoint`, which frees a local checkpoint's
+  * blocks and does nothing to any other plan; every other value is
+  * simply dropped. Sessions are compared with `eq` (an identity hash is
+  * a bucket, not an identity), and a stopped session's entries hold it
+  * only until they age out.
+  *
+  * Builds run under the memo's lock: Verify and Bench call builders one
+  * at a time, so contention is nil, and a nested lookup inside a build
+  * (a projection over another) re-enters the same lock.
+  */
+object SessionCache {
+
+  /** One Verify or Bench pass holds about 40 entries per
+    * (session, dir): 10 table plans, 4 layouts, the rest results. The
+    * bound keeps three such sets before anything ages out.
     */
-  private final class IdKey(val ref: AnyRef, val name: String) {
+  private[graft] val MaxEntries = 128
+
+  private final class Key(val session: SparkSession, val dir: String,
+      val name: String) {
     override def hashCode: Int =
-      System.identityHashCode(ref) * 31 + name.hashCode
+      (System.identityHashCode(session) * 31 + dir.hashCode) * 31 +
+        name.hashCode
     override def equals(o: Any): Boolean = o match {
-      case k: IdKey => (k.ref eq ref) && k.name == name
+      case k: Key => (k.session eq session) && k.dir == dir && k.name == name
       case _ => false
     }
   }
 
-  private val m =
-    new java.util.LinkedHashMap[IdKey, V](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[IdKey, V]): Boolean =
-        if (size > maxEntries) { onEvict(e.getValue); true } else false
-    }
+  private final class Entry(val value: Any, val stamp: Long,
+      val isResult: Boolean)
 
-  def getOrElseUpdate(owner: AnyRef, key: String)(v: => V): V =
-    m.synchronized {
-      val k = new IdKey(owner, key)
-      val existing = m.get(k)
-      if (existing != null) existing
-      else { val computed = v; m.put(k, computed); computed }
-    }
-
-  def size: Int = m.synchronized(m.size)
-
-  /** Evict every entry (onEvict invoked per value, releasing pinned
-    * checkpoint blocks) — the cold-run hook. */
-  def clear(): Unit = m.synchronized {
-    val it = m.values.iterator()
-    while (it.hasNext) onEvict(it.next())
-    m.clear()
+  private val m = new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, Entry]) =
+      if (this.size > MaxEntries) { release(e.getValue); true } else false
   }
-}
+  private var nBuilds = 0L
 
-/** Global registry of every SessionCache instance, so Bench can evict
-  * ALL result memos before a query's first timed execution and price
-  * the un-amortized cost (VERDICT r9 top item: min-of-two + memos made
-  * `text_bpe_train` bench as a 0.15 s memo read, not a ~2 s train).
-  *
-  * `coldExempt` opts a cache OUT of cold eviction — reserved for
-  * caches that memoize SUBSTRATE rather than results: `Tables`'
-  * analyzed read plans (re-reading parquet footers is harness noise,
-  * not operator cost) and on-disk layout paths (`SourceQueries`'/
-  * `ScaleProbe`'s DPP fact layouts — a lake table is written once and
-  * joined daily; the one-time rewrite being outside the timed number
-  * is the documented join_dpp_runtime design). Everything holding a
-  * computed RESULT (pinned projections, PCA solves, exact-eval arms)
-  * stays evictable so run 1 pays full freight.
-  */
-object SessionCache {
-  private val registry =
-    new java.util.concurrent.CopyOnWriteArrayList[SessionCache[_]]
+  /** Memoize a computed answer; dropped by [[evictAllForCold]]. */
+  def result[V](s: SparkSession, dir: String, name: String)(build: => V): V =
+    lookup(s, dir, name, isResult = true, build)
 
-  private def register(c: SessionCache[_]): Unit = registry.add(c)
+  /** Memoize substrate a query reads; kept by [[evictAllForCold]]. */
+  def input[V](s: SparkSession, dir: String, name: String)(build: => V): V =
+    lookup(s, dir, name, isResult = false, build)
 
-  /** Evict every non-exempt cache — see object doc. */
-  def evictAllForCold(): Unit = {
-    val it = registry.iterator()
+  /** Drop every [[result]] entry, so the next use rebuilds it. Harnesses
+    * call this before a query's cold run.
+    */
+  def evictAllForCold(): Unit = m.synchronized {
+    val it = m.values.iterator()
     while (it.hasNext) {
-      val c = it.next()
-      if (!c.coldExempt) c.clear()
+      val e = it.next()
+      if (e.isResult) { release(e); it.remove() }
     }
+  }
+
+  private[graft] def size: Int = m.synchronized(m.size)
+
+  /** Builds run since the JVM started (misses, stale or absent). */
+  private[graft] def builds: Long = m.synchronized(nBuilds)
+
+  private[graft] def stamp(dir: String): Long = {
+    def mtime(p: Path) = Files.getLastModifiedTime(p).toMillis
+    try Fs.list(Paths.get(dir)).foldLeft(0L) { (acc, p) =>
+      val inner =
+        if (p.getFileName.toString.endsWith(".parquet") &&
+            Files.isDirectory(p)) Fs.list(p).map(mtime)
+        else Nil
+      (acc +: mtime(p) +: inner).max
+    } catch { case NonFatal(_) => 0L }
+  }
+
+  private def lookup[V](s: SparkSession, dir: String, name: String,
+      isResult: Boolean, build: => V): V = {
+    val st = stamp(dir)
+    m.synchronized {
+      val k = new Key(s, dir, name)
+      val old = m.get(k)
+      if (old != null && old.stamp == st) old.value.asInstanceOf[V]
+      else {
+        if (old != null) { m.remove(k); release(old) }
+        val v = build
+        nBuilds += 1
+        m.put(k, new Entry(v, st, isResult))
+        v
+      }
+    }
+  }
+
+  private def release(e: Entry): Unit = e.value match {
+    case df: DataFrame @unchecked => Bridge.releaseLocalCheckpoint(df)
+    case _ => ()
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.BpeTrain
 
-/** Multi-round BPE trainer + the merge-table artifact cache (round-6:
+/** Multi-round BPE trainer + the merge-table artifact memo (round-6:
   * the tokenizer face must reuse a trained table instead of re-running
   * training — at 100 TB the table ships to the tokenize job, not the
   * corpus).
@@ -101,19 +101,19 @@ class BpeTrainSuite extends SparkSpec {
   }
 
   test("cachedMerges reuses a trained table without retraining") {
-    val key = "bpe-suite-key-" + System.nanoTime()
-    val trained = BpeTrain(corpus, "doc_id", "text", 2, safeRe,
-      dirKey = Some(key)).orderBy("merge_rank").collect()
+    val dir = "bpe-suite-dir-" + System.nanoTime()
+    val trained = BpeTrain(corpus, "doc_id", "text", 2, safeRe)
+      .orderBy("merge_rank").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-    // hand cachedMerges an EMPTY corpus under the same key: a cache hit
+    assert(BpeTrain.cachedMerges(corpus, dir, "doc_id", "text", 2,
+      safeRe) == trained)
+    // hand cachedMerges an EMPTY corpus under the same key: a memo hit
     // returns the trained table verbatim; a retrain would return Nil
     val empty = corpus.filter(lit(false))
-    val viaCache = BpeTrain.cachedMerges(empty, "doc_id", "text", 2,
-      safeRe, dirKey = key)
-    assert(viaCache == trained)
-    // a different key is a miss — trains on what it was given
-    val fresh = BpeTrain.cachedMerges(empty, "doc_id", "text", 2,
-      safeRe, dirKey = key + "-other")
-    assert(fresh.isEmpty)
+    assert(BpeTrain.cachedMerges(empty, dir, "doc_id", "text", 2,
+      safeRe) == trained)
+    // a different dir is a miss — trains on what it was given
+    assert(BpeTrain.cachedMerges(empty, dir + "-other", "doc_id", "text",
+      2, safeRe).isEmpty)
   }
 }

@@ -21,29 +21,20 @@ class BucketedJoinSuite extends SparkSpec {
   test("join of two tables bucketed on the join key plans zero shuffles") {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      val ord = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      spark.sql("DROP TABLE IF EXISTS li_bkt")
-      spark.sql("DROP TABLE IF EXISTS ord_bkt")
-      // the in-memory catalog forgets tables across JVMs but their
-      // warehouse directories persist; clear them or CTAS refuses
-      for (t <- Seq("li_bkt", "ord_bkt")) {
-        val p = java.nio.file.Paths.get(s"spark-warehouse/$t")
-        if (java.nio.file.Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
-      li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .mode("overwrite").saveAsTable("li_bkt")
-      ord.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .mode("overwrite").saveAsTable("ord_bkt")
+      val dir = "/root/testdata/sf0.001"
+      val li = spark.read.parquet(s"$dir/lineitem.parquet")
+      val ord = spark.read.parquet(s"$dir/orders.parquet")
+      // external tables under a temp dir: nothing lands in the
+      // checkout's spark-warehouse/
+      val liBkt = graft.ops.Bucketing.ensureBucketed(
+        li, dir, "li_all", "l_orderkey", 8)
+      val ordBkt = graft.ops.Bucketing.ensureBucketed(
+        ord, dir, "ord_all", "o_orderkey", 8)
 
       def agg(j: org.apache.spark.sql.DataFrame) =
         j.groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
 
-      val bucketed = agg(spark.table("li_bkt").join(spark.table("ord_bkt"),
+      val bucketed = agg(spark.table(liBkt).join(spark.table(ordBkt),
         col("l_orderkey") === col("o_orderkey")))
       bucketed.collect()
       val plan = bucketed.queryExecution.executedPlan match {

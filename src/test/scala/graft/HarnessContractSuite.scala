@@ -42,35 +42,4 @@ class HarnessContractSuite extends SparkSpec {
     val missing = timed -- Bench.RefSteady.keySet
     assert(missing.isEmpty, s"unbanded queries — regen bench_ref.tsv: $missing")
   }
-
-  test("lateShared memo key tracks the events fixture's mtime " +
-      "(round-15: an in-place fixture refresh must miss the memo)") {
-    import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("late_key")
-    graft.source.SpoolWriter.deleteAtExit(dir)
-    // fixture as a parquet DIRECTORY (the real layout): the stamp must
-    // track the newest file INSIDE it, not just the dir entry
-    val fixture = dir.resolve("events.parquet")
-    Files.createDirectories(fixture)
-    val part = fixture.resolve("part-00000.parquet")
-    Files.write(part, Array[Byte](1))
-    // pin BOTH mtimes low (writing the part just touched the dir):
-    // the refresh below must be visible through the part file alone
-    Files.setLastModifiedTime(part,
-      java.nio.file.attribute.FileTime.fromMillis(1000000L))
-    Files.setLastModifiedTime(fixture,
-      java.nio.file.attribute.FileTime.fromMillis(1000000L))
-    val k1 = graft.queries.StreamE2EQueries.lateKey(dir.toString)
-    assert(k1.endsWith("@1000000"))
-    // in-place refresh: same path, newer content
-    Files.setLastModifiedTime(part,
-      java.nio.file.attribute.FileTime.fromMillis(2000000L))
-    val k2 = graft.queries.StreamE2EQueries.lateKey(dir.toString)
-    assert(k1 !== k2, "refreshed fixture must produce a different key")
-    // unchanged fixture: stable key (memo hit on the second call)
-    assert(graft.queries.StreamE2EQueries.lateKey(dir.toString) === k2)
-    // missing fixture: the key must never be the thing that throws
-    assert(graft.queries.StreamE2EQueries
-      .lateKey(Paths.get(dir.toString, "nope").toString).endsWith("@0"))
-  }
 }

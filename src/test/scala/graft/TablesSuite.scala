@@ -125,10 +125,10 @@ class TablesSuite extends SparkSpec {
   }
 
   test("plan cache stays bounded across created-and-stopped sessions") {
-    // the cache keys on session identity; without the LRU bound a
+    // plans are memoized per session identity; without the LRU bound a
     // multi-session driver would retain stopped sessions' analyzed
     // plans forever (VERDICT r8 nit #2). Three sessions × tables must
-    // never push the cache past its bound, and repeated loads reuse
+    // never push the memo past its bound, and repeated loads reuse
     // entries rather than grow.
     val dir = "/root/testdata/sf0.001"
     (1 to 3).foreach { _ =>
@@ -138,12 +138,13 @@ class TablesSuite extends SparkSpec {
         .foreach(tbl => Tables(s, dir, tbl))
       // a stopped/abandoned session's entries age out under the bound
     }
-    assert(Tables.cacheSize <= Tables.MaxEntries,
-      s"cache grew to ${Tables.cacheSize} > bound ${Tables.MaxEntries}")
-    val before = Tables.cacheSize
-    Tables(spark, dir, "region") // shared-session entry: reuse, not growth
-    Tables(spark, dir, "region")
-    assert(Tables.cacheSize <= before + 1)
+    import graft.util.SessionCache
+    assert(SessionCache.size <= SessionCache.MaxEntries,
+      s"memo grew to ${SessionCache.size} > bound ${SessionCache.MaxEntries}")
+    val region = Tables(spark, dir, "region")
+    val (before, builds) = (SessionCache.size, SessionCache.builds)
+    assert(Tables(spark, dir, "region") eq region) // reuse, not growth
+    assert(SessionCache.size == before && SessionCache.builds == builds)
   }
 
   test("live fixture events.ts arrives as a known encoding at sf0.001") {
