@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Bucketed-table support: the storage-level answer to "fact ⋈ fact on
@@ -20,37 +18,33 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * Offline emulation detail: bucketed tables must live in a catalog
   * (`saveAsTable`); this helper writes EXTERNAL parquet tables under a
   * temp dir into the session's in-memory catalog, memoized as a
-  * `SessionCache.input` per (session, fixture dir, name) so repeated
-  * query runs (bench, verify) pay the bucketing write once.
+  * `SessionCache.layout` per (session, fixture dir, name) so repeated
+  * query runs (bench, verify) pay the bucketing write once, and the
+  * files go when the memo drops the entry.
   */
 object Bucketing {
 
   /** Ensure `df`, derived from fixture `dir`, exists as a bucketed
     * external parquet table; returns the catalog table name to read
-    * (`spark.table(...)`). The name carries a content-addressed tag of
-    * `dir` (a 32-bit hash could collide across dirs and share one table),
-    * so two fixture dirs never write the same catalog entry.
+    * (`spark.table(...)`). The name is the layout's own temp dir name,
+    * so no two builds (two fixture dirs, two sessions sharing one
+    * catalog, or a rebuild after the memo dropped an entry) ever write
+    * or read each other's table. A dropped entry's files are deleted;
+    * its catalog entry stays, as metadata over no files.
     */
   def ensureBucketed(
       df: DataFrame,
       dir: String,
       name: String,
       key: String,
-      buckets: Int): String = {
-    val s = df.sparkSession
-    graft.util.SessionCache.input(s, dir, s"bucketed/$name") {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(6)
-        .map(b => f"$b%02x").mkString
-      val table = s"graft_bkt_${name}_$tag"
-      val path = Files.createTempDirectory(s"graft_bkt_$name")
-      graft.source.SpoolWriter.deleteAtExit(path)
-      s.sql(s"DROP TABLE IF EXISTS $table")
+      buckets: Int): String =
+    graft.util.SessionCache.layout(df.sparkSession, dir, s"bucketed/$name",
+        s"graft_bkt_$name") { path =>
+      val table = path.getFileName.toString
       df.write.format("parquet").mode(SaveMode.Overwrite)
         .bucketBy(buckets, key).sortBy(key)
         .option("path", path.toString)
         .saveAsTable(table)
       table
     }
-  }
 }

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -15,9 +13,9 @@ import org.apache.spark.sql.functions._
   * scans the whole partition, main.rs:87-88).
   *
   * Offline emulation: a write of the fixture into a temp dir, memoized
-  * as a `SessionCache.input` so repeated query runs (bench best-of-2,
-  * verify) pay the layout write once — the same seam as
-  * [[Bucketing.ensureBucketed]].
+  * as a `SessionCache.layout` so repeated query runs (bench best-of-2,
+  * verify) pay the layout write once, and the files go when the memo
+  * drops the entry — the same seam as [[Bucketing.ensureBucketed]].
   */
 object DayPartitioned {
 
@@ -27,9 +25,8 @@ object DayPartitioned {
     */
   def ensure(df: DataFrame, dir: String, name: String,
       tsCol: String): String =
-    graft.util.SessionCache.input(df.sparkSession, dir, s"day/$name") {
-      val path = Files.createTempDirectory(s"graft_day_$name")
-      graft.source.SpoolWriter.deleteAtExit(path)
+    graft.util.SessionCache.layout(df.sparkSession, dir, s"day/$name",
+        s"graft_day_$name") { path =>
       df.withColumn("day", to_date(col(tsCol)))
         .write.mode(SaveMode.Overwrite)
         .partitionBy("day").parquet(path.toString)

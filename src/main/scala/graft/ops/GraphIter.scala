@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Unrolled-round graph iteration kernels shared by the GraphQueries
@@ -273,49 +273,65 @@ object GraphIter {
     * the oracle unrolls as a CTE chain. Returns (u, st) with st in
     * {'in', 'out', 'und'}; 'und' nonempty just means more rounds
     * would refine it (Luby converges in O(log n) rounds w.h.p.).
-    * Each round is two semi-joins + one grouped MIN + one anti-join —
-    * frontier-sized, and the undecided set only shrinks; und is
-    * re-pinned per round so round r never re-runs rounds 1..r−1
-    * (edgeSupport's recompute-fan-out lesson).
+    *
+    * Plan per round: two exchanges and one pin, so three Spark jobs.
+    * The node state `(u, st)` is pinned hash-partitioned on u and the
+    * message edges on v, both with the session's shuffle partition
+    * count and through `Bridge.localCheckpointPartitioned` (which keeps
+    * that partitioning), so a message from v to u joins v's state
+    * without an exchange; the only shuffles are the two groupBy(u)
+    * message steps a Luby round needs: the min priority over undecided
+    * neighbours, then "entered, or has a neighbour that entered". The
+    * message edges are the adjacency plus one self row `(u, u)` per
+    * node, so the second step tells a node both facts at once: each
+    * round's entrants feed ONE consumer, and no subplan is planned (and
+    * run) twice — a pinned frame read by two branches of one plan is
+    * not deduplicated, because its scan's partitioning is not
+    * normalized when exchanges are compared for reuse.
+    * The round's new state is ONE pin over every node (a decided node
+    * keeps its st), so the undecided frontier is a filter of it and the
+    * last round's pin is the answer — no separate decided/undecided
+    * pins and no closing union or join. Joins are hinted `shuffle_hash`
+    * so a small frontier is never broadcast (a broadcast is a job of
+    * its own). Each superseded state is released once the next is
+    * pinned.
     */
   def lubyMis(adj: DataFrame, rounds: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
-    // the Betweenness release discipline: every per-round pin is
-    // tracked and released after the ONE final caller-owned
-    // checkpoint — without this, each invocation permanently pinned
-    // 2·rounds+1 block sets in a long-lived JVM (Bench runs every
-    // builder twice; ScaleProbe builds 1× and 10× in one driver)
-    val pinned = scala.collection.mutable.Buffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); pinned += c; c
-    }
-    val nodes = pin(adj.select(col("u")).distinct())
-    var und = nodes
-    var decided: DataFrame = null
+    val parts =
+      adj.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    def pr(node: Column, r: Int): Column =
+      TextHash.h31(concat(node.cast("string"), lit(s":$r")))
+    var state = adj.select(col("u")).repartition(parts, col("u"))
+      .distinct().select(col("u"), lit("und").as("st"))
+      .transform(Bridge.localCheckpointPartitioned)
+    val msgs = adj.select(col("u"), col("v"), lit(false).as("self"))
+      .unionAll(state.select(col("u"), col("u").as("v"), lit(true)))
+      .repartition(parts, col("v"))
+      .transform(Bridge.localCheckpointPartitioned)
     for (r <- 1 to rounds) {
-      val pr = und.select(col("u"),
-        TextHash.h31(concat(col("u").cast("string"), lit(s":$r")))
-          .as("pr"))
-      val ue = adj.join(und, Seq("u"), "left_semi")
-        .join(und.withColumnRenamed("u", "v"), Seq("v"), "left_semi")
-        .select("u", "v")
-      val mn = ue.join(pr.toDF("v", "prv"), Seq("v"))
-        .groupBy("u").agg(min("prv").as("mn"))
-      val in = pr.join(mn, Seq("u"), "left")
-        .filter(col("mn").isNull || col("pr") < col("mn"))
-        .select("u")
-      val out = ue.join(in.toDF("v"), Seq("v"), "left_semi")
-        .select("u").distinct()
-      val dec = pin(in.withColumn("st", lit("in"))
-        .unionAll(out.withColumn("st", lit("out"))))
-      decided = if (decided == null) dec else decided.unionAll(dec)
-      und = pin(und.join(dec.select("u"), Seq("u"), "left_anti"))
+      val und = state.filter(col("st") === "und").select("u")
+      val mn = msgs.filter(!col("self"))
+        .join(und.select(col("u").as("v"), pr(col("u"), r).as("prv"))
+          .hint("shuffle_hash"), "v")
+        .groupBy("u").agg(min(col("prv")).as("mn"))
+      val entered = und.join(mn.hint("shuffle_hash"), Seq("u"), "left")
+        .filter(col("mn").isNull || pr(col("u"), r) < col("mn"))
+        .select(col("u").as("v"))
+      val told = msgs.join(entered.hint("shuffle_hash"), "v")
+        .groupBy("u")
+        .agg(max(col("self")).as("enter"), max(!col("self")).as("hit"))
+      val next = state.join(told.hint("shuffle_hash"), Seq("u"), "left")
+        .select(col("u"),
+          when(col("enter"), lit("in"))
+            .when(col("st") === "und" && col("hit"), lit("out"))
+            .otherwise(col("st")).as("st"))
+        .transform(Bridge.localCheckpointPartitioned)
+      Bridge.releaseLocalCheckpoint(state)
+      state = next
     }
-    val res = nodes.join(decided, Seq("u"), "left")
-      .select(col("u"), coalesce(col("st"), lit("und")).as("st"))
-      .localCheckpoint()
-    pinned.foreach(Bridge.releaseLocalCheckpoint)
-    res
+    Bridge.releaseLocalCheckpoint(msgs)
+    state
   }
 
   /** `rounds` Bellman-Ford min-plus relaxation steps over a weighted

@@ -1,5 +1,8 @@
 package graft.ops
 
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -24,19 +27,24 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * whole trajectory is reproducible cross-engine and the DuckDB mirror
   * unrolls the same k rounds as CTEs.
   *
-  * Scale shape (the rescan form): round r is ONE pass over the corpus —
-  * the chosen ≤ k centers collapse to a single broadcast row
-  * ([[VectorOps.assignToCentroids]]'s native scan-side argmin fold, no
-  * shuffle of the corpus), the per-row min-distance is one more
-  * codegen'd fold against the assigned center, and the argmax reduces
-  * through `TakeOrdered(1)` (per-partition top-1, single-row driver
-  * result — the [[GlobalRank]] bounded-metadata discipline). Total work
-  * is k scans with O(r)-per-row folds: no per-(point, center) row
-  * explosion, no quadratic join, nothing proportional to a hot cell.
-  * The alternative — materializing a running min-distance column —
-  * saves the re-fold but rewrites the corpus k times; at 100 TB the
-  * rescan form wins whenever k · fold-cost < k · corpus-write-cost,
-  * i.e. essentially always for the k ≤ 64 this seeding is used at.
+  * Scale shape (the rescan form): round r is ONE pass over the corpus
+  * and ONE Spark job. The chosen ≤ k centres are round state the driver
+  * already holds (their ids, and the winning vector each round's
+  * `TakeOrdered(1)` returns with its id), so they enter the scan as a
+  * typed literal array: the per-row nearest centre is the native
+  * [[VectorOps.argminL2Index]] fold over that literal, the min distance
+  * one more [[VectorOps.l2Fix]] fold against `element_at` of it, and the
+  * argmax reduces through `TakeOrdered(1)` (per-partition top-1,
+  * single-row driver result — the [[GlobalRank]] bounded-metadata
+  * discipline). No aggregate, broadcast or join re-derives the centre
+  * set, so a k-round selection costs k + 1 jobs: the input pin, then one
+  * per round (the seed round included). Total work is k scans with
+  * O(r)-per-row folds: no per-(point, center) row explosion, no
+  * quadratic join, nothing proportional to a hot cell. The alternative —
+  * materializing a running min-distance column — saves the re-fold but
+  * rewrites the corpus k times; at 100 TB the rescan form wins whenever
+  * k · fold-cost < k · corpus-write-cost, i.e. essentially always for
+  * the k ≤ 64 this seeding is used at.
   */
 object KcenterInit {
 
@@ -59,35 +67,35 @@ object KcenterInit {
     try {
       val seed = pinned.orderBy(col("vec_id")).limit(1).collect()
       require(seed.nonEmpty, "kcenter: empty input")
-      val chosen = scala.collection.mutable.ArrayBuffer[(Long, Long)](
-        (seed.head.getLong(0), 0L))
+      // (vec_id, r_fix, vector) per chosen centre, in selection order
+      val chosen = ArrayBuffer((seed.head.getLong(0), 0L,
+        seed.head.getSeq[Float](1)))
       var exhausted = false
-      for (r <- 2 to k if !exhausted) {
-        val ids = chosen.map(_._1).toSeq
-        val cents = pinned.filter(col("vec_id").isin(ids: _*))
-          .select(col("vec_id").as("cid"), col("v").as("cv"))
-        // argmin assignment gives the NEAREST chosen center; one more
-        // fold against that center's vector IS the min distance (ties
-        // in the argmin cannot change it — tied centers are equidistant)
-        val next = VectorOps.assignToCentroids(pinned, "vec_id", "v", cents)
-          .filter(!col("vec_id").isin(ids: _*))
-          .join(broadcast(cents), col("cell") === col("cid"))
+      for (_ <- 2 to k if !exhausted) {
+        val cvs = typedLit(chosen.map(_._3).toSeq)
+        // argmin gives the NEAREST chosen center; one more fold against
+        // that center's vector IS the min distance (ties in the argmin
+        // cannot change it — tied centers are equidistant)
+        val next = pinned
+          .filter(!col("vec_id").isin(chosen.map(_._1).toSeq: _*))
           .select(col("vec_id"),
-            VectorOps.l2Fix(col("v"), col("cv")).as("dfix"))
+            VectorOps.l2Fix(col("v"), element_at(cvs,
+              VectorOps.argminL2Index(col("v"), cvs) + 1)).as("dfix"),
+            col("v"))
           .orderBy(col("dfix").desc, col("vec_id"))
           .limit(1).collect()
         if (next.isEmpty) exhausted = true // k > distinct points: stop
-        else chosen += ((next.head.getLong(0), next.head.getLong(1)))
+        else chosen += ((next.head.getLong(0), next.head.getLong(1),
+          next.head.getSeq[Float](2)))
       }
       val schema = StructType(Seq(
         StructField("round", LongType, nullable = false),
         StructField("vec_id", LongType, nullable = false),
         StructField("r_fix", LongType, nullable = false)))
       spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          chosen.zipWithIndex.map { case ((id, d), i) =>
-            Row((i + 1).toLong, id, d)
-          }.toSeq, numSlices = 1),
+        chosen.zipWithIndex.map { case ((id, d, _), i) =>
+          Row((i + 1).toLong, id, d)
+        }.asJava,
         schema)
     } finally {
       org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(pinned)

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Fixed-iteration PageRank over an edge list — the graph-centrality
   * primitive a curation pipeline uses to weight documents by link
@@ -15,21 +17,28 @@ import org.apache.spark.sql.functions._
   * cross-engine. The damping update `0.15/N + 0.85·(sq/1e12)` is a fixed
   * four-op IEEE sequence mirrored literally in the DuckDB oracle.
   *
-  * Scale shape: each iteration is one broadcast-or-shuffle join of the
-  * static edge table with the current ranks (both keyed on the source
-  * node — a cluster deployment pre-partitions edges by src once and
-  * reuses that layout every iteration) plus one groupBy(dst). The
-  * static inputs (edges⋈degree, node universe) are materialized ONCE
-  * with `localCheckpoint` and every round's ranks are checkpointed the
-  * same way — so plan depth and lineage stay CONSTANT in `iters`
-  * instead of growing linearly (re-analysis blowup past ~10 rounds),
-  * exactly the [[ConnectedComponents]] discipline; `localCheckpoint`
-  * remains the documented swap point for reliable-storage
-  * `checkpoint()` on a long-lived cluster. Superseded rounds are
-  * unpersisted so executor storage holds at most two rank frames.
-  * Dangling mass is dropped (not redistributed): ranks then sum to
-  * < 1, which is fine for the relative-ordering uses this operator
-  * serves.
+  * Scale shape: each iteration is one exchange and two Spark jobs
+  * (the exchange's map stage, then the round's checkpoint). The static
+  * inputs are pinned once, each hash-partitioned on its join key: the
+  * edges with their out-degree `(src, dst, outdeg)` on src, from one
+  * pass over the input edges, and the node universe on node. Every pin
+  * is a `Bridge.localCheckpointPartitioned`, which keeps the pinned
+  * rows' partitioning, and every round's ranks are pinned partitioned
+  * on node, so the edges ⋈ ranks join needs no exchange; the only
+  * shuffle is the groupBy(dst) of the contributions, whose output
+  * already has the node universe's partitioning for the closing left
+  * join. Both joins are hinted `shuffle_hash`, so a small frame is
+  * never broadcast (a broadcast is a job of its own). The node count
+  * (and, for [[personalized]], the seed set) is driver-side round
+  * state that enters each round as a literal. Plan depth and lineage
+  * stay CONSTANT in `iters` instead of growing linearly (re-analysis
+  * blowup past ~10 rounds), exactly the [[ConnectedComponents]]
+  * discipline; `localCheckpoint` remains the documented swap point for
+  * reliable-storage `checkpoint()` on a long-lived cluster. Superseded
+  * rounds are released so executor storage holds at most two rank
+  * frames. Dangling mass is dropped (not redistributed): ranks then
+  * sum to < 1, which is fine for the relative-ordering uses this
+  * operator serves.
   */
 object PageRank {
 
@@ -41,60 +50,9 @@ object PageRank {
     * @return (node: long, r: double) — ranks after `iters` iterations
     */
   def apply(edgesIn: DataFrame, iters: Int): DataFrame = {
-    // the raw edge plan has FOUR consumers below (degree, the ewd
-    // join, the node universe's two branches) — pin it once. Callers
-    // often hand an EXPENSIVE pipeline (text_textrank's md5+distinct
-    // co-occurrence build measured 4 of its 7 build seconds re-deriving
-    // edges here); pinned callers (graph_pagerank) pay one cheap copy.
-    val edges = edgesIn.select(col("src"), col("dst")).localCheckpoint()
-    val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // static per-round inputs, computed once: without the checkpoint
-    // every round re-derives the degree join and the node-universe
-    // distinct from raw edges, and the final plan nests `iters` copies
-    val ewd = edges.join(outdeg, "src").localCheckpoint()
-    val base = {
-      val nodes = edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct()
-      nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("nn"))))
-        .localCheckpoint()
-    }
-
-    var ranks = base
-      .select(col("node"), (lit(1.0) / col("nn").cast("double")).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = ewd
-        .join(ranks, ewd("src") === ranks("node"))
-        .select(col("dst"),
-          floor(col("r") / col("outdeg").cast("double") * Scale)
-            .cast("long").as("cq"))
-        .groupBy("dst").agg(sum(col("cq")).as("sq"))
-      val next = base
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(1 - Damping) / col("nn").cast("double") +
-            lit(Damping) *
-              (coalesce(col("sq"), lit(0L)).cast("double") / Scale)).as("r"))
-        .localCheckpoint()
-      val prev = ranks
-      ranks = next
-      // Dataset.unpersist would be a silent no-op here (checkpoint
-      // blocks bypass the CacheManager) — release the checkpointed RDD
-      // itself so at most two rank frames are ever materialized
-      org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(prev)
-    }
-    // the returned final ranks frame is checkpointed and self-contained
-    // after ≥1 iteration — release the static per-round inputs too, or
-    // every invocation in a long-lived session (bench runs each builder
-    // twice) pins an edges-join-degree and a node-universe copy forever
-    // (the ConnectedComponents release discipline)
-    if (iters > 0) {
-      org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(ewd)
-      org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(base)
-    }
-    // ewd and base are materialized by now (0 iterations included), so
-    // the input pin is releasable unconditionally
-    org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(edges)
-    ranks
+    val g = new Static(edgesIn)
+    val nn = g.nodeCount.toDouble
+    g.iterate(iters, r0 = lit(1.0 / nn), teleport = lit((1 - Damping) / nn))
   }
 
   /** Personalized PageRank: identical loop, but teleport mass lands on
@@ -102,58 +60,89 @@ object PageRank {
     * elsewhere) and each round adds (1−d)/|S| to seeds only. The
     * recommendation-score form ("importance as seen FROM these
     * users"); same quantized-contribution determinism, same
-    * checkpoint/release loop discipline as [[apply]].
+    * checkpoint/release loop discipline as [[apply]]. The seed set is
+    * collected once and enters the rounds as a literal.
     *
-    * @param seeds one `node` column; must be a subset of the edge
-    *              node universe for the mass argument to hold
+    * @param seeds one `node` column of distinct nodes; must be a subset
+    *              of the edge node universe for the mass argument to hold
     */
   def personalized(
       edgesIn: DataFrame, iters: Int, seeds: DataFrame): DataFrame = {
-    val edges = edgesIn.select(col("src"), col("dst")).localCheckpoint()
-    val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val ewd = edges.join(outdeg, "src").localCheckpoint()
-    val base = {
-      val nodes = edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct()
-      nodes
-        .crossJoin(broadcast(
-          seeds.agg(count(lit(1)).as("ns"))))
-        .join(broadcast(seeds.select(col("node"), lit(1).as("in_seed"))),
-          Seq("node"), "left")
-        .select(col("node"), col("ns"),
-          coalesce(col("in_seed"), lit(0)).as("in_seed"))
-        .localCheckpoint()
+    val ids = seeds.select(col("node").cast("long")).collect()
+      .map(_.getLong(0))
+    val ns = ids.length.toDouble
+    val inSeed = col("node").isin(ids.toSeq: _*)
+    new Static(edgesIn).iterate(iters,
+      r0 = when(inSeed, lit(1.0 / ns)).otherwise(lit(0.0)),
+      teleport = when(inSeed, lit((1 - Damping) / ns)).otherwise(lit(0.0)))
+  }
+
+  /** The loop's static inputs, pinned once: `ewd (src, dst, outdeg)`
+    * hash-partitioned on src and the node universe `nodes (node)` on
+    * node, both with the session's shuffle partition count — the count
+    * the per-round groupBy(dst) exchange uses, so its output lines up
+    * with `nodes` without a second exchange.
+    */
+  private final class Static(edgesIn: DataFrame) {
+    private val parts =
+      edgesIn.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    // the input edges are read ONCE: callers often hand an EXPENSIVE
+    // pipeline (text_textrank's md5+distinct co-occurrence build), and
+    // the out-degree is a window over the src partitioning, not a
+    // second aggregate-and-join pass over the input
+    val ewd: DataFrame = edgesIn.select(col("src"), col("dst"))
+      .repartition(parts, col("src"))
+      .withColumn("outdeg", count(lit(1)).over(Window.partitionBy("src")))
+      .transform(Bridge.localCheckpointPartitioned)
+    // the node count rides the pin's own job as an observed metric
+    private val counted = ewd.select(col("src").as("node"))
+      .union(ewd.select(col("dst").as("node")))
+      .repartition(parts, col("node")).distinct()
+      .observe("nn", count(lit(1)).as("nn"))
+    val nodes: DataFrame = Bridge.localCheckpointPartitioned(counted)
+
+    def nodeCount: Long =
+      counted.queryExecution.observedMetrics("nn").getLong(0)
+
+    /** `iters` rounds from ranks `r0`; `teleport` is each round's
+      * non-link mass. Both may read `node` and constants only; their
+      * divisions are made on the driver (the same IEEE quotient), so an
+      * empty graph's zero count never reaches an ANSI division.
+      */
+    def iterate(iters: Int, r0: Column, teleport: Column): DataFrame = {
+      var ranks = nodes.select(col("node"), r0.as("r"))
+      for (_ <- 1 to iters) {
+        val contrib = ewd
+          .join(ranks.hint("shuffle_hash"), col("src") === col("node"))
+          .select(col("dst"),
+            floor(col("r") / col("outdeg").cast("double") * Scale)
+              .cast("long").as("cq"))
+          .groupBy("dst").agg(sum(col("cq")).as("sq"))
+        val next = nodes
+          .join(contrib.hint("shuffle_hash"), col("node") === col("dst"),
+            "left")
+          .select(col("node"),
+            (teleport + lit(Damping) *
+              (coalesce(col("sq"), lit(0L)).cast("double") / Scale)).as("r"))
+          .transform(Bridge.localCheckpointPartitioned)
+        val prev = ranks
+        ranks = next
+        // Dataset.unpersist would be a silent no-op here (checkpoint
+        // blocks bypass the CacheManager) — release the checkpointed RDD
+        // itself so at most two rank frames are ever materialized
+        Bridge.releaseLocalCheckpoint(prev)
+      }
+      // the returned final ranks frame is checkpointed and
+      // self-contained after ≥1 iteration — release the static inputs
+      // too, or every invocation in a long-lived session (bench runs
+      // each builder twice) pins an edge and a node-universe copy
+      // forever (the ConnectedComponents release discipline)
+      if (iters > 0) {
+        Bridge.releaseLocalCheckpoint(ewd)
+        Bridge.releaseLocalCheckpoint(nodes)
+      }
+      ranks
     }
-    var ranks = base.select(col("node"),
-      when(col("in_seed") === 1, lit(1.0) / col("ns").cast("double"))
-        .otherwise(lit(0.0)).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = ewd
-        .join(ranks, ewd("src") === ranks("node"))
-        .select(col("dst"),
-          floor(col("r") / col("outdeg").cast("double") * Scale)
-            .cast("long").as("cq"))
-        .groupBy("dst").agg(sum(col("cq")).as("sq"))
-      val next = base
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (when(col("in_seed") === 1,
-            lit(1 - Damping) / col("ns").cast("double"))
-            .otherwise(lit(0.0)) +
-            lit(Damping) *
-              (coalesce(col("sq"), lit(0L)).cast("double") / Scale))
-            .as("r"))
-        .localCheckpoint()
-      val prev = ranks
-      ranks = next
-      org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(prev)
-    }
-    if (iters > 0) {
-      org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(ewd)
-      org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(base)
-    }
-    org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(edges)
-    ranks
   }
 
   /** [[personalized]]'s mirror: expects `edges(src, dst)` AND

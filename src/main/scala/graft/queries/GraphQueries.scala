@@ -15,7 +15,7 @@ import graft.util.SessionCache
   */
 object GraphQueries extends QueryPack {
 
-  private val Iters = 3
+  private[graft] val Iters = 3
 
   /** Item nodes are offset past the user-id space so both sides live in
     * one long-typed node namespace.
@@ -54,7 +54,7 @@ object GraphQueries extends QueryPack {
   private val MaxPop = 200
 
   /** graph_mis_luby synchronous round count (unrolled in the oracle). */
-  private val MisRounds = 3
+  private[graft] val MisRounds = 3
 
   /** User–user co-engagement edges (low→high, distinct): two users
     * connect if they bought the SAME item on the SAME day. The (item,

@@ -528,9 +528,10 @@ object VectorQueries extends QueryPack {
     // centers; OPT ≥ r_fix/2). Complements emb_kmeans_train's
     // parity-seeded Lloyd's with the spread-maximizing initializer a
     // diverse few-shot pool or coreset build starts from. Plan per
-    // round: one corpus scan (broadcast centers, native argmin fold +
-    // one l2Fix re-fold) reduced through TakeOrdered(1) — k passes, no
-    // shuffle of the corpus, O(1) driver state per round. The DuckDB
+    // round: one corpus scan and one job (the driver-held centres as a
+    // literal array, native argmin fold + one l2Fix re-fold) reduced
+    // through TakeOrdered(1) — k passes, no shuffle of the corpus,
+    // O(r) driver state at round r. The DuckDB
     // mirror unrolls the same greedy rounds as CTEs over the identical
     // fixed-point distance fold. See [[graft.ops.KcenterInit]].
     "emb_kcenter_init" -> ((s, dir) =>
@@ -574,7 +575,7 @@ object VectorQueries extends QueryPack {
   /** emb_kcenter_init round count — fixed so the DuckDB oracle unrolls
     * the same trajectory.
     */
-  private val KcenterK = 8
+  private[graft] val KcenterK = 8
 
   /** `emb_drift_mmd` body on an explicit embeddings frame — shared
     * with ScaleProbe's weak-scaling arm (the probe must measure the

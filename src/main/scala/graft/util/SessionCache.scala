@@ -18,10 +18,10 @@ import org.apache.spark.sql.graftbridge.Bridge
   *    pipeline run). [[evictAllForCold]] drops these, so a harness's
   *    cold run pays the un-amortized cost.
   *  - [[input]]: substrate the timed query reads rather than computes
-  *    (`Tables`' analyzed read plans; the DPP, bucketed and
-  *    day-partitioned layouts, each written once and read daily). Cold
-  *    eviction keeps these: re-reading footers or rewriting a layout is
-  *    harness cost, not operator cost.
+  *    (`Tables`' analyzed read plans; through [[layout]], the DPP,
+  *    bucketed and day-partitioned layouts, each written once and read
+  *    daily). Cold eviction keeps these: re-reading footers or rewriting
+  *    a layout is harness cost, not operator cost.
   *
   * The stamp is the newest mtime among the dir's entries, one level into
   * each `*.parquet` directory. A fixture rewritten in place changes it,
@@ -32,10 +32,10 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Retention is one access-ordered LRU of [[MaxEntries]]. An evicted,
   * stale or cold-dropped `DataFrame` goes through
   * `Bridge.releaseLocalCheckpoint`, which frees a local checkpoint's
-  * blocks and does nothing to any other plan; every other value is
-  * simply dropped. Sessions are compared with `eq` (an identity hash is
-  * a bucket, not an identity), and a stopped session's entries hold it
-  * only until they age out.
+  * blocks and does nothing to any other plan; a [[layout]]'s directory
+  * is deleted; every other value is simply dropped. Sessions are
+  * compared with `eq` (an identity hash is a bucket, not an identity),
+  * and a stopped session's entries hold it only until they age out.
   *
   * Builds run under the memo's lock: Verify and Bench call builders one
   * at a time, so contention is nil, and a nested lookup inside a build
@@ -63,6 +63,9 @@ object SessionCache {
   private final class Entry(val value: Any, val stamp: Long,
       val isResult: Boolean)
 
+  /** A [[layout]]'s value and the temp dir it lives in. */
+  private final class Layout[V](val dir: Path, val value: V)
+
   private val m = new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[Key, Entry]) =
       if (this.size > MaxEntries) { release(e.getValue); true } else false
@@ -76,6 +79,21 @@ object SessionCache {
   /** Memoize substrate a query reads; kept by [[evictAllForCold]]. */
   def input[V](s: SparkSession, dir: String, name: String)(build: => V): V =
     lookup(s, dir, name, isResult = false, build)
+
+  /** Memoize an on-disk layout as an [[input]]: `write` fills a fresh
+    * temp dir named `prefix…` and returns what readers use (a path or a
+    * table name). The entry owns the dir: releasing the entry (LRU
+    * eviction, or a stale stamp) deletes it, and a dir still held at JVM
+    * exit goes with the exit hook.
+    */
+  def layout[V](s: SparkSession, dir: String, name: String, prefix: String)(
+      write: Path => V): V =
+    lookup(s, dir, name, isResult = false, {
+      val path = Files.createTempDirectory(prefix)
+      graft.source.SpoolWriter.deleteAtExit(path)
+      try new Layout(path, write(path))
+      catch { case e: Throwable => Fs.deleteTree(path); throw e }
+    }).value
 
   /** Drop every [[result]] entry, so the next use rebuilds it. Harnesses
     * call this before a query's cold run.
@@ -123,6 +141,7 @@ object SessionCache {
 
   private def release(e: Entry): Unit = e.value match {
     case df: DataFrame @unchecked => Bridge.releaseLocalCheckpoint(df)
+    case l: Layout[_] => Fs.deleteTree(l.dir)
     case _ => ()
   }
 }

@@ -46,6 +46,38 @@ object Bridge {
       case _ => ()
     }
 
+  /** `df.localCheckpoint()` that keeps the partitioning its rows were
+    * produced under. Spark records the executed plan's
+    * `outputPartitioning` on a checkpoint, but under AQE the plan root
+    * (`AdaptiveSparkPlanExec`) reports `UnknownPartitioning`, so a join
+    * or aggregate over a checkpointed frame re-shuffles rows that are
+    * already placed. Once the eager checkpoint has run, the adaptive plan
+    * is final, and its final physical plan's partitioning is the layout
+    * of the checkpointed partitions; that is what the returned frame's
+    * scan reports (the first leaf of a `PartitioningCollection`, as
+    * Spark's own checkpoint does). Released like any local checkpoint.
+    */
+  def localCheckpointPartitioned(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.physical.{Partitioning,
+      PartitioningCollection}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    @annotation.tailrec
+    def firstLeaf(p: Partitioning): Partitioning = p match {
+      case PartitioningCollection(ps) => firstLeaf(ps.head)
+      case other => other
+    }
+    val pinned = df.localCheckpoint()
+    (pinned.queryExecution.analyzed, df.queryExecution.executedPlan) match {
+      case (lr: LogicalRDD, aqe: AdaptiveSparkPlanExec) if aqe.isFinalPlan =>
+        ofRows(df.sparkSession, lr.makeCopy(Array(lr.output, lr.rdd,
+          firstLeaf(aqe.executedPlan.outputPartitioning), lr.outputOrdering,
+          Boolean.box(lr.isStreaming), lr.stream)))
+      case _ => pinned
+    }
+  }
+
   /** Block until the listener bus has delivered every queued event.
     *
     * Listener delivery is asynchronous; a timing harness that reads a

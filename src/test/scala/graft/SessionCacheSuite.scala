@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.SparkSession
@@ -188,6 +188,12 @@ class SessionCacheSuite extends SparkSpec {
 
   test("fresh sessions ensuring layouts leave the memo at or under its " +
       "bound") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def boundDirs(): Set[Path] = Fs.list(tmp).filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("graft_day_bound") || n.startsWith("graft_bkt_bound")
+    }.toSet
+    val dirs0 = boundDirs()
     def layouts(s: SparkSession): String = {
       val df = s.range(1).select(col("id").as("k"),
         timestamp_seconds(col("id")).as("ts"))
@@ -206,5 +212,13 @@ class SessionCacheSuite extends SparkSpec {
     assert(layouts(last) == lastPath)
     assert(layouts(first) != firstPath)
     assert(SessionCache.size <= SessionCache.MaxEntries)
+    // an evicted layout's dir goes with its entry: every layout dir
+    // this test left on disk belongs to an entry the memo still holds
+    val made = boundDirs() -- dirs0
+    assert(made.size <= SessionCache.size,
+      s"${made.size} layout dirs on disk, ${SessionCache.size} live entries")
+    assert(new java.io.File(lastPath).isDirectory, "a live layout's dir stays")
+    assert(!new java.io.File(firstPath).exists(),
+      "the evicted layout's dir is deleted")
   }
 }
