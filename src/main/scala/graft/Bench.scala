@@ -543,8 +543,6 @@ object Bench {
     // emitted `queries` map keeps the historical min-of-two (≈ run 2)
     // for round-over-round continuity; `cold` carries every run 1, so
     // the bench artifact alone prices both regimes.
-    // SPARK_GRAFT_NOCOLD=1 skips the eviction (A/B of the eviction
-    // itself).
     // SPARK_GRAFT_ONLY (validated above): comma-separated names, timed
     // in the GIVEN order. Absent → full bench in NAME order: the query
     // map is a HashMap, so its iteration order reshuffles whenever
@@ -560,38 +558,6 @@ object Bench {
         case None => SparkEntry.queries.filterNot(_._1.startsWith("stream_"))
           .toSeq.sortBy(_._1)
       }
-    val noCold = sys.env.get("SPARK_GRAFT_NOCOLD").exists(_ == "1")
-    // SPARK_GRAFT_PROFILE=1: per-query phase breakdown (build = the
-    // queries-map closure, analyze = force the executed plan, run1/run2
-    // = the two executions) to stderr — the diagnostic that attributes
-    // the per-query fixed floor to analysis vs codegen/JIT vs execution.
-    val profile = sys.env.get("SPARK_GRAFT_PROFILE").exists(_ == "1")
-    // SPARK_GRAFT_EXPLAIN=1: dump each selected query's final (AQE-
-    // resolved where possible) formatted plan to stderr AFTER executing
-    // it once — the artifact for scan-count / exchange-reuse audits.
-    // SPARK_GRAFT_EXPLAIN_FORMAT selects the explain mode for the dump
-    // (e.g. "formatted" for the numbered-operator plans/r16 artifacts);
-    // unset keeps the historical executedPlan.toString rendering.
-    val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").exists(_ == "1")
-    val explainFmt = sys.env.get("SPARK_GRAFT_EXPLAIN_FORMAT")
-    if (explain) selected.foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        // df.count() would build a SEPARATE QueryExecution (the count
-        // aggregate) and leave df's own AQE plan unexecuted; toRdd
-        // executes THIS QueryExecution, so the printed plan is the
-        // AQE-finalized one that actually ran.
-        df.queryExecution.toRdd.count()
-        System.err.println(s"==== $name ====")
-        System.err.println(explainFmt match {
-          case Some(m) => df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString(m))
-          case None => df.queryExecution.executedPlan.toString
-        })
-      } catch { case e: Throwable =>
-        System.err.println(s"==== $name ==== EXPLAIN FAILED: ${e.getMessage}")
-      }
-    }
     // Timing executes each query's OWN physical plan via toRdd (round-9
     // measurement fix): `df.count()` builds a separate count
     // QueryExecution in which Catalyst prunes every unreferenced
@@ -680,23 +646,8 @@ object Bench {
             None
           }
         }
-        if (profile) {
-          def ms[T](f: => T): (Double, T) = {
-            val t0 = System.nanoTime(); val r = f
-            ((System.nanoTime() - t0) / 1e9, r)
-          }
-          try {
-            val (tBuild, df) = ms(fn(spark, sfDir))
-            val (tAnalyze, _) = ms(df.queryExecution.executedPlan)
-            val (tRun1, _) = ms(runPlan(df))
-            val (tRun2, _) = ms(runPlan(df))
-            System.err.println(
-              f"[profile] $name%-28s build=$tBuild%.3f analyze=$tAnalyze%.3f run1=$tRun1%.3f run2=$tRun2%.3f")
-          } catch { case _: Throwable => () }
-        }
-        // cold eviction AFTER the profile block (profile re-warms
-        // memos) and BEFORE the first timed run — see header comment
-        if (!noCold) graft.util.SessionCache.evictAllForCold()
+        // cold eviction BEFORE the first timed run — see header comment
+        graft.util.SessionCache.evictAllForCold()
         val pair = (once(), once()) match {
           case (Some(r1), Some(r2)) => Some((r1, r2))
           case (Some(r1), None) => Some((r1, r1)) // run2 died: price run1

@@ -38,40 +38,15 @@ object ScaleProbe {
     // than the data growth explains); a constant FLOOR is fixed
     // per-query overhead that amortizes to zero at real scale and must
     // be divided out before reading a fixed-output probe's raw ratio.
-    // Union-of-intervals, not sum-of-durations — AQE stages overlap and
-    // summing would double-count wall time.
-    final class JobClock extends org.apache.spark.scheduler.SparkListener {
-      private[this] var running = 0
-      private[this] var spanStart = 0L
-      private[this] var busyNs = 0L
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        synchronized {
-          if (running == 0) spanStart = System.nanoTime()
-          running += 1
-        }
-      override def onJobEnd(
-          j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        synchronized {
-          running -= 1
-          if (running == 0) busyNs += System.nanoTime() - spanStart
-        }
-      def snapshotNs: Long = synchronized {
-        if (running > 0) busyNs + (System.nanoTime() - spanStart)
-        else busyNs
-      }
-    }
-    val jobClock = new JobClock
-    spark.sparkContext.addSparkListener(jobClock)
+    // The job span is [[graft.util.JobCount]]'s union of job intervals.
     def time(f: => Long): (Double, Long, Double) = {
-      // fence the async bus on BOTH sides, else the counter races the
-      // last job's end event and under-counts it
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
-      val b0 = jobClock.snapshotNs
-      val s = System.nanoTime(); val rows = f
-      val wall = (System.nanoTime() - s) / 1e9
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
-      ((wall, rows, (jobClock.snapshotNs - b0) / 1e9))
+      var wall = 0.0
+      val (rows, jobs) = graft.util.JobCount(spark) {
+        val s = System.nanoTime(); val r = f
+        wall = (System.nanoTime() - s) / 1e9
+        r
+      }
+      (wall, rows, jobs.busySec)
     }
 
     // Execute the frame's OWN physical plan (round-9): `df.count()`
@@ -981,8 +956,7 @@ object ScaleProbe {
     // same fixtures/copies/cpus, adjudication disabled in the child so
     // it cannot recurse) and BOTH readings land in one artifact under
     // `adjudication` — no hand-assembled file in r13+.
-    val adjThreshold = sys.env
-      .getOrElse("SPARK_GRAFT_ADJ_THRESHOLD", "1.5").toDouble
+    val adjThreshold = 1.5
     // recursion guard: the child runs with ADJUDICATE=0, so a solo
     // re-run can never spawn its own grandchildren (a filtered run
     // may still adjudicate — that is also the cheap smoke path)

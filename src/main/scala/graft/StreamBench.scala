@@ -259,49 +259,30 @@ object StreamBench {
           (a, b) => if (b._2 < a._2) b else a)
       }
 
-    // Hot-key arm (VERDICT r9 task #3): the SAME enrichment dataflow
-    // on a 90%-one-symbol feed, once through the bare-symbol-keyed
-    // transformWithState path and once through the salted micro-batch
-    // path ([[graft.streaming.SaltedCumVolBatch]]). The TWS number is
-    // the serialization ceiling one hot key imposes on a state
-    // partition; the salted number is what the per-batch (key, day,
-    // bucket) fan-out buys back. Both runs are parse → enrich →
-    // LwwSink with identical sink keys — only the enrichment operator
-    // differs.
-    // SPARK_GRAFT_STREAM_HOTROWS sizes this arm independently: the
-    // salted path's advantage is a function of HOT-KEY ROWS PER
-    // MICRO-BATCH (its two extra per-batch jobs are fixed cost), so
-    // the crossover study needs this arm big while the others stay at
-    // the default volume.
-    val hkN = sys.env.getOrElse("SPARK_GRAFT_STREAM_HOTROWS", nRows.toString).toInt
-    val hk: Option[(Double, Double, Long)] =
+    // Hot-key arm: the tick pipeline's enrichment on a 90%-one-symbol
+    // feed — parse → transformWithState cumvol (state keyed by bare
+    // symbol) → LwwSink. The number is the serialization ceiling one
+    // hot key imposes on a state partition.
+    val hk: Option[(Double, Long)] =
       if (!enabled("hotkey")) None
       else Some {
         hotkeyRun(spark, work, 10000, "hkwarm")
         measureArm("hotkey") { i =>
-          hotkeyRun(spark, work, hkN, s"hk_s$i")
-        }(r => Seq("hotkey_tws" -> r._3 / r._1,
-            "hotkey_salted" -> r._3 / r._2),
-          // per-sub-measurement best: each arm sample is a complete,
-          // valid measurement of both operators, so min-sec per side
-          (a, b) => (math.min(a._1, b._1), math.min(a._2, b._2), a._3))
+          hotkeyRun(spark, work, nRows, s"hk_s$i")
+        }(r => Seq("hotkey_tws" -> r._2 / r._1),
+          (a, b) => if (b._1 < a._1) b else a)
       }
 
-    // Hot-key AS-OF arm (VERDICT r10 task #6, r11 task #2): the cumvol
-    // hotkey arm grounded the TWS-vs-salted decision for running sums;
-    // this one grounds the SAME decision for the as-of enrichment path
-    // with BOTH sides measured — bare-symbol TWS vs the salted
-    // micro-batch carry-table path (SaltedAsofBatch), mirroring
-    // hotkeyRun.
-    val hka: Option[(Double, Double, Long)] =
+    // Hot-key AS-OF arm: the same feed shape through the as-of
+    // enrichment ([[graft.streaming.AsofEnrichProcessor]]).
+    val hka: Option[(Double, Long)] =
       if (!enabled("hotkey_asof")) None
       else Some {
         hotkeyAsofRun(spark, work, 10000, "hkawarm")
         measureArm("hotkey_asof") { i =>
-          hotkeyAsofRun(spark, work, hkN, s"hka_s$i")
-        }(r => Seq("hotkey_asof_tws" -> r._3 / r._1,
-            "hotkey_asof_salted" -> r._3 / r._2),
-          (a, b) => (math.min(a._1, b._1), math.min(a._2, b._2), a._3))
+          hotkeyAsofRun(spark, work, nRows, s"hka_s$i")
+        }(r => Seq("hotkey_asof_tws" -> r._2 / r._1),
+          (a, b) => if (b._1 < a._1) b else a)
       }
 
     // Recovery-latency arm (VERDICT r14 task #5): crash-recovery
@@ -347,13 +328,11 @@ object StreamBench {
     cdc.foreach { case (cdcKeys, cdcSec) =>
       parts += f""""cdc":{"ops_per_sec":${nRows / cdcSec}%.1f,"ops":$nRows,"live_keys":$cdcKeys,"sec":$cdcSec%.3f}"""
     }
-    hk.foreach { case (hkTws, hkSalted, hkRows) =>
-      parts += f""""hotkey":{"rows":$hkRows,"tws_sec":$hkTws%.3f,"tws_rows_per_sec":${hkRows / hkTws}%.1f,""" +
-        f""""salted_sec":$hkSalted%.3f,"salted_rows_per_sec":${hkRows / hkSalted}%.1f}"""
+    hk.foreach { case (hkSec, hkRows) =>
+      parts += f""""hotkey":{"rows":$hkRows,"tws_sec":$hkSec%.3f,"tws_rows_per_sec":${hkRows / hkSec}%.1f}"""
     }
-    hka.foreach { case (haTws, haSalted, haRows) =>
-      parts += f""""hotkey_asof":{"rows":$haRows,"tws_sec":$haTws%.3f,"tws_rows_per_sec":${haRows / haTws}%.1f,""" +
-        f""""salted_sec":$haSalted%.3f,"salted_rows_per_sec":${haRows / haSalted}%.1f}"""
+    hka.foreach { case (haSec, haRows) =>
+      parts += f""""hotkey_asof":{"rows":$haRows,"tws_sec":$haSec%.3f,"tws_rows_per_sec":${haRows / haSec}%.1f}"""
     }
     rec.foreach { case (recKeys, recStateRows, recFirstBatch, recDrain) =>
       parts += f""""recovery":{"keys":$recKeys,"state_rows":$recStateRows,""" +
@@ -545,16 +524,12 @@ object StreamBench {
   }
 
   /** Hot-key run: 90% of rows on symbol HOT (the rest over 50 cold
-    * symbols), strictly increasing times. Returns (tws sec, salted
-    * sec, rows landed by the salted arm). Both arms drain the same
-    * spool through parse → cumvol enrichment → LwwSink keyed
-    * (symbol, time, price); maxFilesPerTrigger forces multiple
-    * micro-batches so the carry table and cross-batch state both do
-    * real work.
+    * symbols), strictly increasing times, through the tick pipeline's
+    * cumvol enrichment into an LwwSink keyed (symbol, time, price).
+    * Returns (sec, rows landed).
     */
   private def hotkeyRun(spark: SparkSession,
-      work: java.nio.file.Path, nRows: Int, tag: String): (Double, Double, Long) = {
-    import spark.implicits._
+      work: java.nio.file.Path, nRows: Int, tag: String): (Double, Long) = {
     val t0 = 1687176000L
     val lines = spark.range(nRows).select(concat(
       lit("""{"topic": "feed", "frameType": "TICK", "payload": {"symbol": """"),
@@ -566,60 +541,19 @@ object StreamBench {
       lit(""", "type": """"),
       when(col("id") % 2 === 0, "B").otherwise("S"),
       lit(""""}}""")).as("value"))
-    val sub = work.resolve(s"${tag}_spool")
-    Files.createDirectories(sub)
-    val spool = graft.source.SpoolWriter.write(lines, sub, Some(10))
-    def envStream() = spark.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool).option("maxFilesPerTrigger", "3").load()
-    // arm 1: transformWithState, state keyed by bare symbol (the
-    // session conf already selects RocksDB)
-    val twsRoot = work.resolve(s"${tag}_tws").toString
-    val tTws = System.nanoTime()
-    val q1 = graft.streaming.Pipelines.tickPipeline(envStream()).toDF()
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$twsRoot/ckpt")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(batch.toDF(), id, s"$twsRoot/sink", "feed",
-          "tick", Seq("symbol", "time", "price"))
-      }.start()
-    try q1.processAllAvailable() finally q1.stop()
-    val twsSec = (System.nanoTime() - tTws) / 1e9
-    // arm 2: salted micro-batch prefix scan + carry table
-    val sRoot = work.resolve(s"${tag}_salted").toString
-    val tS = System.nanoTime()
-    val q2 = graft.streaming.SaltedCumVolBatch.start(envStream(),
-      s"$sRoot/sink", s"$sRoot/ckpt", s"$sRoot/state")
-    try q2.processAllAvailable() finally q2.stop()
-    val saltedSec = (System.nanoTime() - tS) / 1e9
-    val landed = LwwSink.read(spark, s"$sRoot/sink", "feed", "tick_salted")
-      .count()
-    (twsSec, saltedSec, landed)
+    hotkeyDrain(spark, work, lines, tag,
+      graft.streaming.Pipelines.tickPipeline(_).toDF(),
+      "tick", Seq("symbol", "time", "price"))
   }
 
-  /** Hot-key AS-OF run (VERDICT r10 task #6, r11 task #2): streaming
-    * as-of enrichment on the same 90%-one-symbol feed shape as
-    * [[hotkeyRun]] — every 3rd row a quote ("Q", kind 0), the rest
-    * trades, strictly increasing times — A/B'd through BOTH operators,
-    * mirroring the cumvol arm:
-    *
-    *   arm 1: BARE-symbol keyed [[graft.streaming.AsofEnrichProcessor]]
-    *     (transformWithState / RocksDB) — the serialization ceiling one
-    *     hot key imposes on a state partition;
-    *   arm 2: [[graft.streaming.SaltedAsofBatch]] — per-micro-batch
-    *     salted as-of kernel + last-quote carry table, the hot-key
-    *     escape hatch, now measured instead of asserted to port (r11
-    *     ADVICE: the TWS-vs-salted decision for as-of previously rested
-    *     on the cumvol cost-class analogy).
-    *
-    * Both arms are parse → enrich → LwwSink keyed (symbol, time); only
-    * the enrichment operator differs. Returns (twsSec, saltedSec,
-    * enriched trade rows landed by the salted arm).
+  /** Hot-key AS-OF run: the [[hotkeyRun]] feed shape with every 3rd row
+    * a quote ("Q") and the rest trades, through
+    * [[graft.streaming.AsofEnrichProcessor]] into an LwwSink keyed
+    * (symbol, time). Returns (sec, enriched trade rows landed).
     */
   private def hotkeyAsofRun(spark: SparkSession,
       work: java.nio.file.Path, nRows: Int,
-      tag: String): (Double, Double, Long) = {
-    import spark.implicits._
+      tag: String): (Double, Long) = {
     val t0 = 1687176000L
     val lines = spark.range(nRows).select(concat(
       lit("""{"topic": "feed", "frameType": "TICK", "payload": {"symbol": """"),
@@ -633,44 +567,37 @@ object StreamBench {
       when(col("id") % 3 === 0, "Q")
         .when(col("id") % 2 === 0, "B").otherwise("S"),
       lit(""""}}""")).as("value"))
+    hotkeyDrain(spark, work, lines, tag,
+      graft.streaming.AsofEnrichProcessor.enrich(_).toDF(),
+      "asof", Seq("symbol", "time"))
+  }
+
+  /** The hot-key arms' shared drain: spool `lines` into 10 files, then
+    * (timed) stream them 3 files per micro-batch — so cross-batch state
+    * does real work — through `enrich` into a fresh LwwSink `table`
+    * keyed by `pk`. Returns (sec, rows landed).
+    */
+  private def hotkeyDrain(spark: SparkSession, work: java.nio.file.Path,
+      lines: org.apache.spark.sql.DataFrame, tag: String,
+      enrich: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      table: String, pk: Seq[String]): (Double, Long) = {
     val sub = work.resolve(s"${tag}_spool")
     Files.createDirectories(sub)
     val spool = graft.source.SpoolWriter.write(lines, sub, Some(10))
-    def envStream() = spark.readStream
+    val root = work.resolve(s"${tag}_tws").toString
+    val t = System.nanoTime()
+    val env = spark.readStream
       .format(classOf[graft.source.EnvelopeSourceProvider].getName)
       .option("path", spool).option("maxFilesPerTrigger", "3").load()
-    // arm 1: transformWithState, state keyed by bare symbol
-    val twsRoot = work.resolve(s"${tag}_tws").toString
-    val tTws = System.nanoTime()
-    val evs = graft.streaming.Pipelines.parseTicks(envStream())
-      .filter(!col("_corrupt"))
-      .select(col("symbol"), col("time"),
-        when(col("tradeType") === "Q", 0).otherwise(1).as("kind"),
-        col("price"), col("tradeType"))
-      .as[graft.streaming.AsofEnrichProcessor.MarketEv]
-    val q1 = evs.groupByKey(_.symbol)
-      .transformWithState(new graft.streaming.AsofEnrichProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      .toDF()
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$twsRoot/ckpt")
+    val q = enrich(env).writeStream.outputMode("append")
+      .option("checkpointLocation", s"$root/ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        LwwSink.upsertBatch(batch.toDF(), id, s"$twsRoot/sink", "feed",
-          "asof", Seq("symbol", "time"))
+        LwwSink.upsertBatch(batch.toDF(), id, s"$root/sink", "feed",
+          table, pk)
       }.start()
-    try q1.processAllAvailable() finally q1.stop()
-    val twsSec = (System.nanoTime() - tTws) / 1e9
-    // arm 2: salted micro-batch as-of kernel + last-quote carry table
-    val sRoot = work.resolve(s"${tag}_salted").toString
-    val tS = System.nanoTime()
-    val q2 = graft.streaming.SaltedAsofBatch.start(envStream(),
-      s"$sRoot/sink", s"$sRoot/ckpt", s"$sRoot/state")
-    try q2.processAllAvailable() finally q2.stop()
-    val saltedSec = (System.nanoTime() - tS) / 1e9
-    val landed = LwwSink.read(spark, s"$sRoot/sink", "feed", "asof_salted")
-      .count()
-    (twsSec, saltedSec, landed)
+    try q.processAllAvailable() finally q.stop()
+    val sec = (System.nanoTime() - t) / 1e9
+    (sec, LwwSink.read(spark, s"$root/sink", "feed", table).count())
   }
 
   /** CDC-apply run: tick envelopes whose type field carries I/U/D ops

@@ -32,8 +32,8 @@ object StreamE2EQueries extends QueryPack {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_e2e_sink" -> ((s, dir) => run(s, dir)),
-    "stream_e2e_cumvol" -> ((s, dir) => runCumvol(s, dir)),
-    "stream_e2e_cumvol_salted" -> ((s, dir) => runCumvolSalted(s, dir)),
+    "stream_e2e_cumvol" -> ((s, dir) => runCumvol(s, dir, paced = false)),
+    "stream_e2e_cumvol_paced" -> ((s, dir) => runCumvol(s, dir, paced = true)),
     "stream_e2e_rolling" -> ((s, dir) => runRolling(s, dir)),
     "stream_e2e_join" -> ((s, dir) => runJoin(s, dir)),
     // plain DISTINCT over the same pure-function-of-key payload: the
@@ -42,9 +42,9 @@ object StreamE2EQueries extends QueryPack {
     "stream_e2e_session" -> ((s, dir) => runSession(s, dir)),
     "stream_e2e_counts" -> ((s, dir) => runCounts(s, dir)),
     "stream_e2e_enrich" -> ((s, dir) => runEnrich(s, dir)),
-    "stream_e2e_asof" -> ((s, dir) => runAsof(s, dir)),
+    "stream_e2e_asof" -> ((s, dir) => runAsof(s, dir, paced = false)),
     "stream_e2e_funnel" -> ((s, dir) => runFunnel(s, dir)),
-    "stream_e2e_asof_salted" -> ((s, dir) => runAsofSalted(s, dir)),
+    "stream_e2e_asof_paced" -> ((s, dir) => runAsof(s, dir, paced = true)),
     "stream_e2e_topk" -> ((s, dir) => runTopK(s, dir)),
     "stream_e2e_tumbling" -> ((s, dir) => runTumbling(s, dir)),
     "stream_e2e_neardup" -> ((s, dir) => runNearDup(s, dir)),
@@ -239,14 +239,21 @@ object StreamE2EQueries extends QueryPack {
       .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
   }
 
-  private def runAsof(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
+  /** Streaming as-of end to end: deduped trades and per-second max-price
+    * quotes as TICK envelopes ("Q" = quote) → [[graft.streaming
+    * .AsofEnrichProcessor]] → LWW sink keyed (symbol, time) → read-back,
+    * against [[asofOracle]]. Not `paced`: each symbol's rows sit in one
+    * spool file in (time, kind) order, so a symbol never crosses a
+    * micro-batch. `paced`: the spool files are time RANGES read two per
+    * micro-batch, so every symbol crosses batch boundaries and a trade
+    * can take its quote from the state an earlier batch left; times are
+    * non-decreasing across batches for every symbol (a quote and a trade
+    * of the same second share a range), and the processor orders each
+    * batch by (time, kind) itself.
+    */
+  private def runAsof(s: SparkSession, dir: String, paced: Boolean): DataFrame = {
     val ev = Tables(s, dir, "events")
-    val trades = LwwDedup(
-      ev.filter(col("event_type").isin("purchase", "click"))
-        .withColumn("time_s", expr("unix_micros(ts) div 1000000")),
-      Seq(col("user_id"), col("time_s")),
-      Seq(col("event_id")))
+    val trades = dedupedTicks(s, dir)
       .select(col("user_id"), col("time_s"), col("value").as("price"),
         stdType.as("typ"), lit(1).as("kind"))
     val quotes = ev.filter(col("event_type") === "view")
@@ -255,72 +262,19 @@ object StreamE2EQueries extends QueryPack {
       .agg(max(col("value")).as("price"))
       .select(col("user_id"), col("time_s"), col("price"),
         lit("Q").as("typ"), lit(0).as("kind"))
-    val base = trades.unionByName(quotes)
-      .repartition(4, col("user_id"))
-      .sortWithinPartitions(col("time_s"), col("kind"))
+    val both = trades.unionByName(quotes)
+    val base =
+      if (paced) both.repartitionByRange(4, col("time_s"))
+      else both.repartition(4, col("user_id"))
+        .sortWithinPartitions(col("time_s"), col("kind"))
     val sp = spooled(s, tickLines(base, col("price"),
-      floor(col("price")).cast("int"), col("typ")), "graft_e2e_asof",
-      repartitionTo = None) // preserve per-symbol file locality
-    val evs = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
-      .select(col("symbol"), col("time"),
-        when(col("tradeType") === "Q", 0).otherwise(1).as("kind"),
-        col("price"), col("tradeType"))
-      .as[graft.streaming.AsofEnrichProcessor.MarketEv]
-    drain(evs.groupByKey(_.symbol)
-      .transformWithState(new graft.streaming.AsofEnrichProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      .toDF(), "append", sp, "feed", "asof", Seq("symbol", "time"))
+      floor(col("price")).cast("int"), col("typ")),
+      if (paced) "graft_e2e_asofp" else "graft_e2e_asof",
+      repartitionTo = None, // preserve the file layout chosen above
+      maxFilesPerTrigger = if (paced) Some(2) else None)
+    drain(graft.streaming.AsofEnrichProcessor.enrich(sp.env).toDF(),
+      "append", sp, "feed", "asof", Seq("symbol", "time"))
     LwwSink.read(s, sp.sinkRoot, "feed", "asof")
-      .select(col("symbol"), col("time").as("time_s"), col("price"),
-        col("tradeType").as("trade_type"),
-        col("quoteTime").as("quote_time"),
-        col("quotePrice").as("quote_price"))
-  }
-
-  /** SALTED STREAMING AS-OF end to end (round-12, VERDICT r11 task
-    * #2): the SAME quotes-and-trades feed and the IDENTICAL DuckDB
-    * ASOF JOIN oracle as `stream_e2e_asof`, run through
-    * [[graft.streaming.SaltedAsofBatch]] instead of the bare-symbol
-    * transformWithState processor — per micro-batch the salted batch
-    * as-of kernel ((key, time-bucket) windows + boundary carry), with
-    * cross-batch continuity through the one-last-quote-per-symbol
-    * carry table. Certifies that the hot-key escape hatch lands on the
-    * exact row set the TWS path does, under the cumvol standard (the
-    * r10 bar: the alternative must be BUILT and oracle-certified, not
-    * asserted to port).
-    *
-    * Feed discipline: time-RANGE-partitioned spool files (the
-    * runCumvolSalted layout) + maxFilesPerTrigger, so event times are
-    * non-decreasing across micro-batches for every symbol — the carry
-    * table's documented ordering contract. Within a file/batch, order
-    * is free (the kernel sorts by (time, tag) itself).
-    */
-  private def runAsofSalted(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables(s, dir, "events")
-    val trades = LwwDedup(
-      ev.filter(col("event_type").isin("purchase", "click"))
-        .withColumn("time_s", expr("unix_micros(ts) div 1000000")),
-      Seq(col("user_id"), col("time_s")),
-      Seq(col("event_id")))
-      .select(col("user_id"), col("time_s"), col("value").as("price"),
-        stdType.as("typ"))
-    val quotes = ev.filter(col("event_type") === "view")
-      .withColumn("time_s", expr("unix_micros(ts) div 1000000"))
-      .groupBy("user_id", "time_s")
-      .agg(max(col("value")).as("price"))
-      .select(col("user_id"), col("time_s"), col("price"),
-        lit("Q").as("typ"))
-    val base = trades.unionByName(quotes)
-      .repartitionByRange(4, col("time_s"))
-    val sp = spooled(s, tickLines(base, col("price"),
-      floor(col("price")).cast("int"), col("typ")), "graft_e2e_asofs",
-      repartitionTo = None, // preserve the time-ranged file layout
-      maxFilesPerTrigger = Some(2)) // carry table does real work
-    val q = graft.streaming.SaltedAsofBatch.start(sp.env, sp.sinkRoot,
-      sp.ckpt, sp.work.resolve("state").toString)
-    try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sp.sinkRoot, "feed", "asof_salted")
       .select(col("symbol"), col("time").as("time_s"), col("price"),
         col("tradeType").as("trade_type"),
         col("quoteTime").as("quote_time"),
@@ -777,62 +731,30 @@ object StreamE2EQueries extends QueryPack {
   /** The STATEFUL path end to end: TICK envelopes → envelope source →
     * parse → keyed cumulative state (A1+A2: per-(symbol, UTC-day)
     * running buy/sell totals) → LWW sink → read-back, against a DuckDB
-    * window-function oracle. Determinism rests on THREE legs, each
-    * load-bearing: one tick per (symbol, second) (pre-dedup); a
-    * symbol's envelopes all in ONE spool file in time order (hash
-    * partition by symbol + sort within partitions, preserved through
-    * the narrow to_json projection and `repartitionTo = None`), so any
-    * admission pacing keeps a symbol's rows inside a single
-    * micro-batch; and the processor's stable per-batch time sort.
-    * Without the file-locality leg, a maxFilesPerTrigger setting could
-    * split a symbol across batches and the per-batch sort could not
-    * order rows across the batch boundary.
+    * window-function oracle. Both feeds are pre-deduped to one tick per
+    * (symbol, second), and the processor stable-sorts each batch by
+    * time. Not `paced`: a symbol's envelopes all sit in ONE spool file
+    * in time order (hash partition by symbol + sort within partitions,
+    * preserved through the narrow to_json projection and `repartitionTo
+    * = None`), so any admission pacing keeps a symbol inside a single
+    * micro-batch. `paced`: the spool files are time RANGES read two per
+    * micro-batch, so every symbol crosses batch boundaries (day
+    * rollovers included) and the state store carries its sums; a
+    * symbol's times are non-decreasing across batches by construction.
     */
-  private def runCumvol(s: SparkSession, dir: String): DataFrame = {
-    val base = dedupedTicks(s, dir)
-      .repartition(4, col("user_id"))
-      .sortWithinPartitions(col("time_s"))
+  private def runCumvol(s: SparkSession, dir: String, paced: Boolean): DataFrame = {
+    val ticks = dedupedTicks(s, dir)
+    val base =
+      if (paced) ticks.repartitionByRange(4, col("time_s"))
+      else ticks.repartition(4, col("user_id"))
+        .sortWithinPartitions(col("time_s"))
     val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
-      "graft_e2e_cv",
-      repartitionTo = None) // preserve per-symbol file locality
+      if (paced) "graft_e2e_cvp" else "graft_e2e_cv",
+      repartitionTo = None, // preserve the file layout chosen above
+      maxFilesPerTrigger = if (paced) Some(2) else None)
     val qs = Pipelines.start(sp.env, "tick", sp.sinkRoot, sp.ckpt)
     try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
     LwwSink.read(s, sp.sinkRoot, "feed", "tick")
-      .select(col("symbol"), col("time").as("time_s"), col("volume"),
-        col("tradeType").as("trade_type"),
-        col("cumbuy"), col("cumsell"), col("cumdelta"))
-  }
-
-  /** The HOT-KEY-SAFE salted streaming path end to end (round 10,
-    * VERDICT r9 #3) against the IDENTICAL oracle as
-    * `stream_e2e_cumvol` — the same certification move
-    * tick_cumvol_salted made for the batch escape hatch:
-    * [[graft.streaming.SaltedCumVolBatch]] (per-micro-batch salted
-    * prefix scan + versioned carry-in table) must land the exact row
-    * set the bare-key stateful processor does. Determinism legs
-    * DIFFER from runCumvol on purpose: the spool is range-partitioned
-    * by TIME (file order = time order, every symbol spans every
-    * file), and maxFilesPerTrigger=2 forces multiple micro-batches —
-    * so every symbol crosses batch boundaries and the carry table
-    * does real work under the oracle (the MemoryStream suite pins the
-    * same property unit-level; this row pins it through the full
-    * spool → source → sink dataflow). Per-key file locality is NOT
-    * needed: the salted scan orders (time, tiebreak) inside each
-    * batch itself, and cross-batch continuity is the carry's job —
-    * only day monotonicity across batches is required, which time-
-    * ranged files give by construction.
-    */
-  private def runCumvolSalted(s: SparkSession, dir: String): DataFrame = {
-    val base = dedupedTicks(s, dir)
-      .repartitionByRange(4, col("time_s"))
-    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
-      "graft_e2e_cvs",
-      repartitionTo = None, // preserve the time-ranged file layout
-      maxFilesPerTrigger = Some(2))
-    val q = graft.streaming.SaltedCumVolBatch.start(sp.env, sp.sinkRoot,
-      sp.ckpt, sp.work.resolve("state").toString)
-    try q.processAllAvailable() finally q.stop()
-    LwwSink.read(s, sp.sinkRoot, "feed", "tick_salted")
       .select(col("symbol"), col("time").as("time_s"), col("volume"),
         col("tradeType").as("trade_type"),
         col("cumbuy"), col("cumsell"), col("cumdelta"))
@@ -1223,8 +1145,38 @@ object StreamE2EQueries extends QueryPack {
   private val cumvolSide = (m: String) =>
     s"CAST(SUM(CASE WHEN typ = '$m' THEN CAST(floor(value) AS INT) ELSE 0 END) OVER w AS BIGINT)"
 
-  /** ONE definition of cumvol-correct, certified against by BOTH the
-    * bare-key stateful path and the salted micro-batch path.
+  /** ONE definition of streaming-asof-correct, shared by the rows that
+    * feed [[graft.streaming.AsofEnrichProcessor]] with each symbol in one
+    * micro-batch and across batches: DuckDB's NATIVE ASOF JOIN as the
+    * mirror of the streamed last-quote state — deduped trades ×
+    * max-price-per-second quotes, inclusive <= (a quote at the trade's
+    * own second is visible — the processor's quotes-before-ticks fold
+    * order). Inner: a trade before any quote emits nothing on either
+    * engine.
+    */
+  private lazy val asofOracle: String =
+    """WITH t AS (
+       |  SELECT * FROM (
+       |    SELECT user_id, epoch_us(ts) // 1000000 AS sec, value,
+       |      CASE WHEN event_type = 'purchase' THEN 'B' ELSE 'S' END AS typ,
+       |      row_number() OVER (PARTITION BY user_id, epoch_us(ts) // 1000000
+       |                         ORDER BY event_id DESC) AS rn
+       |    FROM events WHERE event_type IN ('purchase', 'click'))
+       |  WHERE rn = 1),
+       |q AS (
+       |  SELECT user_id, epoch_us(ts) // 1000000 AS sec,
+       |    MAX(value) AS qprice
+       |  FROM events WHERE event_type = 'view'
+       |  GROUP BY 1, 2)
+       |SELECT CAST(t.user_id AS VARCHAR) AS symbol, t.sec AS time_s,
+       |  t.value AS price, t.typ AS trade_type,
+       |  q.sec AS quote_time, q.qprice AS quote_price
+       |FROM t ASOF JOIN q
+       |  ON t.user_id = q.user_id AND q.sec <= t.sec""".stripMargin
+
+  /** ONE definition of cumvol-correct, shared by the rows that feed the
+    * tick pipeline with each symbol in one micro-batch and across
+    * batches.
     */
   private lazy val cumvolOracle: String =
     s"""WITH base AS (
@@ -1475,10 +1427,9 @@ object StreamE2EQueries extends QueryPack {
 
     "stream_e2e_cumvol" -> cumvolOracle,
 
-    // the salted streaming path certifies against the IDENTICAL SQL —
-    // the tick_cumvol/tick_cumvol_salted precedent applied to the
-    // streaming tier: two implementations, one definition of correct
-    "stream_e2e_cumvol_salted" -> cumvolOracle,
+    // the paced feed lands on the same row set: cross-batch state
+    // continuity is invisible in the result
+    "stream_e2e_cumvol_paced" -> cumvolOracle,
 
     // the batch rolling-window mirror of the streamed ring: 24-event
     // frame per user over the deduped (user, second) ticks, |z| > 2σ in
@@ -1561,53 +1512,11 @@ object StreamE2EQueries extends QueryPack {
         |  CAST(floor(c.c_acctbal * 100) AS BIGINT) AS bal_cents
         |FROM base b JOIN customer c ON b.user_id = c.c_custkey""".stripMargin,
 
-    // DuckDB's NATIVE ASOF JOIN as the mirror of the streamed last-quote
-    // state: deduped trades × max-price-per-second quotes, inclusive <=
-    // (a quote at the trade's own second is visible — the processor's
-    // quotes-before-ticks fold order). Inner: a trade before any quote
-    // emits nothing on either engine.
-    "stream_e2e_asof" ->
-      """WITH t AS (
-        |  SELECT * FROM (
-        |    SELECT user_id, epoch_us(ts) // 1000000 AS sec, value,
-        |      CASE WHEN event_type = 'purchase' THEN 'B' ELSE 'S' END AS typ,
-        |      row_number() OVER (PARTITION BY user_id, epoch_us(ts) // 1000000
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type IN ('purchase', 'click'))
-        |  WHERE rn = 1),
-        |q AS (
-        |  SELECT user_id, epoch_us(ts) // 1000000 AS sec,
-        |    MAX(value) AS qprice
-        |  FROM events WHERE event_type = 'view'
-        |  GROUP BY 1, 2)
-        |SELECT CAST(t.user_id AS VARCHAR) AS symbol, t.sec AS time_s,
-        |  t.value AS price, t.typ AS trade_type,
-        |  q.sec AS quote_time, q.qprice AS quote_price
-        |FROM t ASOF JOIN q
-        |  ON t.user_id = q.user_id AND q.sec <= t.sec""".stripMargin,
+    "stream_e2e_asof" -> asofOracle,
 
-    // IDENTICAL oracle as stream_e2e_asof (byte-for-byte): the salted
-    // micro-batch path must land on the exact same row set as the
-    // bare-key TWS path — that equality IS what this row certifies
-    "stream_e2e_asof_salted" ->
-      """WITH t AS (
-        |  SELECT * FROM (
-        |    SELECT user_id, epoch_us(ts) // 1000000 AS sec, value,
-        |      CASE WHEN event_type = 'purchase' THEN 'B' ELSE 'S' END AS typ,
-        |      row_number() OVER (PARTITION BY user_id, epoch_us(ts) // 1000000
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type IN ('purchase', 'click'))
-        |  WHERE rn = 1),
-        |q AS (
-        |  SELECT user_id, epoch_us(ts) // 1000000 AS sec,
-        |    MAX(value) AS qprice
-        |  FROM events WHERE event_type = 'view'
-        |  GROUP BY 1, 2)
-        |SELECT CAST(t.user_id AS VARCHAR) AS symbol, t.sec AS time_s,
-        |  t.value AS price, t.typ AS trade_type,
-        |  q.sec AS quote_time, q.qprice AS quote_price
-        |FROM t ASOF JOIN q
-        |  ON t.user_id = q.user_id AND q.sec <= t.sec""".stripMargin,
+    // the paced feed lands on the same row set: cross-batch state
+    // continuity is invisible in the result
+    "stream_e2e_asof_paced" -> asofOracle,
 
     // plain batch GROUP BY mirror of the streamed running totals
     "stream_e2e_counts" ->

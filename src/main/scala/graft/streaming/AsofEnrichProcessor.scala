@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.streaming.AsofEnrichProcessor.{AsofTick, MarketEv, QuoteState}
@@ -27,10 +28,10 @@ import graft.streaming.AsofEnrichProcessor.{AsofTick, MarketEv, QuoteState}
   *
   * Determinism contract (same legs as the cumvol processor): input is
   * pre-deduped to at most one tick and one quote per (symbol, second),
-  * and a symbol's rows arrive within one micro-batch in spool-file
-  * order — the per-batch sort here then fixes ONE fold order, so the
-  * emitted row set equals the batch oracle's regardless of arrival
-  * interleaving.
+  * and a symbol's times never go backwards from one micro-batch to the
+  * next (a symbol may sit inside one batch or span many) — the
+  * per-batch sort here then fixes ONE fold order, so the emitted row
+  * set equals the batch oracle's regardless of arrival interleaving.
   */
 class AsofEnrichProcessor
     extends StatefulProcessor[String, MarketEv, AsofTick] {
@@ -75,4 +76,22 @@ object AsofEnrichProcessor {
   case class AsofTick(
       symbol: String, time: Long, price: Double, tradeType: String,
       quoteTime: Long, quotePrice: Double)
+
+  /** Streaming (or batch) as-of enrichment of TICK envelopes: parse,
+    * drop corrupt rows, read type "Q" as a quote (kind 0) and every
+    * other type as a trade (kind 1), and fold each symbol's events
+    * through [[AsofEnrichProcessor]]. One shuffle on symbol; the state
+    * store holds one (time, price) pair per symbol.
+    */
+  def enrich(env: DataFrame): Dataset[AsofTick] = {
+    import env.sparkSession.implicits._
+    Pipelines.parseTicks(env).filter(!col("_corrupt"))
+      .select(col("symbol"), col("time"),
+        when(col("tradeType") === "Q", 0).otherwise(1).as("kind"),
+        col("price"), col("tradeType"))
+      .as[MarketEv]
+      .groupByKey(_.symbol)
+      .transformWithState(new AsofEnrichProcessor,
+        TimeMode.None(), OutputMode.Append())
+  }
 }

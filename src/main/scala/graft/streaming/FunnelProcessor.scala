@@ -15,7 +15,7 @@ import graft.model.Schemas.Tick
   * an LWW upsert keyed by symbol converges to the final stage under
   * replay.
   *
-  * Ordering contract (the SaltedCumVolBatch discipline): within a
+  * Ordering contract (the one [[CumVolStatefulProcessor]] keeps): within a
   * micro-batch rows fold in (time) order (sorted here — post-LWW-dedup
   * there is at most one event per (key, time), so the order is total);
   * ACROSS batches the caller must deliver each KEY's rows in time

@@ -2,8 +2,9 @@ package graft
 
 /** The driver contract itself: queries and oracles are total over each
   * other (every registered query is DuckDB-checked — none silently
-  * drops to the weaker rows-only gate), names are harness-safe, and
-  * the flagship entry resolves.
+  * drops to the weaker rows-only gate), names are harness-safe, the
+  * flagship entry resolves, and the committed query index matches the
+  * registry.
   */
 class HarnessContractSuite extends SparkSpec {
 
@@ -25,6 +26,13 @@ class HarnessContractSuite extends SparkSpec {
     val bad = SparkEntry.queries.keySet
       .filterNot(_.matches("[a-z][a-z0-9_]*"))
     assert(bad.isEmpty, s"non-identifier query names: $bad")
+  }
+
+  test("docs/QUERY_INDEX.md is the rendering of SparkEntry.packs") {
+    val committed = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("docs/QUERY_INDEX.md")), "UTF-8")
+    assert(committed === QueryIndex.render(SparkEntry.packs),
+      "stale index: run `tools/run.sh graft.QueryIndex docs/QUERY_INDEX.md`")
   }
 
   test("the flagship entry runs and produces rows at sf0.001") {

@@ -16,7 +16,7 @@ class JobBudgetSuite extends SparkSpec {
 
   private def warmJobs(q: String): Int = {
     SparkEntry.queries(q)(spark, Fixture).collect()
-    JobCount(spark)(SparkEntry.queries(q)(spark, Fixture).collect())._2
+    JobCount(spark)(SparkEntry.queries(q)(spark, Fixture).collect())._2.started
   }
 
   test("emb_kcenter_init: one job per round plus the input pin") {

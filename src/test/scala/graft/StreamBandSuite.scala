@@ -37,8 +37,7 @@ class StreamBandSuite extends AnyFunSuite {
       "values; the r15 contended pipeline reading flags against it") {
     val ref = StreamBench.RefRates
     for (arm <- Seq("pipeline", "socket", "neardup", "cdc",
-        "hotkey_tws", "hotkey_salted", "hotkey_asof_tws",
-        "hotkey_asof_salted"))
+        "hotkey_tws", "hotkey_asof_tws"))
       assert(ref.contains(arm), s"stream_ref.tsv missing $arm")
     assert(ref.values.forall { case (p, s) =>
       p > 100.0 && s >= 1.2 && s <= 2.0
@@ -56,9 +55,7 @@ class StreamBandSuite extends AnyFunSuite {
       "neardup" -> Seq(2462.4, 1952.1, 2088.7, 2640.7),
       "cdc" -> Seq(17227.1, 14490.3, 17669.7, 16511.5),
       "hotkey_tws" -> Seq(19627.3, 22951.5, 21162.0, 23206.6),
-      "hotkey_salted" -> Seq(12399.8, 16116.4, 13165.4, 13206.9),
-      "hotkey_asof_tws" -> Seq(12241.5, 13885.6, 9964.8, 13503.8),
-      "hotkey_asof_salted" -> Seq(9478.2, 11289.1, 9502.5, 10633.0))
+      "hotkey_asof_tws" -> Seq(12241.5, 13885.6, 9964.8, 13503.8))
     for ((arm, rates) <- quiet; r <- rates)
       assert(!StreamBench.underRate(r, ref.get(arm), 1.0),
         s"quiet historical reading $arm=$r must not flag")

@@ -99,24 +99,48 @@ class StreamingCumVolSuite extends SparkSpec {
   }
 
   test("streaming enrichment == batch CumVol window form on in-order data") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("symbol", "time", "cumbuy", "cumsell", "cumdelta")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4))).sortBy(r => (r._1, r._2)).toSeq
+    // batch window-function path (the oracle anchor)
+    def batchForm(ticks: Seq[Schemas.Tick]) =
+      rows(graft.ops.CumVol(
+        ticks.toDF(), col("symbol"), timestamp_seconds(col("time")),
+        col("time"), col("tradeType"), col("volume")))
+
+    // input 1: four symbols in one batch (transformWithState on a batch
+    // Dataset), crossing several UTC day boundaries in order
     val rng = new scala.util.Random(7)
     val ticks = (0 until 400).map { i =>
       Schemas.Tick(s"S${rng.nextInt(4)}", 1.0, 1.1, 1.2,
-        t0 + i * 700, // crosses several UTC day boundaries in order
-        rng.nextInt(50), Seq("B", "S", "X")(rng.nextInt(3)))
+        t0 + i * 700, rng.nextInt(50), Seq("B", "S", "X")(rng.nextInt(3)))
     }
-    // streaming-semantics path (transformWithState on a batch Dataset)
-    val streamed = CumVolStatefulProcessor.enrich(ticks.toDS())
-      .select("symbol", "time", "cumbuy", "cumsell", "cumdelta")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).sortBy(r => (r._1, r._2)).toSeq
-    // batch window-function path (the oracle anchor)
-    val batch = graft.ops.CumVol(
-        ticks.toDF(), col("symbol"), timestamp_seconds(col("time")),
-        col("time"), col("tradeType"), col("volume"))
-      .select("symbol", "time", "cumbuy", "cumsell", "cumdelta")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).sortBy(r => (r._1, r._2)).toSeq
-    assert(streamed === batch)
+    assert(rows(CumVolStatefulProcessor.enrich(ticks.toDS()).toDF()) ===
+      batchForm(ticks))
+
+    // input 2: 90% of rows on one symbol, strictly increasing times over
+    // ~2.8 UTC days, streamed as three micro-batches through the tick
+    // pipeline — every symbol crosses batch boundaries and day
+    // rollovers fire mid-stream, so the state store carries the sums
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val hotRng = new scala.util.Random(11)
+    val hot = (0 until 600).map { i =>
+      val sym = if (hotRng.nextInt(10) < 9) "HOT" else s"C${hotRng.nextInt(5)}"
+      Schemas.Tick(sym, 1.0, 1.1, 1.2, t0 + i * 400L,
+        hotRng.nextInt(50) + 1, Seq("B", "S", "X")(hotRng.nextInt(3)))
+    }
+    val input = MemoryStream[Schemas.Envelope]
+    val q = Pipelines.tickPipeline(input.toDF())
+      .writeStream.format("memory").queryName("cumvol_hot")
+      .outputMode("append").start()
+    try {
+      hot.grouped(200).foreach { chunk =>
+        input.addData(chunk.map(t =>
+          env(t.symbol, t.time, t.volume, t.tradeType)))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(rows(spark.table("cumvol_hot")) === batchForm(hot))
   }
 }
