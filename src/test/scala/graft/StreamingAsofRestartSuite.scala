@@ -73,10 +73,10 @@ class StreamingAsofRestartSuite extends SparkSpec {
   }
 
   test("trades after restart are enriched with the restored last quote") {
-    // input 1, fixed cases. Incarnation 1: a quote, then a trade it
-    // enriches. Incarnation 2: a trade BEFORE any new quote (must see
-    // the restored 10.5 quote), then a fresh quote, then a trade that
-    // must see the REPLACEMENT, not the restored state
+    // Incarnation 1: a quote, then a trade it enriches. Incarnation 2:
+    // a trade BEFORE any new quote (must see the restored 10.5 quote),
+    // then a fresh quote, then a trade that must see the REPLACEMENT,
+    // not the restored state
     val spool = Files.createTempDirectory("asof_spool")
     val sink = Files.createTempDirectory("asof_sink").toString
     val ckpt = Files.createTempDirectory("asof_ckpt").toString
@@ -93,11 +93,13 @@ class StreamingAsofRestartSuite extends SparkSpec {
       ("EURUSD", t0 + 20, 43.0, "S", t0, 10.5), // restored, not re-derived
       ("EURUSD", t0 + 40, 44.0, "B", t0 + 30, 11.25)), // replacement wins
       s"unexpected enriched set: $rows")
+  }
 
-    // input 2: 90% of rows on one symbol, strictly increasing times, ~1
-    // in 3 rows a quote, in three spool files drained by three
-    // incarnations — many trades take their quote from state an
-    // earlier incarnation left
+  test("90%-one-key feed over three incarnations == plain batch as-of") {
+    // 90% of rows on one symbol, strictly increasing times, ~1 in 3
+    // rows a quote, in three spool files drained by three incarnations
+    // — many trades take their quote from state an earlier
+    // incarnation left
     val rng = new scala.util.Random(7)
     val all = (0 until 600).map { i =>
       val sym = if (rng.nextInt(10) < 9) "HOT" else s"C${rng.nextInt(5)}"

@@ -98,18 +98,18 @@ class StreamingCumVolSuite extends SparkSpec {
     assert(Pipelines.tickEnvelopes(envs).count() === 1)
   }
 
-  test("streaming enrichment == batch CumVol window form on in-order data") {
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("symbol", "time", "cumbuy", "cumsell", "cumdelta")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4))).sortBy(r => (r._1, r._2)).toSeq
-    // batch window-function path (the oracle anchor)
-    def batchForm(ticks: Seq[Schemas.Tick]) =
-      rows(graft.ops.CumVol(
-        ticks.toDF(), col("symbol"), timestamp_seconds(col("time")),
-        col("time"), col("tradeType"), col("volume")))
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select("symbol", "time", "cumbuy", "cumsell", "cumdelta")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).sortBy(r => (r._1, r._2)).toSeq
+  /** Batch window-function path (the oracle anchor). */
+  private def batchForm(ticks: Seq[Schemas.Tick]) =
+    rows(graft.ops.CumVol(
+      ticks.toDF(), col("symbol"), timestamp_seconds(col("time")),
+      col("time"), col("tradeType"), col("volume")))
 
-    // input 1: four symbols in one batch (transformWithState on a batch
+  test("streaming enrichment == batch CumVol window form on in-order data") {
+    // four symbols in one batch (transformWithState on a batch
     // Dataset), crossing several UTC day boundaries in order
     val rng = new scala.util.Random(7)
     val ticks = (0 until 400).map { i =>
@@ -118,9 +118,11 @@ class StreamingCumVolSuite extends SparkSpec {
     }
     assert(rows(CumVolStatefulProcessor.enrich(ticks.toDS()).toDF()) ===
       batchForm(ticks))
+  }
 
-    // input 2: 90% of rows on one symbol, strictly increasing times over
-    // ~2.8 UTC days, streamed as three micro-batches through the tick
+  test("tick pipeline == batch CumVol on a 90%-one-key three-batch feed") {
+    // 90% of rows on one symbol, strictly increasing times over ~2.8
+    // UTC days, streamed as three micro-batches through the tick
     // pipeline — every symbol crosses batch boundaries and day
     // rollovers fire mid-stream, so the state store carries the sums
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
