@@ -669,11 +669,8 @@ object ScaleProbe {
     // so all three meter paths do real per-batch work. rows = the
     // meter's on_time count (grows ~×c): adj_in ≈ 1 is the pass.
     def e2eMeters(c: Int): Long = {
-      import java.nio.file.Files
       val n = 20000L * c
       val t0 = 1687176000L
-      val work = Files.createTempDirectory("graft_probe_e2e")
-      graft.source.SpoolWriter.deleteAtExit(work)
       val lines = spark.range(n).select(col("id"), concat(
         lit("""{"topic": "feed", "frameType": "TICK", "payload": {"symbol": "S"""),
         (col("id") % 200).cast("string"),
@@ -688,8 +685,6 @@ object ScaleProbe {
             (col("id") % 50 + 1).cast("string"), lit(""", "type": """"))),
         when(col("id") % 2 === 0, "B").otherwise("S"),
         lit(""""}}""")).as("value"))
-      val spoolDir = work.resolve("spool")
-      Files.createDirectories(spoolDir)
       // era files RANGE-partitioned on id (= event time) and consumed
       // in file-name order, the runMeters construction rule: a
       // round-robin split makes every file span the whole era, so the
@@ -699,29 +694,15 @@ object ScaleProbe {
       // DROPPING, not the assembly. Stragglers keep their planted −100d
       // times inside their id-ordered file, so they (and only they)
       // drop once the stream is past its first watermark commit.
-      val spool = graft.source.SpoolWriter.write(
+      val sp = graft.source.Spooled(spark,
         lines.repartitionByRange(4 * c, col("id"))
           .sortWithinPartitions("id").select("value"),
-        spoolDir, repartitionTo = None)
-      val sinkRoot = work.resolve("sink").toString
-      val meters = graft.streaming.PipelineMeters.register(spark)
-      val savedWm = spark.conf.getOption("spark.graft.tick.watermark")
-      spark.conf.set("spark.graft.tick.watermark", "1 day")
-      try {
-        val env = spark.readStream
-          .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-          .option("path", spool).option("maxFilesPerTrigger", "2").load()
-        val qs = graft.streaming.Pipelines.start(env, "tick", sinkRoot,
-          work.resolve("ckpt").toString)
-        try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+        "graft_probe_e2e", repartitionTo = None,
+        maxFilesPerTrigger = Some(2))
+      graft.streaming.PipelineMeters.withTickWatermark(spark, "1 day") { meters =>
+        sp.drainPipeline("tick")
         org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
-        meters(s"graft_tick:$sinkRoot").onTime
-      } finally {
-        savedWm match {
-          case Some(v) => spark.conf.set("spark.graft.tick.watermark", v)
-          case None => spark.conf.unset("spark.graft.tick.watermark")
-        }
-        spark.streams.removeListener(meters)
+        meters(s"graft_tick:${sp.sinkRoot}").onTime
       }
     }
 

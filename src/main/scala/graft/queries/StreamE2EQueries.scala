@@ -1,16 +1,12 @@
 package graft.queries
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.{QueryPack, Tables}
 import graft.ops.LwwDedup
 import graft.sink.LwwSink
+import graft.source.Spooled
 import graft.streaming.Pipelines
 import graft.util.SessionCache
 
@@ -78,62 +74,14 @@ object StreamE2EQueries extends QueryPack {
       Seq(col("user_id"), col("time_s")),
       Seq(col("event_id")))
 
-  /** One runner's spool: a fresh work dir (deleted at exit) holding the
-    * envelope files under `spool`, the sink under `sinkRoot` and the
-    * checkpoint under `ckpt`; `env` is the envelope stream over the
-    * spool. The source lists the spool per trigger, not at load, so a
-    * runner may still append sentinel files before it starts a query.
+  /** A one-tick envelope on symbol ZZZ at second `t`: the sentinel or
+    * watermark advancer a runner appends after its data files (and
+    * filters out of its sink).
     */
-  private final case class Spooled(work: Path, spool: String, env: DataFrame) {
-    def sinkRoot: String = work.resolve("sink").toString
-    def ckpt: String = work.resolve("ckpt").toString
-  }
-
-  /** The runners' shared prelude: temp work dir, [[graft.source
-    * .SpoolWriter]] write of `lines` (`repartitionTo` as the writer's),
-    * and the envelope `readStream`, paced by `maxFilesPerTrigger` when
-    * given.
-    */
-  private def spooled(s: SparkSession, lines: DataFrame, prefix: String,
-      repartitionTo: Option[Int] = Some(4),
-      maxFilesPerTrigger: Option[Int] = None): Spooled = {
-    val work = Files.createTempDirectory(prefix)
-    graft.source.SpoolWriter.deleteAtExit(work)
-    val spool = graft.source.SpoolWriter.write(lines, work, repartitionTo)
-    val reader = s.readStream
-      .format(classOf[graft.source.EnvelopeSourceProvider].getName)
-      .option("path", spool)
-    Spooled(work, spool, maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
-      .load())
-  }
-
-  /** The runners' shared drain: stream `df` in `mode` into the LWW sink
-    * (`perBatch` of each micro-batch upserted into `topic`/`table`
-    * keyed by `pk`, checkpointed at `sp.ckpt`) until the spool is
-    * consumed. Returns the stopped query; its progress stays readable.
-    */
-  private def drain(df: DataFrame, mode: String, sp: Spooled,
-      topic: String, table: String, pk: Seq[String],
-      perBatch: DataFrame => DataFrame = identity): StreamingQuery = {
-    val q = df.writeStream.outputMode(mode)
-      .option("checkpointLocation", sp.ckpt)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        LwwSink.upsertBatch(perBatch(batch.toDF()), id, sp.sinkRoot,
-          topic, table, pk)
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-    q
-  }
-
-  /** Name for a spool file appended AFTER the SpoolWriter-written data
-    * files: same %010d width as the writer's sealed names (SpoolWriter's
-    * contract — a narrower format can sort below the consumed watermark
-    * and be silently skipped), offset high so every sentinel/advancer/
-    * straggler sorts after every data file by construction instead of
-    * by the accident of leading-digit comparison.
-    */
-  private def postFile(n: Long): String = f"${9000000000L + n}%010d.jsonl"
+  private def advancer(t: Long): String =
+    s"""{"topic":"feed","frameType":"TICK","payload":""" +
+      s"""{"symbol":"ZZZ","bid":1.0,"price":1.0,"ask":1.0,""" +
+      s""""time":$t,"volume":1,"type":"B"}}"""
 
   private def tickLines(df: DataFrame,
       price: org.apache.spark.sql.Column,
@@ -166,7 +114,7 @@ object StreamE2EQueries extends QueryPack {
     */
   private def runEnrich(s: SparkSession, dir: String): DataFrame = {
     val base = dedupedTicks(s, dir)
-    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+    val sp = Spooled(s, tickLines(base, col("value"), stdVolume, stdType),
       "graft_e2e_enr", maxFilesPerTrigger = Some(2))
     val dim = Tables(s, dir, "customer")
       .select(col("c_custkey").cast("string").as("symbol"),
@@ -176,7 +124,7 @@ object StreamE2EQueries extends QueryPack {
       .join(broadcast(dim), Seq("symbol"))
       .select(col("symbol"), col("time"), col("price"),
         col("tradeType"), col("nation"), col("bal_cents"))
-    drain(enriched, "append", sp, "feed", "enr", Seq("symbol", "time"))
+    sp.drain(enriched, "append", "feed", "enr", Seq("symbol", "time"))
     LwwSink.read(s, sp.sinkRoot, "feed", "enr")
       .select(col("symbol"), col("time").as("time_s"), col("price"),
         col("tradeType").as("trade_type"), col("nation"), col("bal_cents"))
@@ -223,7 +171,7 @@ object StreamE2EQueries extends QueryPack {
       Seq(col("event_id")))
       .repartition(4, col("user_id"))
       .sortWithinPartitions(col("time_s"))
-    val sp = spooled(s, tickLines(base, col("value"), stdVolume,
+    val sp = Spooled(s, tickLines(base, col("value"), stdVolume,
       col("event_type")), "graft_e2e_funnel",
       repartitionTo = None) // preserve per-user file locality
     val ticks = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
@@ -232,9 +180,9 @@ object StreamE2EQueries extends QueryPack {
       .as[graft.model.Schemas.Tick]
     // the batch family's deadline, not a copy (review finding: a
     // FunnelW retune must move the streaming row with it)
-    drain(graft.streaming.FunnelProcessor
+    sp.drain(graft.streaming.FunnelProcessor
       .stages(ticks, TemporalQueries.FunnelW).toDF(),
-      "append", sp, "feed", "funnel", Seq("symbol"))
+      "append", "feed", "funnel", Seq("symbol"))
     LwwSink.read(s, sp.sinkRoot, "feed", "funnel")
       .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
   }
@@ -267,13 +215,13 @@ object StreamE2EQueries extends QueryPack {
       if (paced) both.repartitionByRange(4, col("time_s"))
       else both.repartition(4, col("user_id"))
         .sortWithinPartitions(col("time_s"), col("kind"))
-    val sp = spooled(s, tickLines(base, col("price"),
+    val sp = Spooled(s, tickLines(base, col("price"),
       floor(col("price")).cast("int"), col("typ")),
       if (paced) "graft_e2e_asofp" else "graft_e2e_asof",
       repartitionTo = None, // preserve the file layout chosen above
       maxFilesPerTrigger = if (paced) Some(2) else None)
-    drain(graft.streaming.AsofEnrichProcessor.enrich(sp.env).toDF(),
-      "append", sp, "feed", "asof", Seq("symbol", "time"))
+    sp.drain(graft.streaming.AsofEnrichProcessor.enrich(sp.env).toDF(),
+      "append", "feed", "asof", Seq("symbol", "time"))
     LwwSink.read(s, sp.sinkRoot, "feed", "asof")
       .select(col("symbol"), col("time").as("time_s"), col("price"),
         col("tradeType").as("trade_type"),
@@ -380,26 +328,17 @@ object StreamE2EQueries extends QueryPack {
     val base = dedupedTicks(s, dir).localCheckpoint()
     // bounded file count at any SF (4 range files, sorted within):
     // per-batch overhead is ~constant, so era batches stay O(1)
-    val sp = spooled(s, tickLines(
+    val sp = Spooled(s, tickLines(
       base.repartitionByRange(4, col("time_s"), col("user_id"))
         .sortWithinPartitions("time_s", "user_id"),
       col("value"), stdVolume, stdType), "graft_e2e_late",
       repartitionTo = None,
       maxFilesPerTrigger = Some(1)) // load-bearing, see scaladoc
-    val spool = sp.spool
     val maxSec = base.agg(max(col("time_s"))).head().getLong(0)
-    val nFiles = graft.util.Fs.list(Paths.get(spool))
-      .count(_.getFileName.toString.endsWith(".jsonl"))
-    def advancer(t: Long) =
-      s"""{"topic":"feed","frameType":"TICK","payload":""" +
-        s"""{"symbol":"ZZZ","bid":1.0,"price":1.0,"ask":1.0,""" +
-        s""""time":$t,"volume":1,"type":"B"}}"""
     // two advancer batches: the second exists solely so the straggler
     // batch's LAGGING filter watermark already includes the first
-    Files.writeString(Paths.get(spool).resolve(postFile(nFiles)),
-      advancer(maxSec + 100 * 86400) + "\n")
-    Files.writeString(Paths.get(spool).resolve(postFile(nFiles + 1)),
-      advancer(maxSec + 100 * 86400 + 60) + "\n")
+    sp.append(advancer(maxSec + 100 * 86400))
+    sp.append(advancer(maxSec + 100 * 86400 + 60))
     // ONE straggler per (user, 30-minute window), not one per purchase
     // row: the engine's late-row meter (`numRowsDroppedByWatermark`)
     // sits BEHIND map-side partial aggregation, so it counts dropped
@@ -418,13 +357,8 @@ object StreamE2EQueries extends QueryPack {
           (col("time_s") - pmod(col("time_s"), lit(1800L))).as("_w"))
         .agg(max(col("time_s")).as("time_s"), max(col("value")).as("value")),
       col("value"), (floor(col("value")) * 10 + 7).cast("int"), lit("B"))
-    val lateSpool = graft.source.SpoolWriter.write(lateLines,
-      sp.work.resolve("late"), repartitionTo = Some(1))
-    graft.util.Fs.list(Paths.get(lateSpool))
-      .filter(_.getFileName.toString.endsWith(".jsonl"))
-      .sortBy(_.getFileName.toString).zipWithIndex.foreach { case (p, i) =>
-        Files.move(p, Paths.get(spool).resolve(postFile(nFiles + 2 + i)))
-      }
+    sp.moveIn(graft.source.SpoolWriter.write(lateLines,
+      sp.work.resolve("late"), repartitionTo = Some(1)))
     val agg = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .withColumn("ts", timestamp_seconds(col("time")))
       .withWatermark("ts", "1 day")
@@ -433,7 +367,7 @@ object StreamE2EQueries extends QueryPack {
         sum(col("volume").cast("long")).as("sum_vol"))
       .select(col("symbol"), col("w.start").as("w_start"),
         col("n_ticks"), col("sum_vol"))
-    val q = drain(agg, "append", sp, "feed", "late",
+    val q = sp.drain(agg, "append", "feed", "late",
       Seq("symbol", "w_start"), _.filter(col("symbol") =!= "ZZZ"))
     // the engine's own late-row meter, summed across every micro-batch
     // of the run (well under the 100-progress retention default)
@@ -486,40 +420,21 @@ object StreamE2EQueries extends QueryPack {
     // every file span the whole era, so batch 1 advances the watermark
     // past most of batches 2-4 (measured: 1935 era rows metered as
     // dropped) — the same construction rule runLateCommon documents.
-    val sp = spooled(s,
+    val sp = Spooled(s,
       tickLines(base.repartitionByRange(4, col("time_s"), col("user_id"))
         .sortWithinPartitions("time_s", "user_id"),
         col("value"), stdVolume, stdType), "graft_e2e_meters",
       repartitionTo = None,
       maxFilesPerTrigger = Some(1)) // advancers commit alone
-    val spool = sp.spool
     val maxSec = base.agg(max(col("time_s"))).head().getLong(0)
-    val nFiles = graft.util.Fs.list(Paths.get(spool))
-      .count(_.getFileName.toString.endsWith(".jsonl"))
-    def moveIn(from: String, firstIdx: Long): Long = {
-      val files = graft.util.Fs.list(Paths.get(from))
-        .filter(_.getFileName.toString.endsWith(".jsonl"))
-        .sortBy(_.getFileName.toString)
-      files.zipWithIndex.foreach { case (p, i) =>
-        Files.move(p, Paths.get(spool).resolve(postFile(firstIdx + i)))
-      }
-      firstIdx + files.size
-    }
     // corrupt lines: era-shaped but volume-less (null volume → the
     // field is absent from the JSON → strict serde quarantines it)
-    var next = moveIn(graft.source.SpoolWriter.write(
+    sp.moveIn(graft.source.SpoolWriter.write(
       tickLines(base.filter(col("event_type") === "purchase"),
         col("value"), lit(null).cast("int"), stdType),
-      sp.work.resolve("corrupt"), repartitionTo = Some(1)), nFiles)
-    def advancer(t: Long) =
-      s"""{"topic":"feed","frameType":"TICK","payload":""" +
-        s"""{"symbol":"ZZZ","bid":1.0,"price":1.0,"ask":1.0,""" +
-        s""""time":$t,"volume":1,"type":"B"}}"""
-    Files.writeString(Paths.get(spool).resolve(postFile(next)),
-      advancer(maxSec + 100 * 86400) + "\n")
-    Files.writeString(Paths.get(spool).resolve(postFile(next + 1)),
-      advancer(maxSec + 100 * 86400 + 60) + "\n")
-    next += 2
+      sp.work.resolve("corrupt"), repartitionTo = Some(1)))
+    sp.append(advancer(maxSec + 100 * 86400))
+    sp.append(advancer(maxSec + 100 * 86400 + 60))
     // stragglers staged OUTSIDE the spool until incarnation 2
     val lateSpool = graft.source.SpoolWriter.write(
       tickLines(base.filter(col("event_type") === "purchase")
@@ -527,44 +442,28 @@ object StreamE2EQueries extends QueryPack {
         .agg(max(col("time_s")).as("time_s"), max(col("value")).as("value")),
         col("value"), (floor(col("value")) * 10 + 7).cast("int"), lit("B")),
       sp.work.resolve("late"), repartitionTo = Some(1))
-    val meters = graft.streaming.PipelineMeters.register(s)
-    val savedWm = s.conf.getOption("spark.graft.tick.watermark")
-    s.conf.set("spark.graft.tick.watermark", "1 day")
-    try {
+    graft.streaming.PipelineMeters.withTickWatermark(s, "1 day") { meters =>
       def run(): Unit = {
-        val qs = Pipelines.start(sp.env, "tick", sp.sinkRoot, sp.ckpt)
-        try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+        sp.drainPipeline("tick")
         org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(s)
       }
       run() // incarnation 1: era + corrupt + both advancers
-      moveIn(lateSpool, next)
+      sp.moveIn(lateSpool)
       run() // incarnation 2: stragglers only, from the checkpoint
       val m = meters(s"graft_tick:${sp.sinkRoot}")
       Seq((m.rows, m.corrupt, m.droppedLate, m.onTime))
         .toDF("n_rows", "n_corrupt", "n_dropped_late", "n_on_time")
-    } finally {
-      savedWm match {
-        case Some(v) => s.conf.set("spark.graft.tick.watermark", v)
-        case None => s.conf.unset("spark.graft.tick.watermark")
-      }
-      s.streams.removeListener(meters)
     }
   }
 
   private def runTumbling(s: SparkSession, dir: String): DataFrame = {
     val base = dedupedTicks(s, dir)
-    val sp = spooled(s, tickLines(base.orderBy(col("time_s"), col("user_id")),
+    val sp = Spooled(s, tickLines(base.orderBy(col("time_s"), col("user_id")),
       col("value"), stdVolume, stdType), "graft_e2e_tum",
       repartitionTo = None,
       maxFilesPerTrigger = Some(4)) // state lives across batches
     val maxSec = base.agg(max(col("time_s"))).head().getLong(0)
-    val sentinel = s"""{"topic":"feed","frameType":"TICK","payload":""" +
-      s"""{"symbol":"ZZZ","bid":1.0,"price":1.0,"ask":1.0,""" +
-      s""""time":${maxSec + 2 * 86400},"volume":1,"type":"B"}}"""
-    val nFiles = graft.util.Fs.list(Paths.get(sp.spool))
-      .count(_.getFileName.toString.endsWith(".jsonl"))
-    Files.writeString(Paths.get(sp.spool).resolve(postFile(nFiles)),
-      sentinel + "\n")
+    sp.append(advancer(maxSec + 2 * 86400))
     val agg = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .withColumn("ts", timestamp_seconds(col("time")))
       .withWatermark("ts", "1 day")
@@ -573,7 +472,7 @@ object StreamE2EQueries extends QueryPack {
         sum(col("volume").cast("long")).as("sum_vol"))
       .select(col("symbol"), col("w.start").as("h_start"),
         col("n_ticks"), col("sum_vol"))
-    drain(agg, "append", sp, "feed", "tum", Seq("symbol", "h_start"),
+    sp.drain(agg, "append", "feed", "tum", Seq("symbol", "h_start"),
       _.filter(col("symbol") =!= "ZZZ"))
     LwwSink.read(s, sp.sinkRoot, "feed", "tum")
       .select(col("symbol"), col("h_start"), col("n_ticks"),
@@ -594,17 +493,17 @@ object StreamE2EQueries extends QueryPack {
   private def runTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val base = dedupedTicks(s, dir)
-    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+    val sp = Spooled(s, tickLines(base, col("value"), stdVolume, stdType),
       "graft_e2e_topk",
       maxFilesPerTrigger = Some(2)) // several update emissions
     val ticks = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .select(col("symbol"), col("time"), col("price"))
       .as[graft.streaming.TopKProcessor.TickIn]
-    drain(ticks.groupByKey(_.symbol)
+    sp.drain(ticks.groupByKey(_.symbol)
       .transformWithState(new graft.streaming.TopKProcessor(5),
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update())
-      .toDF(), "update", sp, "feed", "topk", Seq("symbol", "rank"))
+      .toDF(), "update", "feed", "topk", Seq("symbol", "rank"))
     LwwSink.read(s, sp.sinkRoot, "feed", "topk")
       .select(col("symbol"), col("rank"), col("price"),
         col("time").as("time_s"))
@@ -623,7 +522,7 @@ object StreamE2EQueries extends QueryPack {
     * spool needs no dedup and no time sorting.
     */
   private def runCounts(s: SparkSession, dir: String): DataFrame = {
-    val sp = spooled(s, tickLines(
+    val sp = Spooled(s, tickLines(
       Tables(s, dir, "events")
         .filter(col("event_type").isin("purchase", "click"))
         .withColumn("time_s", expr("unix_micros(ts) div 1000000")),
@@ -633,7 +532,7 @@ object StreamE2EQueries extends QueryPack {
       .groupBy(col("tradeType").as("trade_type"))
       .agg(count(lit(1)).as("n_ticks"),
         sum(col("volume").cast("long")).as("sum_vol"))
-    drain(agg, "update", sp, "feed", "cnt", Seq("trade_type"))
+    sp.drain(agg, "update", "feed", "cnt", Seq("trade_type"))
     LwwSink.read(s, sp.sinkRoot, "feed", "cnt")
       .select(col("trade_type"), col("n_ticks"), col("sum_vol"))
   }
@@ -658,19 +557,13 @@ object StreamE2EQueries extends QueryPack {
     */
   private def runSession(s: SparkSession, dir: String): DataFrame = {
     val base = dedupedTicks(s, dir)
-    val sp = spooled(s, tickLines(base.orderBy(col("time_s"), col("user_id")),
+    val sp = Spooled(s, tickLines(base.orderBy(col("time_s"), col("user_id")),
       col("value"), stdVolume, stdType), "graft_e2e_sess",
       repartitionTo = None)
     // sentinel: one envelope 2 days past the data maximum, in a file
     // that sorts AFTER every writer-produced one
     val maxSec = base.agg(max(col("time_s"))).head().getLong(0)
-    val sentinel = s"""{"topic":"feed","frameType":"TICK","payload":""" +
-      s"""{"symbol":"ZZZ","bid":1.0,"price":1.0,"ask":1.0,""" +
-      s""""time":${maxSec + 2 * 86400},"volume":1,"type":"B"}}"""
-    val nFiles = graft.util.Fs.list(Paths.get(sp.spool))
-      .count(_.getFileName.toString.endsWith(".jsonl"))
-    Files.writeString(Paths.get(sp.spool).resolve(postFile(nFiles)),
-      sentinel + "\n")
+    sp.append(advancer(maxSec + 2 * 86400))
     val sess = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .withColumn("ts", timestamp_seconds(col("time")))
       .withWatermark("ts", "1 day")
@@ -679,7 +572,7 @@ object StreamE2EQueries extends QueryPack {
       .agg(count(lit(1)).as("n_events"))
       .select(col("symbol"), col("w.start").as("s_start"),
         col("w.end").as("s_end"), col("n_events"))
-    drain(sess, "append", sp, "feed", "sess", Seq("symbol", "s_start"),
+    sp.drain(sess, "append", "feed", "sess", Seq("symbol", "s_start"),
       _.filter(col("symbol") =!= "ZZZ"))
     LwwSink.read(s, sp.sinkRoot, "feed", "sess")
       .select(col("symbol"), col("s_start"), col("s_end"), col("n_events"))
@@ -710,7 +603,7 @@ object StreamE2EQueries extends QueryPack {
           .cast("double") / 10.0)
       .withColumn("pseudo_vol",
         ((col("user_id") + col("time_s")) % 100L).cast("int"))
-    val sp = spooled(s, tickLines(
+    val sp = Spooled(s, tickLines(
       base.orderBy(col("time_s"), col("user_id"), col("event_id")),
       col("pseudo_price"), col("pseudo_vol"),
       when(col("user_id") % 2 === 0, "B").otherwise("S")), "graft_e2e_dd",
@@ -720,7 +613,7 @@ object StreamE2EQueries extends QueryPack {
       .withColumn("ts", timestamp_seconds(col("time")))
       .withWatermark("ts", "1 day")
       .dropDuplicates("symbol", "ts")
-    drain(dedup, "append", sp, "feed", "dedup", Seq("symbol", "time"),
+    sp.drain(dedup, "append", "feed", "dedup", Seq("symbol", "time"),
       _.select(col("symbol"), col("time"), col("price"),
         col("volume"), col("tradeType")))
     LwwSink.read(s, sp.sinkRoot, "feed", "dedup")
@@ -748,12 +641,11 @@ object StreamE2EQueries extends QueryPack {
       if (paced) ticks.repartitionByRange(4, col("time_s"))
       else ticks.repartition(4, col("user_id"))
         .sortWithinPartitions(col("time_s"))
-    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+    val sp = Spooled(s, tickLines(base, col("value"), stdVolume, stdType),
       if (paced) "graft_e2e_cvp" else "graft_e2e_cv",
       repartitionTo = None, // preserve the file layout chosen above
       maxFilesPerTrigger = if (paced) Some(2) else None)
-    val qs = Pipelines.start(sp.env, "tick", sp.sinkRoot, sp.ckpt)
-    try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    sp.drainPipeline("tick")
     LwwSink.read(s, sp.sinkRoot, "feed", "tick")
       .select(col("symbol"), col("time").as("time_s"), col("volume"),
         col("tradeType").as("trade_type"),
@@ -775,7 +667,7 @@ object StreamE2EQueries extends QueryPack {
     val base = dedupedTicks(s, dir)
       .repartition(4, col("user_id"))
       .sortWithinPartitions(col("time_s"))
-    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+    val sp = Spooled(s, tickLines(base, col("value"), stdVolume, stdType),
       "graft_e2e_roll",
       repartitionTo = None) // preserve per-symbol file locality
     val evs = Pipelines.parseTicks(sp.env)
@@ -789,11 +681,11 @@ object StreamE2EQueries extends QueryPack {
         floor(col("price") * 1e9).cast("long").as("q"),
         floor(col("price") * col("price") * 1e9).cast("long").as("q2"))
       .as[graft.streaming.RollingStatsProcessor.Ev]
-    drain(evs.groupByKey(_.userId)
+    sp.drain(evs.groupByKey(_.userId)
       .transformWithState(new graft.streaming.RollingStatsProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Append())
-      .toDF(), "append", sp, "feed", "roll", Seq("symbol", "time"),
+      .toDF(), "append", "feed", "roll", Seq("symbol", "time"),
       _.select(
         col("userId").cast("string").as("symbol"),
         col("eventId").as("time"),
@@ -844,7 +736,7 @@ object StreamE2EQueries extends QueryPack {
         col("time_s").as("time"),
         floor(col("value")).cast("int").as("volume"),
         lit("BOOK_TYPE_VIEW").as("type"))).as("payload"))).as("value"))
-    val sp = spooled(s, tickJson.unionByName(bookLines), "graft_e2e_join",
+    val sp = Spooled(s, tickJson.unionByName(bookLines), "graft_e2e_join",
       repartitionTo = Some(1))
     val ticks = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
       .select("symbol", "bid", "price", "ask", "time", "volume", "tradeType")
@@ -852,7 +744,7 @@ object StreamE2EQueries extends QueryPack {
       .select("symbol", "price", "time", "volume", "orderType")
     val joined = graft.streaming.StreamJoins.tickWithRecentBook(
       ticks, books, lagSeconds = 86400)
-    drain(joined, "append", sp, "feed", "tickbook",
+    sp.drain(joined, "append", "feed", "tickbook",
       Seq("symbol", "tick_time", "book_time", "book_price"))
     LwwSink.read(s, sp.sinkRoot, "feed", "tickbook")
       .select(col("symbol"), col("tick_time"), col("tick_price"),
@@ -884,11 +776,10 @@ object StreamE2EQueries extends QueryPack {
 
     // 2. Spool: monotone-named immutable .jsonl files (the source's
     //    writer contract), written distributed then renamed into place.
-    val sp = spooled(s, lines, "graft_e2e")
+    val sp = Spooled(s, lines, "graft_e2e")
 
     // 3. Stream spool → book pipeline → LWW sink; drain; read back.
-    val qs = Pipelines.start(sp.env, "book", sp.sinkRoot, sp.ckpt)
-    try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    sp.drainPipeline("book")
     LwwSink.read(s, sp.sinkRoot, "feed", "book")
       .select(col("symbol"), col("price"), col("time").as("time_s"),
         col("volume"), col("orderType").as("order_type"))
@@ -912,60 +803,19 @@ object StreamE2EQueries extends QueryPack {
     * per-document functions, so pacing is unobservable.
     */
   private def runNearDup(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val docs = Tables(s, dir, "documents")
     val lines = docs.select(to_json(struct(
       lit("docs").as("topic"),
       lit("DOC").as("frameType"),
       struct(col("doc_id"), col("text")).as("payload"))).as("value"))
-    val sp = spooled(s, lines, "graft_e2e_nd",
+    val sp = Spooled(s, lines, "graft_e2e_nd",
       maxFilesPerTrigger = Some(1)) // buckets fill across batches
-    val hits = graft.streaming.LshBucketProcessor.bandHits(sp.env)
-    drain(hits.groupByKey(_.bucket)
-      .transformWithState(new graft.streaming.LshBucketProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-      .toDF(), "update", sp, "docs", "neardup", Seq("doc_a", "doc_b"))
+    sp.drain(graft.streaming.LshBucketProcessor.pairs(sp.env), "update",
+      "docs", "neardup", Seq("doc_a", "doc_b"))
     LwwSink.read(s, sp.sinkRoot, "docs", "neardup")
       .select(col("doc_a"), col("doc_b"))
   }
 
-  /** STREAMING HLL SKETCH end to end (round-9, thirteenth streaming
-    * oracle row): raw TICK envelopes → envelope source paced to
-    * multiple micro-batches → the SAME register pipeline as the batch
-    * arm ([[graft.ops.Hll.registers]]: native raw60 hash → bucket →
-    * max-ρ, an update-mode streaming aggregation, state bounded at
-    * M registers × groups) → LWW sink keyed (g, bucket) → read-back
-    * registers folded by [[graft.ops.Hll.estimate]] vs the batch
-    * DuckDB HLL mirror. Cardinality monitoring AT INGEST — the
-    * 100 TB shape: leaf registers maintained streaming, estimates
-    * read off the register table without ever re-scanning data.
-    *
-    * Determinism needs NO pre-dedup, NO sorting, NO sentinel — the
-    * only e2e row with zero determinism scaffolding — because HLL
-    * registers are max-merged: duplication, arrival order, and
-    * file→batch grouping are all absorbed by the algebra (max is
-    * idempotent, commutative, associative), and update-mode re-emits
-    * each touched register's CURRENT max, which the PK upsert
-    * converges to the global max. That algebraic absorption is the
-    * point being certified.
-    */
-  /** STREAMING CDC APPLY (round-9, fifteenth streaming oracle row):
-    * I/U/D change ops at ingest — the streaming face of
-    * `cdc_merge_apply`. Ops ride the envelope's type field
-    * (signup→I, error→D tombstone, rest→U); an update-mode argmax per
-    * key (max_by over the unique (time) version after per-(key,
-    * second) pre-dedup) keeps ONE latest-op row per key in the state
-    * store, each micro-batch upserting only touched keys; tombstones
-    * are RETAINED in the register table and dropped at READ — exactly
-    * the Cassandra model the reference writes into (a delete IS a
-    * tombstone write that wins by timestamp and disappears at
-    * compaction; /root/reference/src/main.rs:87 can only ever upsert,
-    * so this is the op it cannot express). Determinism: argmax over a
-    * totally ordered version is pacing- and restart-independent — the
-    * final upsert for a key is its global latest op however the spool
-    * files batch. State is one row per live key; nothing rescans.
-    */
   /** STREAMING LOG-BUCKET QUANTILE SKETCH end to end (round-9): raw
     * TICK envelopes → γ = 2^(1/4) bucket ids computed SCAN-SIDE inside
     * the stream (the agg_ddsketch_quantile arithmetic — integer-exact
@@ -985,7 +835,7 @@ object StreamE2EQueries extends QueryPack {
     val base = Tables(s, dir, "events")
       .filter(col("event_type").isin("purchase", "click"))
       .withColumn("time_s", expr("unix_micros(ts) div 1000000"))
-    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+    val sp = Spooled(s, tickLines(base, col("value"), stdVolume, stdType),
       "graft_e2e_quantile",
       maxFilesPerTrigger = Some(2)) // counts accumulate across batches
     val regs = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
@@ -998,7 +848,7 @@ object StreamE2EQueries extends QueryPack {
             expr("CAST((shiftright(v, msb - 2) & 3) AS INT)"))
         .otherwise(col("v").cast("int")))
       .groupBy("g", "bucket").agg(count(lit(1)).as("c"))
-    drain(regs, "update", sp, "feed", "quant", Seq("g", "bucket"))
+    sp.drain(regs, "update", "feed", "quant", Seq("g", "bucket"))
     val W = org.apache.spark.sql.expressions.Window
     val cum = LwwSink.read(s, sp.sinkRoot, "feed", "quant")
       .select(col("g"), col("bucket"), col("c"))
@@ -1034,7 +884,7 @@ object StreamE2EQueries extends QueryPack {
     val base = Tables(s, dir, "events")
       .filter(col("event_type").isin("purchase", "click"))
       .withColumn("time_s", expr("unix_micros(ts) div 1000000"))
-    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+    val sp = Spooled(s, tickLines(base, col("value"), stdVolume, stdType),
       "graft_e2e_bitmap",
       maxFilesPerTrigger = Some(2)) // bitmaps build across batches
     val regs = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
@@ -1043,11 +893,35 @@ object StreamE2EQueries extends QueryPack {
       .select(col("g"), expr(graft.ops.Bits.wordOf("v")).as("w"),
         graft.ops.Bits.oneHot(col("v")).as("b"))
       .groupBy("g", "w").agg(expr("bit_or(b)").as("bits"))
-    drain(regs, "update", sp, "feed", "bitmap", Seq("g", "w"))
+    sp.drain(regs, "update", "feed", "bitmap", Seq("g", "w"))
     LwwSink.read(s, sp.sinkRoot, "feed", "bitmap")
       .groupBy(col("g").as("trade_type"))
       .agg(sum(expr("bit_count(bits)")).as("n_distinct"))
   }
+
+  /** STREAMING CDC APPLY (round-9, fifteenth streaming oracle row):
+    * I/U/D change ops at ingest — the streaming face of
+    * `cdc_merge_apply`. Ops ride the envelope's type field
+    * (signup→I, error→D tombstone, rest→U); an update-mode argmax per
+    * key (max_by over the unique (time) version after per-(key,
+    * second) pre-dedup) keeps ONE latest-op row per key in the state
+    * store, each micro-batch upserting only touched keys; tombstones
+    * are RETAINED in the register table and dropped at READ — exactly
+    * the Cassandra model the reference writes into (a delete IS a
+    * tombstone write that wins by timestamp and disappears at
+    * compaction; the reference's main.rs:87 can only ever upsert,
+    * so this is the op it cannot express). Determinism: argmax over a
+    * totally ordered version is pacing- and restart-independent — the
+    * final upsert for a key is its global latest op however the spool
+    * files batch. State is one row per live key; nothing rescans.
+    */
+  private[graft] def cdcLatest(env: DataFrame): DataFrame =
+    Pipelines.parseTicks(env).filter(!col("_corrupt"))
+      .groupBy(col("symbol"))
+      .agg(max_by(struct(col("time"), col("price"), col("tradeType")),
+        col("time")).as("w"))
+      .select(col("symbol"), col("w.time").as("time"),
+        col("w.price").as("price"), col("w.tradeType").as("op"))
 
   private def runCdc(s: SparkSession, dir: String): DataFrame = {
     val base = LwwDedup(
@@ -1059,33 +933,47 @@ object StreamE2EQueries extends QueryPack {
           .cast("double") / 10.0)
     val op = when(col("event_type") === "signup", "I")
       .when(col("event_type") === "error", "D").otherwise("U")
-    val sp = spooled(s, tickLines(base, col("pseudo_price"), stdVolume, op),
+    val sp = Spooled(s, tickLines(base, col("pseudo_price"), stdVolume, op),
       "graft_e2e_cdc",
       maxFilesPerTrigger = Some(2)) // ops fold across batches
-    val latest = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
-      .groupBy(col("symbol"))
-      .agg(max_by(struct(col("time"), col("price"), col("tradeType")),
-        col("time")).as("w"))
-      .select(col("symbol"), col("w.time").as("time"),
-        col("w.price").as("price"), col("w.tradeType").as("op"))
-    drain(latest, "update", sp, "feed", "cdc", Seq("symbol"))
+    sp.drain(cdcLatest(sp.env), "update", "feed", "cdc", Seq("symbol"))
     LwwSink.read(s, sp.sinkRoot, "feed", "cdc")
       .filter(col("op") =!= "D") // tombstone purge at compaction/read
       .select(col("symbol"), col("time").as("time_s"), col("price"),
         col("op"))
   }
 
+  /** STREAMING HLL SKETCH end to end (round-9, thirteenth streaming
+    * oracle row): raw TICK envelopes → envelope source paced to
+    * multiple micro-batches → the SAME register pipeline as the batch
+    * arm ([[graft.ops.Hll.registers]]: native raw60 hash → bucket →
+    * max-ρ, an update-mode streaming aggregation, state bounded at
+    * M registers × groups) → LWW sink keyed (g, bucket) → read-back
+    * registers folded by [[graft.ops.Hll.estimate]] vs the batch
+    * DuckDB HLL mirror. Cardinality monitoring AT INGEST — the
+    * 100 TB shape: leaf registers maintained streaming, estimates
+    * read off the register table without ever re-scanning data.
+    *
+    * Determinism needs NO pre-dedup, NO sorting, NO sentinel — the
+    * only e2e row with zero determinism scaffolding — because HLL
+    * registers are max-merged: duplication, arrival order, and
+    * file→batch grouping are all absorbed by the algebra (max is
+    * idempotent, commutative, associative), and update-mode re-emits
+    * each touched register's CURRENT max, which the PK upsert
+    * converges to the global max. That algebraic absorption is the
+    * point being certified.
+    */
   private def runHll(s: SparkSession, dir: String): DataFrame = {
     val base = Tables(s, dir, "events")
       .filter(col("event_type").isin("purchase", "click"))
       .withColumn("time_s", expr("unix_micros(ts) div 1000000"))
-    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+    val sp = Spooled(s, tickLines(base, col("value"), stdVolume, stdType),
       "graft_e2e_hll",
       maxFilesPerTrigger = Some(2)) // registers build across batches
     val ticks = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
     val regs = graft.ops.Hll.registers(
       ticks.toDF(), col("tradeType"), col("symbol"))
-    drain(regs, "update", sp, "feed", "hll", Seq("g", "bucket"))
+    sp.drain(regs, "update", "feed", "hll", Seq("g", "bucket"))
     graft.ops.Hll.estimate(
         LwwSink.read(s, sp.sinkRoot, "feed", "hll")
           .select(col("g"), col("bucket"), col("m_j")))
@@ -1113,7 +1001,7 @@ object StreamE2EQueries extends QueryPack {
     val base = Tables(s, dir, "events")
       .filter(col("event_type").isin("purchase", "click"))
       .withColumn("time_s", expr("unix_micros(ts) div 1000000"))
-    val sp = spooled(s, tickLines(base, col("value"), stdVolume, stdType),
+    val sp = Spooled(s, tickLines(base, col("value"), stdVolume, stdType),
       "graft_e2e_cms",
       maxFilesPerTrigger = Some(2)) // counts accumulate across batches
     val regs = Pipelines.parseTicks(sp.env).filter(!col("_corrupt"))
@@ -1121,7 +1009,7 @@ object StreamE2EQueries extends QueryPack {
       .select(posexplode(CountMin.cells(col("h"))).as(Seq("i", "dc")))
       .groupBy(col("dc.d").as("d"), col("dc.cell").as("cell"))
       .agg(count(lit(1)).as("n"))
-    drain(regs, "update", sp, "feed", "cms", Seq("d", "cell"))
+    sp.drain(regs, "update", "feed", "cms", Seq("d", "cell"))
     // probe side (batch, same symbol derivation): top-10 true counts,
     // estimate = min over the symbol's Depth cells in the STREAMED
     // register table

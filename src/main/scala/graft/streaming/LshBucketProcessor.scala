@@ -89,12 +89,23 @@ object LshBucketProcessor {
   /** One candidate near-dup pair, doc_a < doc_b. */
   case class PairRow(doc_a: Long, doc_b: Long)
 
-  /** Shared DOC-envelope → band-hit projection — the ONE place the
-    * parse schema, LSH parameters, and bucket encoding live. The
-    * registered query, StreamBench's ingest arm, and the restart suite
-    * all call this; a parameter drift in one copy would silently
-    * desynchronize the bench and the restart proof from the certified
-    * query (same lesson as StreamE2EQueries.tickLines).
+  /** The near-dup dataflow: DOC envelopes → [[bandHits]] → bucket
+    * state → one (doc_a, doc_b) row per new pair, for an update-mode
+    * sink. The registered query `stream_e2e_neardup`, StreamBench's
+    * `neardup` arm and the restart suite all run this one chain, so the
+    * bench and the restart proof run the code the oracle checks.
+    */
+  def pairs(env: DataFrame): DataFrame = {
+    val sp = env.sparkSession
+    import sp.implicits._
+    bandHits(env).groupByKey(_.bucket)
+      .transformWithState(new LshBucketProcessor(),
+        TimeMode.None(), OutputMode.Update())
+      .toDF()
+  }
+
+  /** DOC-envelope → band-hit projection: the one place the parse
+    * schema, LSH parameters and bucket encoding live.
     */
   def bandHits(
       env: DataFrame,

@@ -165,4 +165,21 @@ object PipelineMeters {
     spark.streams.addListener(m)
     m
   }
+
+  /** `body` with a freshly registered meter and the tick assembly's
+    * watermark (`spark.graft.tick.watermark`) at `watermark`; both are
+    * undone after, so a harness leaves the session as it found it.
+    */
+  def withTickWatermark[T](spark: SparkSession, watermark: String)(
+      body: PipelineMeters => T): T = {
+    val key = "spark.graft.tick.watermark"
+    val meters = register(spark)
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, watermark)
+    try body(meters)
+    finally {
+      saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      spark.streams.removeListener(meters)
+    }
+  }
 }

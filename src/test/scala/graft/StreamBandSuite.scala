@@ -2,12 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** StreamBench's measurement-quality machinery (round-16, VERDICT r15
-  * task #1): the rate-band test (the mirror of Bench.overBand for
-  * higher-is-better numbers) and a contract check on the pinned
-  * `stream_ref.tsv` resource — a corrupt regen would silently disable
-  * every arm band and let a contended run stamp promotable. No
-  * SparkSession needed.
+/** StreamBench's measurement-quality machinery: the rate-band test (the
+  * mirror of Bench.overBand for higher-is-better numbers), the rule for
+  * which runs the pins describe, and a contract check on the pinned
+  * `stream_ref.tsv` resource against the arms StreamBench declares — a
+  * corrupt regen would silently disable every arm band and let a
+  * contended run stamp promotable. No SparkSession needed.
   */
 class StreamBandSuite extends AnyFunSuite {
 
@@ -33,36 +33,48 @@ class StreamBandSuite extends AnyFunSuite {
     assert(!StreamBench.underRate(10000.0, pin, 0.5))
   }
 
-  test("stream_ref.tsv resource: loads, pins every banded arm, sane " +
-      "values; the r15 contended pipeline reading flags against it") {
+  test("stream_ref.tsv resource: pins exactly the banded rates, sane values") {
     val ref = StreamBench.RefRates
-    for (arm <- Seq("pipeline", "socket", "neardup", "cdc",
-        "hotkey_tws", "hotkey_asof_tws"))
-      assert(ref.contains(arm), s"stream_ref.tsv missing $arm")
+    // every pin names a rate some arm emits, and every banded arm has
+    // a pin: a leftover pin, or an arm that never flags, fails here
+    assert(ref.keySet === StreamBench.BandedRates.values.toSet)
+    assert(StreamBench.BandedRates.keySet.subsetOf(StreamBench.AllArms.toSet))
     assert(ref.values.forall { case (p, s) =>
       p > 100.0 && s >= 1.2 && s <= 2.0
     }, "pins must be positive rates with slack in [1.2, 2.0]")
     assert(StreamBench.RefTsvSha.length === 64, "band provenance sha")
-    // the round's motivating case: r15's contended 10639 rows/s flags,
-    // r14's quiet 15868 passes (both against the committed pins)
-    assert(StreamBench.underRate(10639.0, ref.get("pipeline"), 1.0))
-    assert(!StreamBench.underRate(15868.0, ref.get("pipeline"), 1.0))
     // every historical QUIET reading passes its floor at hf 1 (the
     // flap guard: artifacts r12-r15, see stream_ref.tsv header)
     val quiet = Map(
-      "pipeline" -> Seq(17430.4, 14480.4, 15868.5),
       "socket" -> Seq(16082.3, 12282.3, 15519.1, 16011.6),
       "neardup" -> Seq(2462.4, 1952.1, 2088.7, 2640.7),
       "cdc" -> Seq(17227.1, 14490.3, 17669.7, 16511.5),
       "hotkey_tws" -> Seq(19627.3, 22951.5, 21162.0, 23206.6),
       "hotkey_asof_tws" -> Seq(12241.5, 13885.6, 9964.8, 13503.8))
+    assert(quiet.keySet === ref.keySet)
     for ((arm, rates) <- quiet; r <- rates)
       assert(!StreamBench.underRate(r, ref.get(arm), 1.0),
         s"quiet historical reading $arm=$r must not flag")
   }
 
   test("arm filter vocabulary matches the banded + unbanded arm set") {
-    assert(StreamBench.AllArms === Seq("pipeline", "socket", "neardup",
-      "cdc", "hotkey", "hotkey_asof", "recovery"))
+    assert(StreamBench.AllArms === Seq("socket", "neardup", "cdc",
+      "hotkey", "hotkey_asof", "recovery"))
+  }
+
+  test("bandedRun: only every arm at the default sizes meets the pins") {
+    import StreamBench.{AllArms, DefaultDocs, DefaultKeys, DefaultRows, bandedRun}
+    assert(bandedRun(AllArms, DefaultRows, DefaultDocs, DefaultKeys))
+    // an arm filter, even of every banded arm
+    assert(!bandedRun(Seq("hotkey", "hotkey_asof"), DefaultRows,
+      DefaultDocs, DefaultKeys))
+    assert(!bandedRun(AllArms.filterNot(_ == "recovery"), DefaultRows,
+      DefaultDocs, DefaultKeys))
+    // any resized feed: the 20k-row smoke run, docs, keys
+    assert(!bandedRun(AllArms, 20000, DefaultDocs, DefaultKeys))
+    assert(!bandedRun(AllArms, DefaultRows, 1000, DefaultKeys))
+    assert(!bandedRun(AllArms, DefaultRows, DefaultDocs, 500))
+    assert(!bandedRun(Seq("hotkey", "hotkey_asof"), 20000, DefaultDocs,
+      DefaultKeys))
   }
 }

@@ -4,16 +4,17 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.StreamE2EQueries
 import graft.sink.LwwSink
 import graft.source.EnvelopeSourceProvider
-import graft.streaming.Pipelines
 
 /** Restart recovery for the per-key latest-op state behind
-  * `stream_e2e_cdc`, exercised on the one shape a final-table compare
-  * without history cannot fake: a LATE-ARRIVING tombstone (older
-  * version than the state's current op) must be REJECTED by the
-  * restored argmax — key R's U@t20 from incarnation one outranks the
-  * D@t5 that arrives after the restart. Lost state would make the
+  * `stream_e2e_cdc` (the same [[StreamE2EQueries.cdcLatest]] dataflow),
+  * exercised on the one shape a final-table compare without history
+  * cannot fake: a LATE-ARRIVING tombstone (older version than the
+  * state's current op) must be REJECTED by the restored argmax — key
+  * R's U@t20 from incarnation one outranks the D@t5 that arrives after
+  * the restart. Lost state would make the
   * second incarnation see only the D and retract a live row; the
   * forward direction (A's newer D deleting incarnation one's U) rides
   * along, plus an insert-then-update key and a delete-only key.
@@ -38,13 +39,7 @@ class StreamingCdcRestartSuite extends SparkSpec {
     def run(): Unit = {
       val env = spark.readStream.format(fmt)
         .option("path", spool.toString).load()
-      val latest = Pipelines.parseTicks(env).filter(!col("_corrupt"))
-        .groupBy(col("symbol"))
-        .agg(max_by(struct(col("time"), col("price"), col("tradeType")),
-          col("time")).as("w"))
-        .select(col("symbol"), col("w.time").as("time"),
-          col("w.price").as("price"), col("w.tradeType").as("op"))
-      val q = latest.writeStream.outputMode("update")
+      val q = StreamE2EQueries.cdcLatest(env).writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           LwwSink.upsertBatch(batch.toDF(), id, sink, "feed", "cdc",

@@ -3,14 +3,14 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 import graft.ops.MinHashLSH
 import graft.sink.LwwSink
 import graft.source.EnvelopeSourceProvider
 import graft.streaming.LshBucketProcessor
 
-/** Restart recovery for the LSH bucket state behind `stream_e2e_neardup`:
+/** Restart recovery for the LSH bucket state behind `stream_e2e_neardup`
+  * (the same [[LshBucketProcessor.pairs]] dataflow):
   * bucket membership must survive a checkpointed restart, so a document
   * arriving in the SECOND incarnation still pairs against a first-
   * incarnation member — lost state would silently DROP the cross-restart
@@ -41,11 +41,7 @@ class StreamingNearDupRestartSuite extends SparkSpec {
     def run(): Unit = {
       val env = spark.readStream.format(fmt)
         .option("path", spool.toString).load()
-      val hits = LshBucketProcessor.bandHits(env)
-      val q = hits.groupByKey(_.bucket)
-        .transformWithState(new LshBucketProcessor(),
-          TimeMode.None(), OutputMode.Update())
-        .toDF()
+      val q = LshBucketProcessor.pairs(env)
         .writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
