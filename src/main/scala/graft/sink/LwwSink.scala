@@ -3,9 +3,11 @@ package graft.sink
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
@@ -34,16 +36,25 @@ import graft.util.Fs
   * replayed batch re-elects the same winners (exactly-once per key, vs
   * the reference's at-most-once — SURVEY §2.6).
   *
+  * One write per micro-batch: [[upsertTables]] merges the rows of every
+  * table a micro-batch touches (the book branch's `{topic}_book` tables)
+  * in one plan — one dedup, one collect of the affected (table, bucket)
+  * pairs, one anti-join, one parquet write partitioned by (table index,
+  * bucket) — so a micro-batch pays the sink's fixed job set once, not
+  * once per topic. [[upsertBatch]] is its one-table case.
+  *
   * Manifest: a table is what its `_manifest` file says — the bucket key,
   * the bucket count, the stored schema, a version counter and, per
   * bucket, the directory of its current generation, `kb=N/g<version>`.
   * Bucket files are never moved or rewritten once a manifest names them.
   * An upsert stages its merged buckets, moves each into a new generation
-  * directory, publishes the next manifest by one atomic rename, then
-  * deletes every generation that neither the new manifest nor the one it
-  * started from names. A table keeps the layout it was created with: an
-  * upsert keyed on another column, or carrying other columns or types,
-  * fails naming the difference instead of silently duplicating PKs.
+  * directory of its table, publishes each table's next manifest by one
+  * atomic rename, then deletes every generation that neither the new
+  * manifest nor the one it started from names. A table keeps the layout
+  * it was created with: an upsert keyed on another column, or carrying
+  * other columns or types, fails naming the table and the difference
+  * instead of silently duplicating PKs — and fails before it writes
+  * anything, for every table it touches.
   *
   * Reads: [[read]] resolves the manifest once and scans exactly the
   * directories it names, under the stored schema (no schema-inference
@@ -57,15 +68,21 @@ import graft.util.Fs
   * stays readable through that upsert and its cleanup. A read that
   * outlives two more upserts of the same table may fail.
   *
-  * Crash safety: a table is old or new, never a mix. A crash before the
+  * Crash safety: a table is old or new, never a mix. A crash before its
   * publish leaves the previous manifest, and everything it names, in
-  * place; the checkpointed micro-batch replays the whole upsert. What a
-  * crash leaves behind (a `_tmp_b<id>` staging dir, a `g<version>` dir no
-  * manifest names) is deleted by the next upsert before it reuses the
-  * name.
+  * place; the checkpointed micro-batch replays the whole upsert. The
+  * tables of one micro-batch publish one after another, so a crash
+  * between two publishes leaves the earlier tables at this batch and the
+  * later ones at the previous batch; the replay brings every table to
+  * this batch (a table that already holds it merges the same winners
+  * again). What a crash leaves behind (a `_tmp_b<id>` staging dir inside
+  * the first written table, a `g<version>` dir no manifest names) is
+  * deleted by that table's next upsert, and the replay reuses the names.
   *
   * One writer per table: upserts of one table must not run concurrently
-  * (a streaming query's `foreachBatch` calls never do). Reads may run
+  * (a streaming query's `foreachBatch` calls never do). Writers of
+  * disjoint tables may share a sink root (`full` mode's tick and book
+  * queries): each stages inside a table only it writes. Reads may run
   * beside the writer.
   *
   * Scale note: per-bucket rewrite is the *emulation's* granularity —
@@ -197,11 +214,12 @@ object LwwSink {
     Files.move(tmp, manifestFile(table), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Merge one micro-batch into the emulated table. `keys` is the PK;
-    * `batchId` is the version (later batch wins; within a batch, the
-    * payload columns complete the version tuple so [[LwwDedup]]'s
-    * winner is deterministic even for same-PK rows — see the call
-    * site). Buckets hash on `keys.head` (the partition-key analog).
+  /** Merge one micro-batch into the emulated table: the one-table case
+    * of [[upsertTables]]. `keys` is the PK; `batchId` is the version
+    * (later batch wins; within a batch, the payload columns complete the
+    * version tuple so [[LwwDedup]]'s winner is deterministic even for
+    * same-PK rows — see [[upsertTables]]). Buckets hash on `keys.head`
+    * (the partition-key analog).
     */
   def upsertBatch(
       batch: DataFrame,
@@ -209,32 +227,73 @@ object LwwSink {
       rootDir: String,
       topic: String,
       kind: String,
+      keys: Seq[String]): Unit =
+    upsertTables(batch.withColumn(TableCol, lit(0)), batchId, rootDir,
+      IndexedSeq(topic), kind, keys)
+
+  /** The column of an [[upsertTables]] batch that names each row's table:
+    * an index into its `topics`. */
+  val TableCol = "_table"
+
+  /** [[TableCol]] for rows whose wire topic is `topic`: its index in
+    * `topics`, or -1 for a topic not listed (which fails the upsert). */
+  def tableIndex(topics: Seq[String], topic: Column): Column =
+    (array_position(typedLit(topics), topic) - 1).cast(IntegerType)
+
+  /** A table one micro-batch merges into: its path, its published
+    * manifest, if any, and the manifest the merge builds on. */
+  private case class Target(path: String, prev: Option[Manifest], base: Manifest)
+
+  /** Merge one micro-batch into the tables `{topic}_{kind}` of `topics`,
+    * each row into the table its [[TableCol]] names: one LWW merge and
+    * one parquet write, partitioned by (table, bucket), for all of them.
+    * `keys` is every table's PK; `batchId` is the version, as in
+    * [[upsertBatch]]. Each table keeps its own bucket key and count.
+    *
+    * Every table is checked (encoding, bucket key, stored schema) before
+    * anything is written, so one bad table fails the micro-batch with no
+    * manifest published.
+    */
+  def upsertTables(
+      batch: DataFrame,
+      batchId: Long,
+      rootDir: String,
+      topics: IndexedSeq[String],
+      kind: String,
       keys: Seq[String]): Unit = {
+    if (topics.isEmpty) return
     val spark = batch.sparkSession
-    val table = tablePath(rootDir, topic, kind)
-    checkLegacyLayout(rootDir, topic, kind)
-    val prev = manifest(table)
-    val nb = prev.fold(NumBuckets)(_.nb)
-    val key = prev.fold(keys.head)(_.key)
-    if (key != keys.head)
-      throw new IllegalArgumentException(
-        s"table $table is bucketed on '$key' but this upsert keys on " +
-          s"'${keys.head}': its rows would hash into buckets the merge " +
-          "never reads and silently duplicate primary keys.")
-    val tagged = batch
-      .withColumn("_batch_id", lit(batchId))
-      .withColumn("kb", pmod(hash(col(keys.head)), lit(nb)))
-    val stored = StructType(tagged.schema.filterNot(_.name == "kb"))
-    val base = prev.getOrElse(Manifest(0L, key, nb, stored, Map.empty))
-    checkSchema(table, base.schema, stored)
+    val stamped = batch.withColumn("_batch_id", lit(batchId))
+    val stored = StructType(stamped.schema.filterNot(_.name == TableCol))
+    val targets = topics.map { topic =>
+      checkLegacyLayout(rootDir, topic, kind)
+      val table = tablePath(rootDir, topic, kind)
+      val prev = manifest(table)
+      val base = prev.getOrElse(Manifest(0L, keys.head, NumBuckets, stored, Map.empty))
+      if (base.key != keys.head)
+        throw new IllegalArgumentException(
+          s"table $table is bucketed on '${base.key}' but this upsert keys on " +
+            s"'${keys.head}': its rows would hash into buckets the merge " +
+            "never reads and silently duplicate primary keys.")
+      checkSchema(table, base.schema, stored)
+      Target(table, prev, base)
+    }
+    // each table hashes into its OWN bucket count (kb values are computed
+    // mod the count the table was created with); a row of an unlisted
+    // table gets no bucket
+    val nb = targets.zipWithIndex.tail.foldLeft(
+        when(col(TableCol) === 0, lit(targets.head.base.nb))) {
+      case (c, (t, i)) => c.when(col(TableCol) === i, lit(t.base.nb))
+    }
+    val tagged = stamped.withColumn("kb", pmod(hash(col(keys.head)), nb))
     // Upsert = LWW within the batch (a window over BATCH rows only — the
     // micro-batch is small by admission control), then existing rows
-    // survive unless their PK is in the batch: a broadcast anti-join,
-    // NOT a window over the table. The stored data is scanned once and
-    // never re-sorted — per-batch cost is O(affected-bucket scan) +
-    // O(batch), where a union-then-window merge re-windows every stored
-    // row on every micro-batch (measured 3× the whole pipeline's ingest
-    // cost at 200k rows). The winners are pinned: three consumers
+    // survive unless their (table, PK) is in the batch: a broadcast
+    // anti-join, NOT a window over the table. The stored data is scanned
+    // once and never re-sorted — per-batch cost is O(affected-bucket
+    // scan) + O(batch), where a union-then-window merge re-windows every
+    // stored row on every micro-batch (measured 3× the whole pipeline's
+    // ingest cost at 200k rows). The winners are pinned: three consumers
     // (bucket metadata, broadcast key set, union) would otherwise each
     // re-run the batch dedup.
     // Version tuple = (_batch_id, every non-key payload column). The
@@ -249,64 +308,97 @@ object LwwSink {
     // Cassandra upsert is arrival-order-dependent here, so any stable
     // total order is a strict improvement), and byte-identical
     // duplicates tie harmlessly.
-    val payloadCols = batch.columns.filterNot(keys.contains).toSeq
-    val winners = LwwDedup(tagged, keys.map(col),
+    val rowKey = TableCol +: keys
+    val payloadCols = batch.columns.filterNot(rowKey.contains).toSeq
+    val winners = LwwDedup(tagged, rowKey.map(col),
         col("_batch_id") +: payloadCols.map(col))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // the affected-bucket set is metadata (≤ NumBuckets ints), not data
-      val affected = winners.select("kb").distinct()
-        .collect().map(_.getInt(0)).sorted.toIndexedSeq
-      if (affected.isEmpty) {
-        // an empty first batch still creates the table: it reads as empty
-        if (prev.isEmpty) publish(table, base)
-        return
-      }
-      val existingDirs = affected.flatMap(base.buckets.get).map(d => s"$table/$d")
+      // the affected (table, bucket) pairs are metadata (at most the
+      // tables' bucket counts), not data
+      val pairs = winners.select(TableCol, "kb").distinct().collect()
+      if (pairs.exists(_.isNullAt(1)))
+        throw new IllegalArgumentException(
+          s"the batch holds rows of a table outside its ${topics.size} topics")
+      val affected = pairs.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .map { case (i, rs) => i -> rs.map(_.getInt(1)).sorted.toIndexedSeq }
+      // an empty first batch still creates the table: it reads as empty
+      targets.indices.filterNot(affected.map(_._1).contains)
+        .foreach(i => if (targets(i).prev.isEmpty) publish(targets(i).path, targets(i).base))
+      if (affected.isEmpty) return
+      // one scan of every affected bucket of every table: the table
+      // index is a partition value of its dirs, so the anti-join stays one
+      // join against one broadcast key set
+      val storedDirs = for {
+        (i, ns) <- affected
+        n <- ns
+        dir <- targets(i).base.buckets.get(n)
+      } yield Seq(i, n) -> s"${targets(i).path}/$dir"
       val merged =
-        if (existingDirs.nonEmpty)
-          scan(spark, table, base.schema, existingDirs)
-            .join(broadcast(winners.select(keys.map(col): _*)),
-              keys, "left_anti")
+        if (storedDirs.nonEmpty)
+          scan(spark, stored, Seq(TableCol, "kb"), storedDirs)
+            .join(broadcast(winners.select(rowKey.map(col): _*)), rowKey, "left_anti")
             .unionByName(winners)
         else winners
-      // one writer task per bucket: without this, partitionBy sprays
-      // (shuffle-partitions × buckets) small files per batch and the
-      // write dominates the merge. Fan out by the table's OWN bucket
-      // count (kb values are computed mod `nb`), not the global seed
-      // constant — they differ for tables created under an older count.
-      // deterministic in-file layout: sort by the table's OWN primary
-      // key (hardcoding (symbol, time, price) here broke the first
-      // table whose schema lacked one of those columns)
-      val deduped = merged
-        .repartition(nb, col("kb"))
-        .sortWithinPartitions(keys.map(col): _*)
-      // stage under an underscore name inside the table dir (same volume,
-      // invisible to readers), move each bucket into its new generation,
-      // then publish: until the rename, readers see the previous table
-      val tmp = s"$table/_tmp_b$batchId"
-      deduped.write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(tmp)
-      val v = base.version + 1
-      val next = base.copy(version = v,
-        buckets = base.buckets ++ affected.map(n => n -> s"kb=$n/g$v"))
-      affected.foreach { n =>
-        val dst = Paths.get(s"$table/${next.buckets(n)}")
-        Fs.deleteTree(dst) // left by a crashed attempt at this version
-        Files.createDirectories(dst.getParent)
-        Files.move(Paths.get(s"$tmp/kb=$n"), dst, StandardCopyOption.ATOMIC_MOVE)
-        afterBucketMove(n)
+      // each (table, bucket) whole in one writer task, so it lands as one
+      // file: without this, partitionBy sprays (shuffle-partitions ×
+      // buckets) small files per batch and the write dominates the merge.
+      // At most one task per core: a task's fixed cost (scheduling, the
+      // commit rename) is most of the cost of writing one small bucket,
+      // and one task per bucket doubled the write's time. Deterministic
+      // in-file layout: each bucket sorted by the tables' OWN primary key
+      // (hardcoding (symbol, time, price) here broke the first table
+      // whose schema lacked one of those columns), after the partition
+      // columns, so the writer adds no sort of its own
+      val tasks = math.min(pairs.length, spark.sparkContext.defaultParallelism)
+      val layout = merged
+        .repartition(tasks, col(TableCol), col("kb"))
+        .sortWithinPartitions((TableCol +: "kb" +: keys).map(col): _*)
+      // stage under an underscore name inside the first written table's
+      // dir (same volume, invisible to readers, and only this writer
+      // writes there), move each bucket into its table's new generation,
+      // then publish: until its manifest's rename, a table reads as before
+      val tmp = s"${targets(affected.head._1).path}/_tmp_b$batchId"
+      layout.write.mode(SaveMode.Overwrite).partitionBy(TableCol, "kb").parquet(tmp)
+      val written = affected.map { case (i, ns) =>
+        val t = targets(i)
+        val v = t.base.version + 1
+        val next = t.base.copy(version = v,
+          buckets = t.base.buckets ++ ns.map(n => n -> s"kb=$n/g$v"))
+        ns.foreach { n =>
+          val dst = Paths.get(s"${t.path}/${next.buckets(n)}")
+          Fs.deleteTree(dst) // left by a crashed attempt at this version
+          Files.createDirectories(dst.getParent)
+          Files.move(Paths.get(s"$tmp/$TableCol=$i/kb=$n"), dst, StandardCopyOption.ATOMIC_MOVE)
+          afterBucketMove(n)
+        }
+        (t, next)
       }
-      publish(table, next)
-      sweep(table, (base.buckets.values ++ next.buckets.values).toSet)
+      written.foreach { case (t, next) =>
+        publish(t.path, next)
+        afterTablePublish(t.path)
+      }
+      // after every publish: the staging dir goes with its table's sweep
+      written.foreach { case (t, next) =>
+        sweep(t.path, (t.base.buckets.values ++ next.buckets.values).toSet)
+      }
     } finally winners.unpersist()
   }
 
   /** Test-only fault injection: runs after each bucket moves into its new
-    * generation, before the manifest is published. LwwSinkSuite kills an
+    * generation, before any manifest is published. LwwSinkSuite kills an
     * upsert there to prove a crash leaves the previous table readable and
     * the replayed micro-batch converges. A no-op outside tests.
     */
   private[graft] var afterBucketMove: Int => Unit = _ => ()
+
+  /** Test-only fault injection: runs after each table's manifest is
+    * published, with the table's path, before the next table publishes.
+    * LwwSinkSuite kills a micro-batch there to leave two tables at
+    * different batches and proves the replay heals them. A no-op outside
+    * tests.
+    */
+  private[graft] var afterTablePublish: String => Unit = _ => ()
 
   /** Delete every generation `keep` does not name, and every staging dir
     * (one writer per table: no other upsert is in flight). */
@@ -336,16 +428,24 @@ object LwwSink {
             .mkString("; "))
   }
 
-  /** The one scan of a table's files, one root path per generation dir:
-    * under its stored schema, so no schema-inference job runs. Built on
-    * the file index directly, as `spark.read.parquet` would build it, but
-    * without its per-call existence check of every path, which starts a
-    * thread pool and costs a read more than listing the files does. */
-  private def scan(spark: SparkSession, table: String, schema: StructType,
-      paths: Seq[String]): DataFrame = {
-    val index = new InMemoryFileIndex(spark, paths.map(new org.apache.hadoop.fs.Path(_)),
-      Map("basePath" -> table), Some(schema.add("kb", IntegerType)))
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+  /** The one scan of sink files: one root path per bucket generation dir,
+    * under the stored `schema`, so no schema-inference job runs, and with
+    * each dir's values of the `partitions` columns given, not inferred
+    * from its path. Built on the file index directly, as
+    * `spark.read.parquet` would build it, but without its per-call
+    * existence check of every path, which starts a thread pool and costs
+    * a read more than listing the files does. */
+  private def scan(spark: SparkSession, schema: StructType, partitions: Seq[String],
+      dirs: Seq[(Seq[Int], String)]): DataFrame = {
+    val partitionSchema = StructType(partitions.map(StructField(_, IntegerType)))
+    val spec = PartitionSpec(partitionSchema, dirs.map { case (values, dir) =>
+      val p = new HPath(dir)
+      PartitionPath(InternalRow.fromSeq(values),
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p))
+    })
+    val index = new InMemoryFileIndex(spark, spec.partitions.map(_.path), Map.empty, None,
+      userSpecifiedPartitionSpec = Some(spec))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
       schema.toNullable, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
@@ -360,7 +460,8 @@ object LwwSink {
     val table = tablePath(rootDir, topic, kind)
     val m = manifest(table)
       .getOrElse(throw new IllegalStateException(s"no LwwSink table at $table"))
-    val df = scan(spark, table, m.schema, m.buckets.toSeq.sorted.map(b => s"$table/${b._2}"))
+    val df = scan(spark, m.schema, Seq("kb"),
+      m.buckets.toSeq.sorted.map { case (n, dir) => Seq(n) -> s"$table/$dir" })
     df.queryExecution.analyzed.foreach {
       case r: LogicalRelation => r.setTagValue(LwwBucketPrune.Layout, (m.key, m.nb))
       case _ =>

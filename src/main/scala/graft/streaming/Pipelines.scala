@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 
 import graft.model.Schemas
+import graft.sink.LwwSink
 
 /** End-to-end assemblies of the reference's three pipelines (SURVEY §3):
   * envelope demux → type routing → parse → normalize/enrich. Pure
@@ -143,6 +144,39 @@ object Pipelines {
     batch.write.mode("overwrite")
       .parquet(s"$sinkRoot/_deadletter/kind=$kind/batch=$id")
 
+  /** The sink tables' primary key: the reference's Cassandra PRIMARY KEY
+    * (symbol, time, price), main.rs:87-88. */
+  private val Keys = Seq("symbol", "time", "price")
+
+  /** Quarantine a pinned, parsed book micro-batch's corrupt rows and
+    * return the sorted topics of its clean rows. The topics are observed
+    * by the quarantine write itself, so listing them costs no job. The
+    * write runs even when nothing is corrupt: the quarantine dir is
+    * overwritten per (kind, batch), and skipping empties would leave a
+    * previous partial write of this batch id in place.
+    */
+  private[graft] def quarantineBooks(
+      b: DataFrame, id: Long, sinkRoot: String): IndexedSeq[String] = {
+    val seen = Observation()
+    quarantine(
+      b.observe(seen, collect_set(when(!col("_corrupt"), col("topic"))).as("topics"))
+        .filter(col("_corrupt")).select(col("topic"), col("payload")),
+      id, sinkRoot, "BOOK")
+    seen.get("topics").asInstanceOf[Seq[String]].sorted.toIndexedSeq
+  }
+
+  /** Upsert a pinned, parsed book micro-batch's clean rows into one
+    * `{topic}_book` table per topic of `topics`: one merge and one write
+    * for all of them ([[LwwSink.upsertTables]]).
+    */
+  private[graft] def upsertBooks(
+      b: DataFrame, id: Long, sinkRoot: String, topics: IndexedSeq[String]): Unit =
+    LwwSink.upsertTables(
+      b.filter(!col("_corrupt"))
+        .withColumn(LwwSink.TableCol, LwwSink.tableIndex(topics, col("topic")))
+        .drop("topic", "payload", "_corrupt"),
+      id, sinkRoot, topics, "book", Keys)
+
   /** R2 mode gating (the reference compiles three binaries from
     * triplicated code and picks one via APP_MODE, start.sh:3-14; here a
     * mode is just which streaming queries start). Returns the started
@@ -156,7 +190,6 @@ object Pipelines {
       mode: String, // "full" | "tick" | "book"
       sinkRoot: String,
       checkpointRoot: String): Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
-    import graft.sink.LwwSink
     require(Seq("full", "tick", "book").contains(mode), s"bad mode $mode")
     val wantTick = mode == "full" || mode == "tick"
     val wantBook = mode == "full" || mode == "book"
@@ -171,8 +204,7 @@ object Pipelines {
         .queryName(s"graft_tick:$sinkRoot")
         .option("checkpointLocation", s"$checkpointRoot/tick")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "tick",
-            Seq("symbol", "time", "price"))
+          LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "tick", Keys)
         }.start()
       // The tick dead-letter is a SEPARATE query (unlike book, which
       // splits inside its own foreachBatch): the typed stateful
@@ -194,11 +226,12 @@ object Pipelines {
     if (wantBook) {
       // K3 dynamic per-topic tables: the reference CREATEs `{topic}_book`
       // per message (main.rs:80-92); here each micro-batch upserts into
-      // one table per topic it contains. The distinct-topic list is
-      // metadata (bounded by the subscription), not data. The TICK
-      // branch stays single-table: its keyed state is per-symbol like
-      // the reference, which runs one topic prefix per process
-      // (start.sh:3-14) — topic fan-out there is deployment-level.
+      // one table per topic it contains, all of them in one merge and one
+      // write. The topic list is metadata (bounded by the subscription),
+      // not data: the quarantine write observes it. The TICK branch stays
+      // single-table: its keyed state is per-symbol like the reference,
+      // which runs one topic prefix per process (start.sh:3-14) — topic
+      // fan-out there is deployment-level.
       // ONE query carries both the upserts and the dead-letter split:
       // unlike the tick branch (whose typed stateful operator sits
       // between parse and sink, so corrupt rows cannot ride), nothing
@@ -218,28 +251,12 @@ object Pipelines {
         .queryName(s"graft_book:$sinkRoot")
         .option("checkpointLocation", s"$checkpointRoot/book")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          // pin the batch: the quarantine write, topic scan, and each
-          // per-topic upsert are separate actions — unpinned they would
-          // re-parse the whole micro-batch per consumer (and re-fire
-          // the observe metrics)
+          // pin the batch: the quarantine write and the upsert are
+          // separate actions — unpinned, each would re-parse the whole
+          // micro-batch (and re-fire the observe metrics)
           val b = batch.toDF().persist()
-          try {
-            val corrupt = b.filter(col("_corrupt"))
-              .select(col("topic"), col("payload"))
-            // write even when empty: the quarantine dir is overwritten
-            // per (kind, batch), and skipping empties would leave a
-            // previous partial write of this batch id in place
-            quarantine(corrupt, id, sinkRoot, "BOOK")
-            val clean = b.filter(!col("_corrupt"))
-            val topics = clean.select("topic").distinct()
-              .collect().map(_.getString(0)).sorted
-            topics.foreach { t =>
-              LwwSink.upsertBatch(
-                clean.filter(col("topic") === t)
-                  .drop("topic", "payload", "_corrupt"),
-                id, sinkRoot, t, "book", Seq("symbol", "time", "price"))
-            }
-          } finally b.unpersist()
+          try upsertBooks(b, id, sinkRoot, quarantineBooks(b, id, sinkRoot))
+          finally b.unpersist()
         }.start()
     }
     queries.toSeq

@@ -10,8 +10,10 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.ops.LwwDedup
 import graft.plans.LwwBucketPrune
 import graft.sink.LwwSink
+import graft.streaming.Pipelines
 import graft.util.Fs
 
 /** Emulated Cassandra keyed-upsert sink: LWW by PK across micro-batches,
@@ -422,6 +424,162 @@ class LwwSinkSuite extends SparkSpec {
           e.getMessage.contains("fresh sink root"), e.getMessage)
       }
       assert(Fs.walk(table).map(_.toString).toSet === before, "the table is untouched")
+    }
+  }
+
+  /** Upsert `df`, whose `topic` column names each row's table, the way
+    * the book branch does: one merge and one write for every topic. */
+  private def upsertTopics(df: DataFrame, id: Long, root: String): Unit = {
+    val topics = df.select("topic").distinct().collect().map(_.getString(0)).sorted.toIndexedSeq
+    LwwSink.upsertTables(
+      df.withColumn(LwwSink.TableCol, LwwSink.tableIndex(topics, col("topic"))).drop("topic"),
+      id, root, topics, "book", pk)
+  }
+
+  private def tableRows(root: String, topic: String) =
+    LwwSink.read(spark, root, topic, "book").collect().map(_.toSeq).sortBy(_.toString).toSeq
+
+  /** The `kb=N/g<version>` dirs the table's manifest names, each with the
+    * parquet files in it. */
+  private def generationFiles(table: String): Map[String, Int] =
+    LwwSink.manifest(table).get.buckets.values.map { dir =>
+      dir -> Fs.list(Paths.get(s"$table/$dir")).count(_.toString.endsWith(".parquet"))
+    }.toMap
+
+  test("the merged write of several topics equals one upsert per topic") {
+    val topics = Seq("a", "b", "../../x")
+    def batch(ts: Seq[Long], v: Int) = (for (tp <- topics; s <- symbols.take(60); t <- ts)
+      yield (tp, s, t, 1.5, v + tp.length)).toDF("topic", "symbol", "time", "price", "volume")
+    val batches = Seq(batch(Seq(100L, 200L), 1), batch(Seq(200L, 300L), 2))
+    val merged = Files.createTempDirectory("lww_merged").toString
+    val perTopic = Files.createTempDirectory("lww_per_topic").toString
+    // topic "a" exists before the first batch, at a bucket count of its own
+    Seq(merged, perTopic).foreach(root => create(LwwSink.tablePath(root, "a", "book"),
+      batches.head.drop("topic"), 7))
+    batches.zipWithIndex.foreach { case (b, id) =>
+      upsertTopics(b, id.toLong, merged)
+      topics.foreach(tp => LwwSink.upsertBatch(b.filter(col("topic") === tp).drop("topic"),
+        id.toLong, perTopic, tp, "book", pk))
+    }
+    val state = topics.map(tp => tableRows(merged, tp))
+    topics.zip(state).foreach { case (tp, rows) =>
+      assert(rows.size === 180, s"topic '$tp'")
+      assert(rows === tableRows(perTopic, tp), s"topic '$tp'")
+      val (m, p) = (LwwSink.manifest(LwwSink.tablePath(merged, tp, "book")).get,
+        LwwSink.manifest(LwwSink.tablePath(perTopic, tp, "book")).get)
+      assert((m.key, m.nb) === ((p.key, p.nb)), s"topic '$tp'")
+      assert(m.nb === (if (tp == "a") 7 else LwwSink.NumBuckets), s"topic '$tp'")
+      // every bucket generation is one PK-sorted file, so `=` reads one file
+      val files = generationFiles(LwwSink.tablePath(merged, tp, "book"))
+      assert(files.values.forall(_ == 1), s"topic '$tp': $files")
+      assert(files.keys.exists(_.endsWith("/g2")), s"topic '$tp' rewrote buckets: $files")
+    }
+    // the hostile topic's table stays inside the sink root
+    assert(Paths.get(LwwSink.tablePath(merged, "../../x", "book")).normalize()
+      .startsWith(Paths.get(merged)))
+    // a replayed micro-batch changes no table
+    upsertTopics(batches.last, 1L, merged)
+    assert(topics.map(tp => tableRows(merged, tp)) === state)
+  }
+
+  test("a bad table fails the micro-batch before any table is written") {
+    val root = Files.createTempDirectory("lww_check_all").toString
+    def batch(v: Int) = Seq("t0", "t1").map(tp => (tp, "EURUSD", 100L, 1.08, v))
+      .toDF("topic", "symbol", "time", "price", "volume")
+    upsertTopics(batch(10), 0L, root)
+    val t0 = LwwSink.tablePath(root, "t0", "book")
+    val t1 = LwwSink.tablePath(root, "t1", "book")
+    val before = LwwSink.manifest(t0).get
+    def untouched(): Unit = {
+      assert(LwwSink.manifest(t0).get === before, "t0 must not publish")
+      assert(tableRows(root, "t0") === Seq(Seq("EURUSD", 100L, 1.08, 10)))
+    }
+    // t1 is bucketed on another key: the later table's check fails the
+    // batch before the earlier table publishes
+    val good = LwwSink.manifest(t1).get
+    LwwSink.publish(t1, good.copy(key = "time"))
+    val k = intercept[IllegalArgumentException](upsertTopics(batch(20), 1L, root))
+    assert(k.getMessage.contains(t1) && k.getMessage.contains("'time'") &&
+      k.getMessage.contains("'symbol'"), k.getMessage)
+    untouched()
+    // t1 stores other columns
+    LwwSink.publish(t1, good.copy(schema = good.schema.add("side", StringType)))
+    val s = intercept[IllegalArgumentException](upsertTopics(batch(20), 1L, root))
+    assert(s.getMessage.contains(t1) && s.getMessage.contains("missing [side: string]"),
+      s.getMessage)
+    untouched()
+    // with t1 mended, the same batch lands in both tables
+    LwwSink.publish(t1, good)
+    upsertTopics(batch(20), 1L, root)
+    Seq("t0", "t1").foreach(tp =>
+      assert(tableRows(root, tp) === Seq(Seq("EURUSD", 100L, 1.08, 20)), tp))
+  }
+
+  test("crash between two tables' publishes: the restarted book query heals both") {
+    val fmt = classOf[graft.source.EnvelopeSourceProvider].getName
+    val spool = Files.createTempDirectory("lww_pub_spool")
+    val sink = Files.createTempDirectory("lww_pub_sink").toString
+    val ckpt = Files.createTempDirectory("lww_pub_ckpt").toString
+    val topics = Seq("t0", "t1")
+    // file f writes every (topic, symbol, level) key with volume f, so
+    // the second file rewrites every key of the first, plus one corrupt
+    // message per file
+    def lines(f: Int) = (for (tp <- topics; s <- 0 until 20) yield {
+      val levels = (0 until 3).map(l =>
+        s"""{"symbol": "${tp.toUpperCase}_$s", "price": ${1.0 + l}, "time": ${100 + l}, "volume": $f, "type": "BOOK_TYPE_BUY"}""")
+      (tp, levels.mkString("[", ",", "]"))
+    }) :+ (("t1", s"not an array $f"))
+    def envelopes(f: Int) = lines(f).map { case (tp, p) =>
+      val payload = if (p.startsWith("[")) p else "\"" + p + "\""
+      s"""{"topic": "$tp", "frameType": "BOOK", "payload": $payload}"""
+    }
+    def write(f: Int): Unit = Files.write(spool.resolve(f"$f%03d.jsonl"),
+      envelopes(f).mkString("", "\n", "\n").getBytes("UTF-8"))
+    def drain(): Unit = {
+      val env = spark.readStream.format(fmt).option("path", spool.toString).load()
+      val qs = Pipelines.start(env, "book", sink, ckpt)
+      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    }
+    // the batch oracle over the first `files` files: parse, then LWW per
+    // topic with the file as the version
+    def oracle(files: Int, tp: String) = LwwDedup(
+        (0 until files).map(f => Pipelines.parseBooks(lines(f).map { case (t, p) => (t, "BOOK", p) }
+          .toDF("topic", "frameType", "payload")).withColumn("f", lit(f))).reduce(_ unionByName _)
+          .filter(!col("_corrupt") && col("topic") === tp),
+        pk.map(col), Seq(col("f")))
+      .select("symbol", "price", "time", "volume", "orderType")
+      .collect().map(_.toSeq).sortBy(_.toString).toSeq
+    def sinkRows(tp: String) = LwwSink.read(spark, sink, tp, "book")
+      .select("symbol", "price", "time", "volume", "orderType")
+      .collect().map(_.toSeq).sortBy(_.toString).toSeq
+
+    write(0)
+    drain()
+    write(1)
+    var published = 0
+    LwwSink.afterTablePublish = { _ =>
+      published += 1
+      if (published == 1) throw new RuntimeException("injected crash")
+    }
+    try intercept[Exception](drain()) finally LwwSink.afterTablePublish = _ => ()
+    assert(published === 1, "the crash must land between the two publishes")
+    // the two tables are at different batches until the replay
+    assert(sinkRows("t0") === oracle(2, "t0"))
+    assert(sinkRows("t1") === oracle(1, "t1"))
+
+    drain() // restart on the same checkpoint: batch 1 replays
+    topics.foreach(tp => assert(sinkRows(tp) === oracle(2, tp), tp))
+    val dl = spark.read.parquet(s"$sink/_deadletter").select("topic", "payload")
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    assert(dl === Seq(("t1", "not an array 0"), ("t1", "not an array 1")),
+      "each corrupt row quarantined exactly once")
+    assert(Fs.list(Paths.get(sink)).map(_.getFileName.toString).toSet ===
+      topics.map(tp => Paths.get(LwwSink.tablePath(sink, tp, "book")).getFileName.toString)
+        .toSet + "_deadletter", "only the tables and the dead letter remain")
+    topics.foreach { tp =>
+      val table = Paths.get(LwwSink.tablePath(sink, tp, "book"))
+      assert(!Fs.list(table).exists(_.getFileName.toString.startsWith("_tmp_b")),
+        s"$tp: staging swept")
     }
   }
 }

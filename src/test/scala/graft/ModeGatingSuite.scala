@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.ops.{CumVol, LwwDedup}
 import graft.sink.LwwSink
 import graft.source.EnvelopeSourceProvider
 import graft.streaming.Pipelines
@@ -32,16 +36,52 @@ class ModeGatingSuite extends SparkSpec {
     s"""{"topic": "feed", "frameType": "BOOK", "payload": [{"symbol": "EURUSD", "price": 1.08, "time": $t0, "volume": 9, "type": "BOOK_TYPE_BUY"}]}"""
 
   test("mode=full starts both branches; dead letter captures corrupt rows") {
-    val spool = spoolWith(tickLine, corruptTick, bookLine, corruptBook)
+    // two files, one per micro-batch: both queries write the same sink
+    // root with the same batch ids, and the second batch re-sends the
+    // book key with a new volume
+    val tick2 =
+      s"""{"topic": "feed", "frameType": "TICK", "payload": {"symbol": "EURUSD", "bid": 1.0, "price": 1.2, "ask": 1.2, "time": ${t0 + 1}, "volume": 5, "type": "S"}}"""
+    val book2 =
+      s"""{"topic": "feed", "frameType": "BOOK", "payload": [{"symbol": "EURUSD", "price": 1.08, "time": $t0, "volume": 4, "type": "BOOK_TYPE_SELL"}, {"symbol": "GBPUSD", "price": 1.27, "time": $t0, "volume": 2, "type": "BOOK_TYPE_BUY"}]}"""
+    val files = Seq(Seq(tickLine, corruptTick, bookLine, corruptBook), Seq(tick2, book2))
+    val spool = spoolWith(files.head: _*)
+    Files.write(spool.resolve("001.jsonl"), files(1).mkString("", "\n", "\n").getBytes("UTF-8"))
     val sink = Files.createTempDirectory("mode_sink").toString
     val ckpt = Files.createTempDirectory("mode_ckpt").toString
     val env = spark.readStream.format(fmt)
-      .option("path", spool.toString).load()
+      .option("path", spool.toString).option("maxFilesPerTrigger", "1").load()
     val qs = Pipelines.start(env, "full", sink, ckpt)
     try {
       qs.foreach(_.processAllAvailable())
-      assert(LwwSink.read(spark, sink, "feed", "tick").count() === 1)
-      assert(LwwSink.read(spark, sink, "feed", "book").count() === 1)
+      Seq("graft_tick:", "graft_book:").foreach { name =>
+        val q = qs.find(_.name.startsWith(name)).get
+        assert(q.recentProgress.count(_.numInputRows > 0) >= 2, s"$name batches")
+      }
+      // each branch's table equals its batch oracle over both files
+      import spark.implicits._
+      def envOf(f: Int) = spark.createDataset(files(f)).select(
+        get_json_object(col("value"), "$.topic").as("topic"),
+        get_json_object(col("value"), "$.frameType").as("frameType"),
+        get_json_object(col("value"), "$.payload").as("payload"))
+      def sorted(df: DataFrame, cols: Seq[String]) =
+        df.select(cols.map(col): _*).collect().map(_.toSeq).sortBy(_.toString).toSeq
+      val pk = Seq("symbol", "time", "price").map(col)
+      val tickCols = Seq("symbol", "bid", "price", "ask", "time", "volume", "tradeType",
+        "cumbuy", "cumsell", "cumdelta")
+      val ticks = Pipelines.parseTicks(envOf(0).unionByName(envOf(1))).filter(!col("_corrupt"))
+      val tickOracle = LwwDedup(CumVol(ticks.withColumn("ts", timestamp_seconds(col("time"))),
+        col("symbol"), col("ts"), col("price"), col("tradeType"), col("volume")),
+        pk, Seq(col("time")))
+      val tickSink = LwwSink.read(spark, sink, "feed", "tick")
+      assert(sorted(tickSink, tickCols) === sorted(tickOracle, tickCols))
+      assert(tickSink.count() === 2)
+      val bookCols = Seq("symbol", "price", "time", "volume", "orderType")
+      val bookOracle = LwwDedup(files.indices.map(f => Pipelines.parseBooks(envOf(f))
+          .withColumn("f", lit(f))).reduce(_ unionByName _).filter(!col("_corrupt")),
+        pk, Seq(col("f")))
+      val bookSink = LwwSink.read(spark, sink, "feed", "book")
+      assert(sorted(bookSink, bookCols) === sorted(bookOracle, bookCols))
+      assert(bookSink.count() === 2)
       val dl = spark.read.parquet(s"$sink/_deadletter")
       val rows = dl.select("kind", "payload").collect()
         .map(r => (r.getString(0), r.getString(1))).sortBy(_._1)
