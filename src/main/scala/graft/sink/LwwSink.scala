@@ -28,20 +28,23 @@ import graft.util.Fs
   * `{topic}_{kind}`, hash-bucketed on the leading PK column (per-symbol
   * locality — the same axis the reference's partition key uses). An
   * upsert touches ONLY the buckets the batch's keys hash into:
-  * [[LwwDedup]] the batch on the PK, broadcast-anti-join the stored
-  * bucket rows against the batch's keys (stored rows lose to any rewrite
-  * of their PK — upsert semantics, no window over stored data), union,
-  * write those buckets anew. Work per micro-batch is O(data in affected
-  * buckets), not O(table). Idempotent under micro-batch re-delivery: a
-  * replayed batch re-elects the same winners (exactly-once per key, vs
-  * the reference's at-most-once — SURVEY §2.6).
+  * broadcast-anti-join the stored bucket rows against the batch's keys
+  * (stored rows lose to any rewrite of their PK — upsert semantics, the
+  * version decides nothing between a stored row and a batch row), union
+  * the survivors with the batch, [[LwwDedup]] on the PK (it elects among
+  * the batch's own same-PK rows), write those buckets anew. Work per
+  * micro-batch is O(data in affected buckets), not O(table). Idempotent
+  * under micro-batch re-delivery: a replayed batch re-elects the same
+  * winners (exactly-once per key, vs the reference's at-most-once —
+  * SURVEY §2.6).
   *
   * One write per micro-batch: [[upsertTables]] merges the rows of every
   * table a micro-batch touches (the book branch's `{topic}_book` tables)
-  * in one plan — one dedup, one collect of the affected (table, bucket)
-  * pairs, one anti-join, one parquet write partitioned by (table index,
-  * bucket) — so a micro-batch pays the sink's fixed job set once, not
-  * once per topic. [[upsertBatch]] is its one-table case.
+  * in one plan — one pin of the batch, one collect of its keys (the
+  * affected (table, bucket) pairs and the anti-join's key set), one
+  * shuffle by (table index, bucket) that the dedup and the parquet write
+  * share — so a micro-batch pays the sink's fixed job set (4 jobs) once,
+  * not once per topic. [[upsertBatch]] is its one-table case.
   *
   * Manifest: a table is what its `_manifest` file says — the bucket key,
   * the bucket count, the stored schema, a version counter and, per
@@ -285,75 +288,79 @@ object LwwSink {
         when(col(TableCol) === 0, lit(targets.head.base.nb))) {
       case (c, (t, i)) => c.when(col(TableCol) === i, lit(t.base.nb))
     }
+    // The batch is pinned once: the key collect and the merge both read
+    // it, and each would otherwise re-run its producer
     val tagged = stamped.withColumn("kb", pmod(hash(col(keys.head)), nb))
-    // Upsert = LWW within the batch (a window over BATCH rows only — the
-    // micro-batch is small by admission control), then existing rows
-    // survive unless their (table, PK) is in the batch: a broadcast
-    // anti-join, NOT a window over the table. The stored data is scanned
-    // once and never re-sorted — per-batch cost is O(affected-bucket
-    // scan) + O(batch), where a union-then-window merge re-windows every
-    // stored row on every micro-batch (measured 3× the whole pipeline's
-    // ingest cost at 200k rows). The winners are pinned: three consumers
-    // (bucket metadata, broadcast key set, union) would otherwise each
-    // re-run the batch dedup.
-    // Version tuple = (_batch_id, every non-key payload column). The
-    // batch id alone is CONSTANT within one micro-batch, so two rows
-    // with the same PK in one batch would tie and row_number would
-    // elect a shuffle-fetch-order-dependent winner — the original run
-    // and a crash replay of the same batch could store DIFFERENT rows,
-    // breaking the idempotent-replay claim this sink is built on
-    // (LwwDedup's determinism precondition is a per-key-unique version
-    // tuple). Payload columns complete the tuple: distinct payloads
-    // order deterministically (arbitrary but stable — the reference's
-    // Cassandra upsert is arrival-order-dependent here, so any stable
-    // total order is a strict improvement), and byte-identical
-    // duplicates tie harmlessly.
-    val rowKey = TableCol +: keys
-    val payloadCols = batch.columns.filterNot(rowKey.contains).toSeq
-    val winners = LwwDedup(tagged, rowKey.map(col),
-        col("_batch_id") +: payloadCols.map(col))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // the affected (table, bucket) pairs are metadata (at most the
-      // tables' bucket counts), not data
-      val pairs = winners.select(TableCol, "kb").distinct().collect()
-      if (pairs.exists(_.isNullAt(1)))
+      // one collect of the batch's keys: the affected (table, bucket)
+      // pairs and the task count on the driver, and the anti-join's key
+      // set as a local relation (a broadcast ships these bytes anyway)
+      val rowKey = TableCol +: keys
+      val keyed = tagged.select((rowKey :+ "kb").map(col): _*)
+      val batchKeys = keyed.collect()
+      if (batchKeys.exists(_.isNullAt(rowKey.size)))
         throw new IllegalArgumentException(
           s"the batch holds rows of a table outside its ${topics.size} topics")
-      val affected = pairs.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-        .map { case (i, rs) => i -> rs.map(_.getInt(1)).sorted.toIndexedSeq }
+      val affected = batchKeys.map(r => r.getInt(0) -> r.getInt(rowKey.size)).distinct
+        .groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (i, ps) => i -> ps.map(_._2).sorted.toIndexedSeq }
       // an empty first batch still creates the table: it reads as empty
       targets.indices.filterNot(affected.map(_._1).contains)
         .foreach(i => if (targets(i).prev.isEmpty) publish(targets(i).path, targets(i).base))
       if (affected.isEmpty) return
-      // one scan of every affected bucket of every table: the table
-      // index is a partition value of its dirs, so the anti-join stays one
-      // join against one broadcast key set
+      // Upsert = stored rows survive unless their (table, PK) is in the
+      // batch: a broadcast anti-join against the batch's keys, so between
+      // a stored row and a batch row the version decides nothing. One
+      // scan of every affected bucket of every table: the table index is
+      // a partition value of its dirs, so the anti-join stays one join
+      // against one broadcast key set
       val storedDirs = for {
         (i, ns) <- affected
         n <- ns
         dir <- targets(i).base.buckets.get(n)
       } yield Seq(i, n) -> s"${targets(i).path}/$dir"
       val merged =
-        if (storedDirs.nonEmpty)
+        if (storedDirs.nonEmpty) {
+          val keySet = spark.createDataFrame(java.util.Arrays.asList(batchKeys: _*), keyed.schema)
           scan(spark, stored, Seq(TableCol, "kb"), storedDirs)
-            .join(broadcast(winners.select(rowKey.map(col): _*)), rowKey, "left_anti")
-            .unionByName(winners)
-        else winners
+            .join(broadcast(keySet.select(rowKey.map(col): _*)), rowKey, "left_anti")
+            .unionByName(tagged)
+        } else tagged
       // each (table, bucket) whole in one writer task, so it lands as one
       // file: without this, partitionBy sprays (shuffle-partitions ×
       // buckets) small files per batch and the write dominates the merge.
       // At most one task per core: a task's fixed cost (scheduling, the
       // commit rename) is most of the cost of writing one small bucket,
-      // and one task per bucket doubled the write's time. Deterministic
-      // in-file layout: each bucket sorted by the tables' OWN primary key
-      // (hardcoding (symbol, time, price) here broke the first table
-      // whose schema lacked one of those columns), after the partition
-      // columns, so the writer adds no sort of its own
-      val tasks = math.min(pairs.length, spark.sparkContext.defaultParallelism)
-      val layout = merged
-        .repartition(tasks, col(TableCol), col("kb"))
-        .sortWithinPartitions((TableCol +: "kb" +: keys).map(col): _*)
+      // and one task per bucket doubled the write's time.
+      // Then LWW over the survivors and the batch. A survivor's key is not
+      // in the batch, so the dedup elects among the batch's own same-PK
+      // rows only, and it rides the bucket shuffle: `kb` is a function of
+      // (table, keys.head), so the (table, bucket) partitioning satisfies
+      // its (table, bucket, PK) window — one exchange per micro-batch.
+      // Version tuple = (_batch_id, every non-key payload column). The
+      // batch id alone is CONSTANT within one micro-batch, so two rows
+      // with the same PK in one batch would tie and row_number would
+      // elect a shuffle-fetch-order-dependent winner — the original run
+      // and a crash replay of the same batch could store DIFFERENT rows,
+      // breaking the idempotent-replay claim this sink is built on
+      // (LwwDedup's determinism precondition is a per-key-unique version
+      // tuple). Payload columns complete the tuple: distinct payloads
+      // order deterministically (arbitrary but stable — the reference's
+      // Cassandra upsert is arrival-order-dependent here, so any stable
+      // total order is a strict improvement), and byte-identical
+      // duplicates tie harmlessly.
+      // Deterministic in-file layout: the window sorts each task's rows
+      // by (table, bucket, the table's OWN primary key), and the write
+      // keeps that order, so each bucket lands as one PK-sorted file with
+      // no sort of the writer's own. (An explicit sort by the same columns
+      // here would sort every row again: the window sorts on the
+      // NaN/-0.0-normalized float key columns, which a plain column sort
+      // does not match.)
+      val tasks = math.min(affected.map(_._2.size).sum, spark.sparkContext.defaultParallelism)
+      val payloadCols = batch.columns.filterNot(rowKey.contains).toSeq
+      val layout = LwwDedup(merged.repartition(tasks, col(TableCol), col("kb")),
+        (TableCol +: "kb" +: keys).map(col), col("_batch_id") +: payloadCols.map(col))
       // stage under an underscore name inside the first written table's
       // dir (same volume, invisible to readers, and only this writer
       // writes there), move each bucket into its table's new generation,
@@ -382,7 +389,7 @@ object LwwSink {
       written.foreach { case (t, next) =>
         sweep(t.path, (t.base.buckets.values ++ next.buckets.values).toSet)
       }
-    } finally winners.unpersist()
+    } finally tagged.unpersist()
   }
 
   /** Test-only fault injection: runs after each bucket moves into its new

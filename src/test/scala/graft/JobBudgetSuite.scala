@@ -89,9 +89,10 @@ class JobBudgetSuite extends SparkSpec {
   }
 
   test("one-table upsert: the tick path pays no job for the merge") {
-    // dedup, the affected-bucket collect, the stored rows' broadcast
-    // anti-join, the bucket shuffle and the write
+    // the batch's keys collect (it also fills the pin), their broadcast
+    // for the stored rows' anti-join, the bucket shuffle the dedup rides
+    // and the write
     val (_, one) = bookSinkJobs
-    assert(one <= 7, s"$one jobs")
+    assert(one <= 4, s"$one jobs")
   }
 }

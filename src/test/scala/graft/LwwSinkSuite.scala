@@ -235,6 +235,27 @@ class LwwSinkSuite extends SparkSpec {
     assert(twice === once)
   }
 
+  test("a later batch replaces the stored row even when its payload sorts below it") {
+    // the version tuple orders payloads within one batch only: between a
+    // stored row and a batch row the anti-join decides, so volume 5
+    // replaces the stored volume 20
+    val root = Files.createTempDirectory("lww_lower").toString
+    val pk = Seq("symbol", "time", "price")
+    LwwSink.upsertBatch(rows(20), 0L, root, "feed", "tick", pk)
+    LwwSink.upsertBatch(rows(5), 1L, root, "feed", "tick", pk)
+    assert(LwwSink.read(spark, root, "feed", "tick").collect().map(_.getInt(3)).toSeq === Seq(5))
+  }
+
+  test("re-upserting a batch id with other content replaces the first write") {
+    // same PK, same batch id: the version tuple would keep the stored
+    // volume 20 (it sorts above 5); the anti-join drops it
+    val root = Files.createTempDirectory("lww_redo").toString
+    val pk = Seq("symbol", "time", "price")
+    LwwSink.upsertBatch(rows(20), 0L, root, "feed", "tick", pk)
+    LwwSink.upsertBatch(rows(5), 0L, root, "feed", "tick", pk)
+    assert(LwwSink.read(spark, root, "feed", "tick").collect().map(_.getInt(3)).toSeq === Seq(5))
+  }
+
   test("same-PK rows inside ONE batch elect a row-order-independent winner") {
     // _batch_id is constant within a micro-batch, so the version tuple
     // must extend into the payload columns — otherwise the window tie
@@ -470,8 +491,14 @@ class LwwSinkSuite extends SparkSpec {
       assert((m.key, m.nb) === ((p.key, p.nb)), s"topic '$tp'")
       assert(m.nb === (if (tp == "a") 7 else LwwSink.NumBuckets), s"topic '$tp'")
       // every bucket generation is one PK-sorted file, so `=` reads one file
-      val files = generationFiles(LwwSink.tablePath(merged, tp, "book"))
+      val table = LwwSink.tablePath(merged, tp, "book")
+      val files = generationFiles(table)
       assert(files.values.forall(_ == 1), s"topic '$tp': $files")
+      files.keys.foreach { dir =>
+        val keys = spark.read.parquet(s"$table/$dir").collect()
+          .map(r => (r.getAs[String]("symbol"), r.getAs[Long]("time"), r.getAs[Double]("price"))).toSeq
+        assert(keys === keys.sorted, s"topic '$tp': $dir is not PK-sorted")
+      }
       assert(files.keys.exists(_.endsWith("/g2")), s"topic '$tp' rewrote buckets: $files")
     }
     // the hostile topic's table stays inside the sink root
@@ -513,6 +540,29 @@ class LwwSinkSuite extends SparkSpec {
     upsertTopics(batch(20), 1L, root)
     Seq("t0", "t1").foreach(tp =>
       assert(tableRows(root, tp) === Seq(Seq("EURUSD", 100L, 1.08, 20)), tp))
+  }
+
+  test("a row of a table outside the topics fails the batch with nothing written") {
+    val root = Files.createTempDirectory("lww_unlisted").toString
+    val topics = IndexedSeq("t0", "t1")
+    def batch(tables: Int*) = tables.map(i => (i, "EURUSD", 100L, 1.08, 10 + i))
+      .toDF(LwwSink.TableCol, "symbol", "time", "price", "volume")
+    LwwSink.upsertTables(batch(0), 0L, root, topics.take(1), "book", pk)
+    val t0 = LwwSink.tablePath(root, "t0", "book")
+    val t1 = LwwSink.tablePath(root, "t1", "book")
+    val before = LwwSink.manifest(t0).get
+    // index 2 is past the two topics: `tableIndex` gives -1 for an
+    // unlisted topic, and either way the row has no bucket
+    Seq(2, -1).foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        LwwSink.upsertTables(batch(0, 1, bad), 1L, root, topics, "book", pk))
+      assert(e.getMessage.contains("outside its 2 topics"), e.getMessage)
+      assert(LwwSink.manifest(t0).get === before, "t0 must not publish")
+      assert(LwwSink.manifest(t1).isEmpty, "t1 must not publish")
+      assert(!Fs.walk(Paths.get(root)).exists(_.getFileName.toString.startsWith("_tmp_b")),
+        "no staging dir may be left")
+    }
+    assert(tableRows(root, "t0") === Seq(Seq("EURUSD", 100L, 1.08, 10)))
   }
 
   test("crash between two tables' publishes: the restarted book query heals both") {
