@@ -18,8 +18,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.injections.foreach(ext.injectFunction)
     // rewrite the portable HOF dot-product fold to the native kernel
     ext.injectOptimizerRule(_ => graft.plans.DotRewriteRule)
-    // a filter on a sink table's bucket key reads only its buckets
-    ext.injectOptimizerRule(_ => graft.plans.LwwBucketPrune)
     // length-guard + banded-DP rewrite for levenshtein(a,b) <= k
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinGuardRule)
     // plan the as-of whole-operator node (AsofJoin.merge) + prune
@@ -86,8 +84,6 @@ object GraftExtensions {
     val em = spark.sessionState.experimentalMethods
     if (!em.extraOptimizations.contains(graft.plans.DotRewriteRule))
       em.extraOptimizations = em.extraOptimizations :+ graft.plans.DotRewriteRule
-    if (!em.extraOptimizations.contains(graft.plans.LwwBucketPrune))
-      em.extraOptimizations = em.extraOptimizations :+ graft.plans.LwwBucketPrune
     if (!em.extraOptimizations.contains(graft.plans.LevenshteinGuardRule))
       em.extraOptimizations =
         em.extraOptimizations :+ graft.plans.LevenshteinGuardRule

@@ -6,8 +6,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
@@ -16,7 +17,6 @@ import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 import graft.ops.LwwDedup
-import graft.plans.LwwBucketPrune
 import graft.util.Fs
 
 /** Keyed-upsert sink emulating the reference's Cassandra tables: INSERT
@@ -49,7 +49,9 @@ import graft.util.Fs
   * Manifest: a table is what its `_manifest` file says — the bucket key,
   * the bucket count, the stored schema, a version counter and, per
   * bucket, the directory of its current generation, `kb=N/g<version>`.
-  * Bucket files are never moved or rewritten once a manifest names them.
+  * Each file there carries its bucket id in its name, as Spark's own
+  * bucketed writes name theirs. Bucket files are never moved or
+  * rewritten once a manifest names them.
   * An upsert stages its merged buckets, moves each into a new generation
   * directory of its table, publishes each table's next manifest by one
   * atomic rename, then deletes every generation that neither the new
@@ -61,11 +63,11 @@ import graft.util.Fs
   *
   * Reads: [[read]] resolves the manifest once and scans exactly the
   * directories it names, under the stored schema (no schema-inference
-  * job), and never writes to the filesystem. It tags its relation with
-  * the bucket key and count so [[graft.plans.LwwBucketPrune]] turns
-  * `symbol = 'X'` into a `kb` partition filter: a per-symbol read lists
-  * one bucket, the reference's single-partition read (main.rs:87-88,
-  * 145-146).
+  * job), and never writes to the filesystem. Its relation is a Spark
+  * bucketed relation — `kb` is Spark's own bucket id of the key — so
+  * Spark prunes `symbol = 'X'` to one bucket's file in every session: a
+  * per-symbol read opens one file, the reference's single-partition
+  * read (main.rs:87-88, 145-146).
   *
   * Retention — one manifest of lag: a read resolved before an upsert
   * stays readable through that upsert and its cleanup. A read that
@@ -171,21 +173,32 @@ object LwwSink {
     * directory of its current generation, relative to the table. */
   private[graft] case class Manifest(version: Long, key: String, nb: Int,
       schema: StructType, buckets: Map[Int, String]) {
-    def json: String = compact(render(("version" -> version) ~ ("key" -> key) ~
-      ("nbuckets" -> nb) ~ ("schema" -> parse(schema.json)) ~
+    def json: String = compact(render(("format" -> Format) ~ ("version" -> version) ~
+      ("key" -> key) ~ ("nbuckets" -> nb) ~ ("schema" -> parse(schema.json)) ~
       ("buckets" -> buckets.map { case (n, dir) => n.toString -> dir })))
   }
+
+  /** The manifest layout this code writes and reads. Format 2 names every
+    * bucket file with its bucket id; a manifest without a `format` field
+    * is format 1, whose files Spark cannot assign to buckets. */
+  private val Format = 2
 
   private def manifestFile(table: String) = Paths.get(s"$table/_manifest")
 
   /** The table's published manifest, or None for a table no upsert has
     * created yet. A table a layout before the manifest wrote fails
-    * loudly: its files cannot be told apart from crash leftovers. */
+    * loudly: its files cannot be told apart from crash leftovers. So does
+    * a manifest of another format. */
   private[graft] def manifest(table: String): Option[Manifest] = {
     val f = manifestFile(table)
     if (Files.exists(f)) {
       implicit val formats: Formats = DefaultFormats
       val j = parse(new String(Files.readAllBytes(f), UTF_8))
+      val format = (j \ "format").extractOpt[Int].getOrElse(1)
+      if (format != Format)
+        throw new IllegalStateException(
+          s"table $table has a format $format manifest, and this LwwSink reads format " +
+            s"$Format only. Rebuild it by replaying its stream into a fresh sink root.")
       Some(Manifest((j \ "version").extract[Long], (j \ "key").extract[String],
         (j \ "nbuckets").extract[Int],
         DataType.fromJson(compact(render(j \ "schema"))).asInstanceOf[StructType],
@@ -373,10 +386,12 @@ object LwwSink {
         val next = t.base.copy(version = v,
           buckets = t.base.buckets ++ ns.map(n => n -> s"kb=$n/g$v"))
         ns.foreach { n =>
+          val staged = s"$tmp/$TableCol=$i/kb=$n"
+          nameBucketFiles(spark, staged, n)
           val dst = Paths.get(s"${t.path}/${next.buckets(n)}")
           Fs.deleteTree(dst) // left by a crashed attempt at this version
           Files.createDirectories(dst.getParent)
-          Files.move(Paths.get(s"$tmp/$TableCol=$i/kb=$n"), dst, StandardCopyOption.ATOMIC_MOVE)
+          Files.move(Paths.get(staged), dst, StandardCopyOption.ATOMIC_MOVE)
           afterBucketMove(n)
         }
         (t, next)
@@ -390,6 +405,21 @@ object LwwSink {
         sweep(t.path, (t.base.buckets.values ++ next.buckets.values).toSet)
       }
     } finally tagged.unpersist()
+  }
+
+  /** Give each data file of a staged bucket dir its bucket id, where
+    * Spark's bucketed read looks for it: `part-…_000NN.c000.snappy.parquet`.
+    * The Hadoop rename carries the file's checksum along. */
+  private def nameBucketFiles(spark: SparkSession, dir: String, n: Int): Unit = {
+    val path = new HPath(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(path).map(_.getPath.getName)
+      .filterNot(f => f.startsWith(".") || f.startsWith("_")).foreach { f =>
+        val (stem, ext) = f.span(_ != '.')
+        val named = stem + BucketingUtils.bucketIdToString(n) + ext
+        if (!fs.rename(new HPath(path, f), new HPath(path, named)))
+          throw new IllegalStateException(s"could not rename $dir/$f to $named")
+      }
   }
 
   /** Test-only fault injection: runs after each bucket moves into its new
@@ -441,9 +471,11 @@ object LwwSink {
     * from its path. Built on the file index directly, as
     * `spark.read.parquet` would build it, but without its per-call
     * existence check of every path, which starts a thread pool and costs
-    * a read more than listing the files does. */
+    * a read more than listing the files does. A `bucketSpec` makes it a
+    * bucketed relation: Spark prunes files by the bucket id in their
+    * names. */
   private def scan(spark: SparkSession, schema: StructType, partitions: Seq[String],
-      dirs: Seq[(Seq[Int], String)]): DataFrame = {
+      dirs: Seq[(Seq[Int], String)], bucketSpec: Option[BucketSpec] = None): DataFrame = {
     val partitionSchema = StructType(partitions.map(StructField(_, IntegerType)))
     val spec = PartitionSpec(partitionSchema, dirs.map { case (values, dir) =>
       val p = new HPath(dir)
@@ -453,26 +485,20 @@ object LwwSink {
     val index = new InMemoryFileIndex(spark, spec.partitions.map(_.path), Map.empty, None,
       userSpecifiedPartitionSpec = Some(spec))
     spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
-      schema.toNullable, None, new ParquetFileFormat, Map.empty)(spark))
+      schema.toNullable, bucketSpec, new ParquetFileFormat, Map.empty)(spark))
   }
 
   /** The table's rows, as of the manifest this call resolves. Plans
-    * without a schema-inference job, and tags its relation with the
-    * table's bucket key and count so [[graft.plans.LwwBucketPrune]] turns
-    * a filter on the key into a `kb` partition filter: a per-symbol read
-    * lists one bucket. */
+    * without a schema-inference job. The relation is bucketed on the
+    * table's key, so a filter on the key (`=`, `IN`, `<=>`, AND/OR of
+    * them) opens only the files of the buckets its values hash into. */
   def read(spark: SparkSession, rootDir: String, topic: String,
       kind: String): DataFrame = {
     checkLegacyLayout(rootDir, topic, kind)
     val table = tablePath(rootDir, topic, kind)
     val m = manifest(table)
       .getOrElse(throw new IllegalStateException(s"no LwwSink table at $table"))
-    val df = scan(spark, m.schema, Seq("kb"),
-      m.buckets.toSeq.sorted.map { case (n, dir) => Seq(n) -> s"$table/$dir" })
-    df.queryExecution.analyzed.foreach {
-      case r: LogicalRelation => r.setTagValue(LwwBucketPrune.Layout, (m.key, m.nb))
-      case _ =>
-    }
-    df.drop("_batch_id").drop("kb")
+    scan(spark, m.schema, Nil, m.buckets.toSeq.sorted.map { case (_, dir) => Nil -> s"$table/$dir" },
+      Some(BucketSpec(m.nb, Seq(m.key), Nil))).drop("_batch_id")
   }
 }

@@ -1,17 +1,17 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, FilePartition}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ops.LwwDedup
-import graft.plans.LwwBucketPrune
 import graft.sink.LwwSink
 import graft.streaming.Pipelines
 import graft.util.Fs
@@ -299,59 +299,58 @@ class LwwSinkSuite extends SparkSpec {
     table
   }
 
-  private def scanOf(df: DataFrame): FileSourceScanExec =
-    df.queryExecution.sparkPlan.collectFirst { case s: FileSourceScanExec => s }.get
+  /** The files a read opens: those of its scan's input partitions. (The
+    * scan's `numFiles` metric counts files before bucket pruning.) */
+  private def filesOpened(df: DataFrame): Int =
+    df.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
+      .inputRDD.partitions.map { case p: FilePartition => p.files.length }.sum
 
-  private def kbFilters(df: DataFrame) =
-    scanOf(df).partitionFilters.filter(_.references.exists(_.name == "kb"))
-
-  private def bucket(symbol: String, nb: Int) =
-    LwwBucketPrune.bucketOf(UTF8String.fromString(symbol), StringType, nb)
+  /** Each symbol's bucket among `nb`, as Spark computes it. */
+  private def bucketsOf(nb: Int): Map[String, Int] =
+    symbols.toDF("s").select(col("s"), pmod(hash(col("s")), lit(nb))).collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toMap
 
   test("a pruned read returns the same rows as a full scan, for every symbol") {
-    GraftExtensions.register(spark)
+    // a session with no graft rule in it: the pruning is Spark's own
+    val fresh = spark.newSession()
+    assert(fresh.sessionState.experimentalMethods.extraOptimizations.isEmpty)
     val root = Files.createTempDirectory("lww_prune").toString
-    // created at a count other than NumBuckets: the rule must use the table's
-    val table = fill(root, Some(7))
-    val all = LwwSink.read(spark, root, "feed", "tick").collect().toSeq
+    // created at a count other than NumBuckets: the read must use the table's
+    fill(root, Some(7))
+    val all = LwwSink.read(fresh, root, "feed", "tick").collect().toSeq
     def rowsOf(rs: Seq[org.apache.spark.sql.Row]) = rs.map(_.toSeq).sortBy(_.toString)
     symbols.foreach { s =>
-      val pruned = LwwSink.read(spark, root, "feed", "tick").filter(col("symbol") === s)
-      assert(kbFilters(pruned).map(_.sql) === Seq(s"(kb = ${bucket(s, 7)})"), s"symbol '$s'")
+      val pruned = LwwSink.read(fresh, root, "feed", "tick").filter(col("symbol") === s)
+      assert(filesOpened(pruned) === 1, s"symbol '$s'")
       val want = rowsOf(all.filter(_.getString(0) == s))
       assert(want.size === 3, s"fixture rows for '$s'")
       assert(rowsOf(pruned.collect().toSeq) === want, s"symbol '$s'")
     }
-    val raw = spark.read.parquet(table)
-    assert(kbFilters(raw.filter(col("symbol") === "SYM1")).isEmpty,
-      "a raw parquet read of the table is not a sink read and is not pruned")
   }
 
-  test("= and IN add a kb partition filter; = reads one file") {
-    GraftExtensions.register(spark)
+  test("= and IN on the key open only their buckets' files; other filters open all") {
     val root = Files.createTempDirectory("lww_plan").toString
     fill(root, None)
     def sink = LwwSink.read(spark, root, "feed", "tick")
-    val nb = LwwSink.NumBuckets
+    val bucket = bucketsOf(LwwSink.NumBuckets)
+    val all = filesOpened(sink)
+    assert(all === LwwSink.NumBuckets, "one file per bucket")
     val eq = sink.filter(col("symbol") === "SYM7" && col("time") > 150L)
-    val n = bucket("SYM7", nb)
-    assert(scanOf(eq).toString.matches(
-      s"(?s).*PartitionFilters: \\[\\(kb#\\d+ = $n\\)\\].*"), scanOf(eq).toString)
+    assert(filesOpened(eq) === 1)
     assert(eq.collect().length === 2)
-    val scan = eq.queryExecution.executedPlan.collectFirst {
-      case s: FileSourceScanExec => s }.get
-    assert(scan.metrics("numFiles").value === 1, "one bucket, one file")
-    // two symbols in different buckets: one kb value each
-    val other = symbols.find(s => bucket(s, nb) != bucket("SYM1", nb)).get
+    assert(filesOpened(sink.filter(col("symbol") <=> "SYM7")) === 1)
+    // two symbols in different buckets: one file each
+    val other = symbols.find(s => bucket(s) != bucket("SYM1")).get
     val in = sink.filter(col("symbol").isin("SYM1", other))
-    val inFilters = kbFilters(in).map(_.sql)
-    assert(inFilters.size === 1 && inFilters.head.startsWith("(kb IN ("), inFilters)
+    assert(filesOpened(in) === 2)
     assert(in.collect().length === 6)
+    assert(filesOpened(sink.filter(col("symbol") === "SYM1" || col("symbol") === other)) === 2)
     // past 10 values the optimizer turns IN into InSet
-    val many = sink.filter(col("symbol").isin((0 until 12).map(i => s"SYM$i"): _*))
-    assert(kbFilters(many).size === 1, many.queryExecution.optimizedPlan)
+    val twelve = (0 until 12).map(i => s"SYM$i")
+    val many = sink.filter(col("symbol").isin(twelve: _*))
+    assert(filesOpened(many) === twelve.map(bucket).distinct.size, many.queryExecution.optimizedPlan)
     assert(many.collect().length === 36)
-    // anything but key = literal / key IN literals leaves the plan alone
+    // anything but key = literal / key IN literals opens every file
     Seq(
       col("symbol") > "SYM5",
       col("symbol").like("SYM1%"),
@@ -359,28 +358,64 @@ class LwwSinkSuite extends SparkSpec {
       col("time") === 100L,
       col("symbol") === "SYM7" || col("time") === 100L
     ).foreach { p =>
-      assert(kbFilters(sink.filter(p)).isEmpty, s"no kb filter for $p")
+      assert(filesOpened(sink.filter(p)) === all, s"every file for $p")
     }
   }
 
   test("a sink read plans with no job; a filtered collect runs exactly one") {
-    GraftExtensions.register(spark)
     val root = Files.createTempDirectory("lww_jobs").toString
     fill(root, None)
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
     }
-    Bridge.drainListenerBus(spark)
+    /** What `body` returns, with the jobs and tasks it runs. */
+    def counted[T](body: => T): (T, (Int, Int)) = {
+      Bridge.drainListenerBus(spark)
+      jobs.set(0); tasks.set(0)
+      val r = body
+      Bridge.drainListenerBus(spark)
+      (r, (jobs.get, tasks.get))
+    }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val df = LwwSink.read(spark, root, "feed", "tick")
-      Bridge.drainListenerBus(spark)
-      assert(jobs.get === 0, "LwwSink.read must not infer a schema")
-      assert(df.filter(col("symbol") === "SYM9").collect().length === 3)
-      Bridge.drainListenerBus(spark)
-      assert(jobs.get === 1)
+      val (df, planned) = counted(LwwSink.read(spark, root, "feed", "tick"))
+      assert(planned === ((0, 0)), "LwwSink.read must not infer a schema")
+      // one job of one task: a point read scans its bucket's file, not one
+      // task per bucket as a bucketed scan would
+      val (point, pointRun) = counted(df.filter(col("symbol") === "SYM9").collect())
+      assert(point.length === 3)
+      assert(pointRun === ((1, 1)))
+      // the range read of perfbench `ingest`
+      val (range, rangeRun) = counted(
+        df.filter(col("symbol") === "SYM9" && col("time").between(150L, 350L))
+          .orderBy(col("time").desc, col("price")).limit(50).collect())
+      assert(range.length === 2)
+      assert(rangeRun === ((1, 1)))
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a double key prunes without splitting values SQL equality joins") {
+    val root = Files.createTempDirectory("lww_double").toString
+    val nan = java.lang.Double.longBitsToDouble(0x7ff8000000000000L)
+    val otherNan = java.lang.Double.longBitsToDouble(0xfff8000000000123L)
+    val keys = Seq(0.0, -0.0, nan, otherNan, 1.5)
+    LwwSink.upsertBatch(keys.zipWithIndex.map { case (k, i) => (k, i.toLong, i) }.toDF("k", "t", "v"),
+      0L, root, "feed", "dbl", Seq("k", "t"))
+    def table = LwwSink.read(spark, root, "feed", "dbl")
+    val all = table.collect().toSeq
+    assert(all.size === keys.size)
+    // SQL equality: 0.0 = -0.0, and every NaN equals every NaN
+    def sqlEq(a: Double, b: Double) = a == b || (a.isNaN && b.isNaN)
+    // compared as text: NaN == NaN is false, and -0.0 == 0.0 is true
+    def rowsOf(rs: Seq[org.apache.spark.sql.Row]) = rs.map(_.toString).sorted
+    keys.foreach { k =>
+      val want = rowsOf(all.filter(r => sqlEq(r.getDouble(0), k)))
+      assert(want.nonEmpty)
+      assert(rowsOf(table.filter(col("k") === k).collect().toSeq) === want, s"k = $k")
+    }
   }
 
   test("an upsert keyed on a different bucket key fails, naming both keys") {
@@ -448,6 +483,34 @@ class LwwSinkSuite extends SparkSpec {
     }
   }
 
+  test("a manifest older than bucket-named files fails loudly on read and on upsert") {
+    val root = Files.createTempDirectory("lww_format").toString
+    LwwSink.upsertBatch(rows(10), 0L, root, "feed", "tick", pk)
+    val table = Paths.get(LwwSink.tablePath(root, "feed", "tick"))
+    // the layout before the format field: a bucket file named with no bucket id
+    val dir = table.resolve(LwwSink.manifest(table.toString).get.buckets.values.head)
+    Fs.list(dir).map(_.getFileName.toString).filter(_.endsWith(".parquet")).foreach { f =>
+      Files.move(dir.resolve(f), dir.resolve(f.replaceFirst("_\\d{5}\\.", ".")))
+    }
+    assert(Fs.list(dir).map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+      .forall(BucketingUtils.getBucketId(_).isEmpty))
+    val manifest = table.resolve("_manifest")
+    val json = new String(Files.readAllBytes(manifest), UTF_8)
+    assert(json.contains("\"format\":2,"))
+    Files.write(manifest, json.replace("\"format\":2,", "").getBytes(UTF_8))
+    def state = Fs.walk(table).map(p => p.toString -> Files.getLastModifiedTime(p)).toSet
+    val before = state
+    Seq[() => Unit](
+      () => LwwSink.read(spark, root, "feed", "tick"),
+      () => LwwSink.upsertBatch(rows(20), 1L, root, "feed", "tick", pk)
+    ).foreach { call =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(table.toString) && e.getMessage.contains("replaying") &&
+        e.getMessage.contains("fresh sink root"), e.getMessage)
+    }
+    assert(state === before, "nothing is written or published")
+  }
+
   /** Upsert `df`, whose `topic` column names each row's table, the way
     * the book branch does: one merge and one write for every topic. */
   private def upsertTopics(df: DataFrame, id: Long, root: String): Unit = {
@@ -494,6 +557,12 @@ class LwwSinkSuite extends SparkSpec {
       val table = LwwSink.tablePath(merged, tp, "book")
       val files = generationFiles(table)
       assert(files.values.forall(_ == 1), s"topic '$tp': $files")
+      // each file carries its bucket's id, as Spark's bucketed read needs
+      files.keys.foreach { dir =>
+        val n = dir.stripPrefix("kb=").takeWhile(_ != '/').toInt
+        Fs.list(Paths.get(s"$table/$dir")).map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+          .foreach(f => assert(BucketingUtils.getBucketId(f) === Some(n), s"$dir/$f"))
+      }
       files.keys.foreach { dir =>
         val keys = spark.read.parquet(s"$table/$dir").collect()
           .map(r => (r.getAs[String]("symbol"), r.getAs[Long]("time"), r.getAs[Double]("price"))).toSeq
